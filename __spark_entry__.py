@@ -5083,11 +5083,14 @@ def q_incremental_minhash_documents(spark: SparkSession, sf_dir: str) -> DataFra
         portable=True,
         batch_signatures=batch_sig,
         history_signatures=hist_sig,
-        # eager=False keeps the gate's dataflow lazy (plan-visible) and
-        # lets plan-identical caches be reused across bench rounds;
-        # eager=True (the production ingest default) releases every
-        # cache per call — correct when every batch is new data, but it
-        # doubles this REPLAYED-batch query's cost for no information.
+        # eager=False keeps the gate's dataflow lazy (plan-visible): the
+        # caller's one action runs the whole query, and its internal
+        # caches live until the bench releases the session's caches
+        # after each rep (release_scoped_caches + clearCache), so no rep
+        # reuses another's. eager=True (the production ingest default)
+        # would run extra count() jobs inside this call to materialize
+        # and release per batch — work a query returning one lazy frame
+        # does not need.
         eager=False,
     )
     delta_counts = delta.groupBy(F.col("keeper_id").alias("doc_id")).agg(

@@ -28,16 +28,20 @@ checkpoint RDDs, streaming state) are out of scope and unaffected.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 _SCOPED: list[DataFrame] = []
 
 
-def scoped_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` with registered ownership: the returned frame is
-    cached exactly as before, and additionally recorded so a later
+def scoped_persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    """``df.persist(level)`` with registered ownership: the returned frame
+    is cached exactly as before, and additionally recorded so a later
     :func:`release_scoped_caches` unpersists it. Always returns ``df``
     (persist mutates the plan's cache entry, not the object)."""
-    df.persist()
+    if level is None:
+        df.persist()
+    else:
+        df.persist(level)
     _SCOPED.append(df)
     return df
 

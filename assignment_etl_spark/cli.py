@@ -44,6 +44,7 @@ def _jdbc_props_from_env() -> dict[str, str]:
 
 
 def cmd_run_etl(args: argparse.Namespace) -> int:
+    from assignment_etl_spark.caching import release_scoped_caches
     from assignment_etl_spark.io.jdbc import write_jdbc
     from assignment_etl_spark.pipelines.runner import run_etl, write_parquet_store
     from assignment_etl_spark.session import get_spark
@@ -57,6 +58,8 @@ def cmd_run_etl(args: argparse.Namespace) -> int:
         for name in ("patients", "encounters", "diagnoses", "logs"):
             write_jdbc(getattr(res, name), url, f"{args.table_prefix}{name}",
                        properties=props)
+    # the process may go on to serve the store; keep none of the run's caches
+    release_scoped_caches()
     print(f"etl complete: store={args.store}" + (f" jdbc={url}" if url else ""))
     return 0
 

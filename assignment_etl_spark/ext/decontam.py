@@ -51,7 +51,13 @@ def _gram_sets(
     corpus gram before the selective broadcast join downstream (r13,
     guide §2.4/§3.2 — that dedup exchange carried the whole corpus's
     gram stream to feed a join that keeps a sliver of it; measured
-    sf0.1 3.52s -> 3.25s, sf10 21.5s -> 17.8s, 13 -> 10 stages)."""
+    sf0.1 3.52s -> 3.25s, sf10 21.5s -> 17.8s, 13 -> 10 stages).
+
+    Precondition: ``id_col`` is unique in ``df`` — one row per document.
+    The distinct is per ROW, so two rows sharing an id each emit their
+    grams and (id, gram) pairs repeat, which inflates every per-id gram
+    count downstream (``contamination_hits``' n_hits). Deduplicate ids
+    upstream when a corpus may carry repeated ids."""
     return df.select(
         F.col(id_col),
         F.explode(

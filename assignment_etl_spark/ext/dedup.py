@@ -379,6 +379,28 @@ def _sig_frame(
     return scoped_persist(sig)
 
 
+def _checked_signatures(sig: DataFrame, num_hashes: int, arg: str) -> DataFrame:
+    """A caller-passed ("_id", "_sig") frame, failing loudly when a row's
+    signature length is not ``num_hashes``: signatures made with other
+    minhash parameters would band and estimate Jaccard silently wrong.
+    The check is a per-row size test in the plan, so it raises when the
+    result is computed and costs no extra job."""
+    size = F.size("_sig")
+    return sig.withColumn(
+        "_sig",
+        F.when(size == num_hashes, F.col("_sig")).otherwise(
+            F.raise_error(
+                F.format_string(
+                    f"{arg}: signature of length %d for _id %s, expected "
+                    f"num_hashes={num_hashes}",
+                    size,
+                    F.col("_id").cast("string"),
+                )
+            )
+        ),
+    )
+
+
 def _with_bands(
     sig: DataFrame, *, num_hashes: int, bands: int, portable: bool
 ) -> DataFrame:
@@ -670,7 +692,7 @@ def build_band_store(
     deterministic function of the text, so the resulting index is
     byte-identical either way."""
     sig = (
-        signatures
+        _checked_signatures(signatures, num_hashes, "signatures")
         if signatures is not None
         else _sig_frame(
             corpus,
@@ -872,7 +894,7 @@ def incremental_minhash_dedup(
     caller-owned: ``eager`` does not unpersist them.
     """
     sig = (
-        batch_signatures
+        _checked_signatures(batch_signatures, num_hashes, "batch_signatures")
         if batch_signatures is not None
         else _sig_frame(
             batch,
@@ -996,7 +1018,9 @@ def incremental_minhash_dedup(
                 # the store build already signed every history text —
                 # fetch the verified keepers' signatures by id instead
                 # of re-running the minhash pass over their texts
-                keeper_sig = history_signatures.join(
+                keeper_sig = _checked_signatures(
+                    history_signatures, num_hashes, "history_signatures"
+                ).join(
                     ver.select(F.col("keeper_id").alias("_kid")).distinct(),
                     on=F.col("_id") == F.col("_kid"),
                     how="left_semi",

@@ -22,6 +22,9 @@ contract protects them across Spark versions):
   dropping the origin plan's preserved (product-inflatable) statistics
   (`io/store.stats_severed_local_checkpoint`; the round-11
   BigInteger-planning pathology).
+- ``physical_plan_nodes / cached_plan`` — physical-plan walks that see
+  through AdaptiveSparkPlan and, on request, into each cache once (the
+  pipelines' plan-shape test, tests/test_pipeline_plans.py).
 - ``cache_manager_is_empty / persistent_rdd_ids`` — session-level
   cache/persistence introspection for the scale sweeps' measurement
   discipline (tools/scale_curves3) and io/store's fallback-only
@@ -95,6 +98,38 @@ def plan_children(jnode) -> list:
     """Children of a jvm plan node as a Python list."""
     kids = jnode.children()
     return [kids.apply(i) for i in range(kids.length())]
+
+
+def cached_plan(jscan):
+    """The physical plan an ``InMemoryTableScanExec`` reads the cache of."""
+    return jscan.relation().cacheBuilder().cachedPlan()
+
+
+def physical_plan_nodes(jplan, seen_caches: set[int] | None = None) -> list:
+    """Every node of a physical plan, looking through AdaptiveSparkPlan
+    wrappers (their initial plan). An InMemoryTableScan is a leaf unless
+    ``seen_caches`` is given: then each cache's own plan is walked the
+    first time any scan of it is met (its identity goes into the set), so
+    the nodes of several plans that share caches are listed once."""
+    from pyspark import SparkContext
+
+    system = SparkContext._jvm.java.lang.System
+    out, stack = [], [jplan]
+    while stack:
+        node = stack.pop()
+        cls = plan_node_class(node)
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.inputPlan())
+            continue
+        out.append(node)
+        if cls != "InMemoryTableScanExec":
+            stack.extend(plan_children(node))
+        elif seen_caches is not None:
+            key = int(system.identityHashCode(node.relation().cacheBuilder()))
+            if key not in seen_caches:
+                seen_caches.add(key)
+                stack.append(cached_plan(node))
+    return out
 
 
 def checkpoint_rdd(ck: DataFrame):
@@ -223,6 +258,22 @@ def probe(spark) -> dict[str, str | None]:
             "unpersist not observed"
         )
 
+    def p_physical_plan_nodes():
+        cached = df.select("*").persist()
+        try:
+            scans = [
+                n
+                for n in physical_plan_nodes(query_execution(cached).executedPlan())
+                if plan_node_class(n) == "InMemoryTableScanExec"
+            ]
+            assert len(scans) == 1, "persisted frame not read from its cache"
+            inner = physical_plan_nodes(cached_plan(scans[0]))
+            assert "RangeExec" in {plan_node_class(n) for n in inner}
+            walked = physical_plan_nodes(query_execution(cached).executedPlan(), set())
+            assert "RangeExec" in {plan_node_class(n) for n in walked}
+        finally:
+            cached.unpersist(True)
+
     def p_persistent_rdd_ids():
         ids = persistent_rdd_ids(spark)
         # the probe's own eager localCheckpoint RDD must be visible
@@ -237,6 +288,7 @@ def probe(spark) -> dict[str, str | None]:
     run("severed_from_checkpoint", p_severed_from_checkpoint)
     run("cache_manager_is_empty", p_cache_manager)
     run("persistent_rdd_ids", p_persistent_rdd_ids)
+    run("physical_plan_nodes", p_physical_plan_nodes)
 
     if jrdd.get("rdd") is not None:
         try:

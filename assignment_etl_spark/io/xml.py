@@ -62,15 +62,19 @@ def read_xml_records(
 
     from pyspark.storagelevel import StorageLevel  # noqa: PLC0415
 
+    from assignment_etl_spark.caching import scoped_persist  # noqa: PLC0415
+
     ns = f"{{{namespace}}}" if namespace else ""
     schema = _shred_schema(fields)
     # Persist the wholetext scan BEFORE deriving file ordinals: a wholetext
     # source must read each file's bytes to produce its row even when the
     # value column is pruned, so an unpersisted second consumer would
     # re-read the whole corpus (2× input I/O). MEMORY_AND_DISK spills
-    # large corpora instead of re-fetching them.
-    files = with_row_id(spark.read.text(path, wholetext=True)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # large corpora instead of re-fetching them. Released, with the
+    # consumer's other caches, by caching.release_scoped_caches.
+    files = scoped_persist(
+        with_row_id(spark.read.text(path, wholetext=True)),
+        StorageLevel.MEMORY_AND_DISK,
     )
     # Compact 0-based file ordinal: monotonically_increasing_id already uses
     # the high bits (partition_index << 33), so shifting IT would overflow

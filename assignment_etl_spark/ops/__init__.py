@@ -1,7 +1,10 @@
 """Cleaning-operator library.
 
-Contract (SURVEY §2.9): every cleaning operator is a pure function
-``DataFrame -> (clean_df, log_df)``. Both outputs derive from one shared
-intermediate so the scan is not recomputed; the caller unions all log_dfs
-into the ``logs`` table via :func:`assignment_etl_spark.ops.quality.union_logs`.
+Contract (SURVEY §2.9): every logged rule is a condition plus the log row
+it writes, as one Column (:func:`assignment_etl_spark.ops.quality.issue`).
+Pipelines tag each source row with every rule that fired and derive the
+clean table and the log stream from that one tagged frame; the single-rule
+operators keep the pure ``DataFrame -> (clean_df, log_df)`` form over the
+same Columns. Log streams union into the ``logs`` table via
+:func:`assignment_etl_spark.ops.quality.union_logs`.
 """

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.ops.quality import log_frame
+from assignment_etl_spark.ops.quality import issue, issue_logs
 
 ISO5218 = {"M": 1, "F": 2, "U": 0, "O": 9}
 
@@ -40,26 +40,50 @@ def sex_log_reason(col: Column) -> Column:
     )
 
 
+def sex_issue(column: str = "sex", filename: str = "patients.csv") -> Column:
+    """F4's log entry: every row that maps to 0 (see sex_log_reason)."""
+    reason = sex_log_reason(F.col(column))
+    return issue(
+        reason.isNotNull(),
+        patient_id=F.col("patient_id"),
+        filename=filename,
+        original_value=F.col(column),
+        # reference quirk kept: missing/invalid branches write mapped_code,
+        # the U branch writes cleaned_value (etl.py:333-363)
+        mapped_code=F.when(reason.isin("missing_value", "invalid_code"), "0"),
+        cleaned_value=F.when(reason == "unknown_or_missing", "0"),
+        reason=reason,
+    )
+
+
 def map_sex(
     df: DataFrame, column: str = "sex", filename: str = "patients.csv"
 ) -> tuple[DataFrame, DataFrame]:
     clean = df.withColumn("sex_iso", sex_to_iso5218(F.col(column)))
-    reason = sex_log_reason(F.col(column))
-    flagged = df.filter(reason.isNotNull()).withColumn("_reason", reason)
-    logs = log_frame(
-        flagged,
-        patient_id=F.col("patient_id"),
-        filename=F.lit(filename),
+    return clean, issue_logs(df, sex_issue(column, filename))
+
+
+def enum_invalid(column: str, valid: list[str]) -> Column:
+    """P5's condition. NULL values are 'not in' the valid set in pandas, so
+    they count as invalid; Spark ~isin(NULL) is NULL, hence the guard."""
+    col = F.col(column)
+    return col.isNull() | ~col.isin(*valid)
+
+
+def enum_issue(
+    invalid: Column,
+    column: str,
+    filename_col: str = "source_file",
+    id_col: str = "patient_id",
+) -> Column:
+    return issue(
+        invalid,
+        patient_id=F.col(id_col),
+        filename=F.col(filename_col),
+        column_name=column,
         original_value=F.col(column),
-        # reference quirk kept: missing/invalid branches write mapped_code,
-        # the U branch writes cleaned_value (etl.py:333-363)
-        mapped_code=F.when(
-            F.col("_reason").isin("missing_value", "invalid_code"), F.lit("0")
-        ),
-        cleaned_value=F.when(F.col("_reason") == "unknown_or_missing", F.lit("0")),
-        reason=F.col("_reason"),
+        reason="invalid_" + column,
     )
-    return clean, logs
 
 
 def validate_enum(
@@ -74,20 +98,12 @@ def validate_enum(
 
     Reference: etl.py:577-588 (valid after lowercasing; fill is upper-case
     "UNKNOWN", lowercased later by the final normalize pass — order kept).
-    NULL column values are 'not in' the valid set in pandas, so they are
-    filled + logged too; Spark ~isin(NULL) is NULL, hence the explicit guard.
     """
-    col = F.col(column)
-    invalid = col.isNull() | ~col.isin(*valid)
-    logs = log_frame(
-        df.filter(invalid),
-        patient_id=F.col(id_col),
-        filename=F.col(filename_col),
-        column_name=F.lit(column),
-        original_value=col,
-        reason=F.lit("invalid_" + column),
+    invalid = enum_invalid(column, valid)
+    logs = issue_logs(df, enum_issue(invalid, column, filename_col, id_col))
+    clean = df.withColumn(
+        column, F.when(invalid, F.lit(fill)).otherwise(F.col(column))
     )
-    clean = df.withColumn(column, F.when(invalid, F.lit(fill)).otherwise(col))
     return clean, logs
 
 

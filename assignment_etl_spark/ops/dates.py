@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.ops.quality import log_frame
+from assignment_etl_spark.ops.quality import issue, issue_logs
 
 # Date-only lattice for dob-style columns. Order = priority.
 DATE_FORMATS = [
@@ -75,33 +75,83 @@ def parse_timestamp_multi(
     return F.coalesce(*[F.to_timestamp(s, f) for f in formats])
 
 
+def dob_issue(
+    parsed: Column, column: str = "dob", filename: str = "patients.csv"
+) -> Column:
+    """F5's log entry, given the parsed value of ``column``.
+
+    Blank or whitespace-only strings are non-null, so they log
+    ``unparseable_date`` not ``missing_value`` — matching the verified
+    reference behavior for patient P-0004 (SURVEY §2.5 F5).
+    """
+    raw = F.col(column)
+    reason = F.when(raw.isNull(), F.lit("missing_value")).when(
+        parsed.isNull(), F.lit("unparseable_date")
+    )
+    return issue(
+        reason.isNotNull(),
+        patient_id=F.col("patient_id"),
+        filename=filename,
+        column_name=column,
+        original_value=raw,
+        reason=reason,
+    )
+
+
 def parse_dob(
     df: DataFrame,
     column: str = "dob",
     filename: str = "patients.csv",
     formats: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """F5: multi-format date parse with missing/unparseable logging.
-
-    Blank or whitespace-only strings are non-null, so they log
-    ``unparseable_date`` not ``missing_value`` — matching the verified
-    reference behavior for patient P-0004 (SURVEY §2.5 F5).
-    """
+    """F5: multi-format date parse with missing/unparseable logging."""
     parsed = parse_timestamp_multi(F.col(column), formats or DATE_FORMATS)
     clean = df.withColumn(column + "_parsed", parsed)
-    reason = F.when(F.col(column).isNull(), F.lit("missing_value")).when(
-        parsed.isNull(), F.lit("unparseable_date")
+    return clean, issue_logs(df, dob_issue(parsed, column, filename))
+
+
+def with_parsed_datetimes(
+    df: DataFrame,
+    columns: list[str],
+    filename: str = "encounters.csv",
+    id_col: str = "patient_id",
+    formats: list[str] | None = None,
+) -> DataFrame:
+    """F6: UTC-normalizing timestamp parse over several columns, each
+    column's log entry staged beside it as ``_<column>_issue``.
+
+    Matches parse_datetime_safe (etl.py:512-536): NULL/blank input → NULL
+    silently; non-blank unparseable → NULL + ``invalid_datetime_format``.
+    The normalized string and the parse each get their own projection:
+    inlined, the two regexp_replaces would re-run inside every
+    to_timestamp attempt, and the 13-format lattice once per consumer.
+    """
+    formats = formats or DATETIME_FORMATS
+    out = df.withColumns({f"_{c}_pre": _ts_preprocess(F.col(c)) for c in columns})
+    out = out.withColumns(
+        {
+            f"_{c}_ts": parse_timestamp_multi(
+                F.col(f"_{c}_pre"), formats, preprocessed=True
+            )
+            for c in columns
+        }
     )
-    flagged = df.filter(reason.isNotNull()).withColumn("_reason", reason)
-    logs = log_frame(
-        flagged,
-        patient_id=F.col("patient_id"),
-        filename=F.lit(filename),
-        column_name=F.lit(column),
-        original_value=F.col(column),
-        reason=F.col("_reason"),
+    staged = {}
+    for c in columns:
+        raw, parsed = F.col(c), F.col(f"_{c}_ts")
+        blank = raw.isNull() | (F.col(f"_{c}_pre") == "")
+        staged[f"_{c}_issue"] = issue(
+            ~blank & parsed.isNull(),
+            patient_id=F.col(id_col),
+            filename=filename,
+            column_name=c,
+            original_value=raw,
+            reason="invalid_datetime_format",
+        )
+        staged[c] = F.when(blank, F.lit(None)).otherwise(parsed)
+    return out.withColumns(staged).drop(
+        *[f"_{c}_{s}" for c in columns for s in ("pre", "ts")]
     )
-    return clean, logs
 
 
 def parse_datetime_columns(
@@ -111,41 +161,11 @@ def parse_datetime_columns(
     id_col: str = "patient_id",
     formats: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """F6: UTC-normalizing timestamp parse over several columns.
-
-    Matches parse_datetime_safe (etl.py:512-536): NULL/blank input → NULL
-    silently; non-blank unparseable → NULL + ``invalid_datetime_format`` log.
-    One log stream per column, unioned by the caller's log union.
-    """
-    formats = formats or DATETIME_FORMATS
-    out = df
-    log_parts = []
-    for c in columns:
-        raw = F.col(c)
-        # stage the normalized string once per column — inlined, the two
-        # regexp_replaces would re-run inside every to_timestamp attempt
-        out = out.withColumn(f"_{c}_pre", _ts_preprocess(raw))
-        pre = F.col(f"_{c}_pre")
-        blank = raw.isNull() | (pre == "")
-        parsed = parse_timestamp_multi(pre, formats, preprocessed=True)
-        failed = ~blank & parsed.isNull()
-        log_parts.append(
-            log_frame(
-                out.filter(failed),
-                patient_id=F.col(id_col),
-                filename=F.lit(filename),
-                column_name=F.lit(c),
-                original_value=raw,
-                reason=F.lit("invalid_datetime_format"),
-            )
-        )
-        out = out.withColumn(c, F.when(blank, F.lit(None)).otherwise(parsed)).drop(
-            f"_{c}_pre"
-        )
-    logs = log_parts[0]
-    for p in log_parts[1:]:
-        logs = logs.unionByName(p)
-    return out, logs
+    """F6 as a (clean, logs) pair — see :func:`with_parsed_datetimes`."""
+    out = with_parsed_datetimes(df, columns, filename, id_col, formats)
+    issues = [f"_{c}_issue" for c in columns]
+    logs = issue_logs(out, *[F.col(i) for i in issues])
+    return out.drop(*issues), logs
 
 
 def parse_iso_with_midnight_fallback(col: Column) -> Column:

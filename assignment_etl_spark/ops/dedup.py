@@ -17,10 +17,10 @@ pre-bucketed tables on the dedup key; AQE handles skewed key groups.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.ops.quality import log_frame
+from assignment_etl_spark.ops.quality import KEEP, issue, issue_logs
 from assignment_etl_spark.schemas import ROW_ID
 
 
@@ -37,6 +37,45 @@ def keep_first(df: DataFrame, keys: list[str], order_col: str = ROW_ID) -> DataF
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def mark_duplicates(
+    df: DataFrame, keys: list[str], order_col: str = ROW_ID
+) -> DataFrame:
+    """Add ``_rn`` (position in the key group in ``order_col`` order; 1 is
+    the keep-first survivor) and ``_grp`` (size of the key group)."""
+    w = Window.partitionBy(*keys).orderBy(order_col)
+    return df.withColumn("_rn", F.row_number().over(w)).withColumn(
+        "_grp", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    )
+
+
+def duplicate_issue(
+    keys: list[str],
+    *,
+    log_all_members: bool = False,
+    filename_col=None,
+    id_col: str = "patient_id",
+    id_log_col: str = "patient_id",
+    column_name: str | None = None,
+    reason: str = "duplicate_removed",
+    original_value_col=None,
+) -> Column:
+    """The duplicate log entry of a :func:`mark_duplicates` frame; the id
+    lands in log column ``id_log_col``."""
+    fires = (F.col("_grp") > 1) if log_all_members else (F.col("_rn") > 1)
+    return issue(
+        fires,
+        **{id_log_col: F.col(id_col)},
+        filename=filename_col,
+        column_name=column_name or ",".join(keys),
+        original_value=(
+            original_value_col
+            if original_value_col is not None
+            else (F.col(keys[0]) if len(keys) == 1 else F.to_json(F.struct(*keys)))
+        ),
+        reason=reason,
     )
 
 
@@ -59,44 +98,37 @@ def dedup_with_log(
     still dropping only the non-first (encounters D2, keep=False at
     etl.py:539-549 — verified: both enc-000101 copies logged, one dropped).
     """
-    w = Window.partitionBy(*keys).orderBy(order_col)
-    wcnt = Window.partitionBy(*keys)
-    marked = df.withColumn("_rn", F.row_number().over(w)).withColumn(
-        "_grp", F.count(F.lit(1)).over(wcnt)
-    )
-    to_log = marked.filter(
-        (F.col("_grp") > 1) if log_all_members else (F.col("_rn") > 1)
-    )
-    logs = log_frame(
-        to_log,
-        patient_id=F.col(id_col),
-        filename=filename_col if filename_col is not None else F.lit(None),
-        column_name=F.lit(column_name or ",".join(keys)),
-        original_value=(
-            original_value_col
-            if original_value_col is not None
-            else (F.col(keys[0]) if len(keys) == 1 else F.to_json(F.struct(*keys)))
+    marked = mark_duplicates(df, keys, order_col)
+    logs = issue_logs(
+        marked,
+        duplicate_issue(
+            keys,
+            log_all_members=log_all_members,
+            filename_col=filename_col,
+            id_col=id_col,
+            column_name=column_name,
+            reason=reason,
+            original_value_col=original_value_col,
         ),
-        reason=F.lit(reason),
     )
     clean = marked.filter(F.col("_rn") == 1).drop("_rn", "_grp")
     return clean, logs
 
 
-def patient_dedup(
-    df: DataFrame, filename: str = "patients.csv"
-) -> tuple[DataFrame, DataFrame]:
-    """D1: drop rows duplicated by id OR by person-key
-    (given_name, family_name, raw dob, round(height), round(weight)) —
-    both keep-first (etl.py:430-490).
+def mark_patient_duplicates(df: DataFrame) -> DataFrame:
+    """D1's two marks (etl.py:430-490): ``_dup``, the duplicate_removed log
+    mask, and ``_keep``, the survivor of the keep-first drops by id and then
+    by person key (given_name, family_name, raw dob, round(height),
+    round(weight)).
 
     Reference quirks reproduced exactly:
     - the person key uses the *raw dob string* ("12/31/1990" ≠ "1990-12-31")
       and half-even-rounded measurements;
-    - the duplicate_removed log mask is computed on the FULL frame
-      (etl.py:451-460) while the drops run *sequentially* (id-dedup first,
-      person-dedup on the survivors, etl.py:483-488) — so a person-dup of a
-      row that was itself dropped as an id-dup is logged yet survives.
+    - the log mask is computed on the FULL frame (etl.py:451-460) while the
+      drops run *sequentially* (id-dedup first, person-dedup on the
+      survivors, etl.py:483-488) — so a person-dup of a row that was itself
+      dropped as an id-dup is logged yet survives. Both marks come from
+      first-``_row_id`` minima, so one window per key set serves both.
     """
     person_key = [
         F.col("given_name"),
@@ -105,30 +137,43 @@ def patient_dedup(
         F.bround(F.col("height_cm"), 0),
         F.bround(F.col("weight_kg"), 0),
     ]
-    w_id = Window.partitionBy("patient_id").orderBy(ROW_ID)
-    w_person_full = Window.partitionBy(*person_key).orderBy(ROW_ID)
-    marked = df.withColumn("_rn_id", F.row_number().over(w_id)).withColumn(
-        "_rn_person_full", F.row_number().over(w_person_full)
+    row = F.col(ROW_ID)
+    w_person = Window.partitionBy(*person_key)
+    marked = df.withColumn(
+        "_id_first", row == F.min(row).over(Window.partitionBy("patient_id"))
     )
-    dups = marked.filter((F.col("_rn_id") > 1) | (F.col("_rn_person_full") > 1))
-    logs = log_frame(
-        dups,
+    first_id = F.col("_id_first")
+    return marked.withColumns(
+        {
+            "_dup": ~first_id | (row != F.min(row).over(w_person)),
+            KEEP: first_id
+            & (row == F.min(F.when(first_id, row)).over(w_person)),
+        }
+    ).drop("_id_first")
+
+
+def patient_dup_issue(filename: str = "patients.csv") -> Column:
+    """D1's log entry over a :func:`mark_patient_duplicates` frame."""
+    return issue(
+        F.col("_dup"),
         patient_id=F.col("patient_id"),
-        filename=F.lit(filename),
-        column_name=F.lit("duplicate_entry"),
+        filename=filename,
+        column_name="duplicate_entry",
         original_value=F.to_json(
             F.struct("given_name", "family_name", "dob", "height_cm", "weight_kg")
         ),
-        reason=F.lit("duplicate_removed"),
+        reason="duplicate_removed",
     )
-    survivors_id = marked.filter(F.col("_rn_id") == 1)
-    w_person = Window.partitionBy(*person_key).orderBy(ROW_ID)
-    clean = (
-        survivors_id.withColumn("_rn_person", F.row_number().over(w_person))
-        .filter(F.col("_rn_person") == 1)
-        .drop("_rn_id", "_rn_person_full", "_rn_person")
-    )
-    return clean, logs
+
+
+def patient_dedup(
+    df: DataFrame, filename: str = "patients.csv"
+) -> tuple[DataFrame, DataFrame]:
+    """D1: drop rows duplicated by id OR by person key, both keep-first
+    (see :func:`mark_patient_duplicates`)."""
+    marked = mark_patient_duplicates(df)
+    logs = issue_logs(marked, patient_dup_issue(filename))
+    return marked.filter(F.col(KEEP)).drop("_dup", KEEP), logs
 
 
 def dedup_within_window(

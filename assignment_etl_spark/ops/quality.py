@@ -1,19 +1,24 @@
-"""The audit-log dataflow: dual-output combinators + the log-schema union.
+"""The audit-log dataflow: issue entries, tagged frames and the log union.
 
 Reference mechanism: a module-global ``logs: list[dict]`` mutated from inside
 the row-functions of every cleaning operator and materialized once at the end
 (/root/reference/etl.py:664,694,719). That is driver-side mutable state —
-impossible on executors. The engine's redesign (SURVEY §2.9): operators
-compute a struct-valued result column carrying ``value + flagged + reason``,
-project the clean column out, and derive the log stream with a filter on
-``flagged``. All log streams share one fixed superset schema (schemas.LOG_SCHEMA)
-and union via ``unionByName(allowMissingColumns=True)``, which reproduces
-pandas' union-of-keys semantics deterministically.
+impossible on executors. The engine's redesign (SURVEY §2.9): every rule is
+a condition plus the log row it writes, expressed as one Column —
+:func:`issue` gives ``struct<LOG_COLUMNS>`` when the rule fires, else NULL.
+A pipeline tags each row once with every rule that fired on it
+(:func:`tag_issues` → an ``_issues: array<struct<LOG_COLUMNS>>`` column
+beside the cleaned values), and the log stream is that column exploded
+(:func:`issue_logs`). The clean table and the log stream are two narrow
+projections of ONE tagged frame, so the pipelines persist that frame and
+scan, parse and dedup each source once. All log streams share one fixed
+superset schema (schemas.LOG_SCHEMA) and union via
+``unionByName(allowMissingColumns=True)``, which reproduces pandas'
+union-of-keys semantics deterministically.
 
-Scale note: both branches (clean + log) of each operator are narrow
-transformations over the same scan — Catalyst plans them as one pass when
-written in the same job; for multi-action pipelines, persist the shared
-intermediate (pipelines.runner does this).
+The single-rule ``ops`` operators (``map_sex``, ``parse_dob``, ...) keep
+their (clean, logs) pair signature as thin wrappers over the same issue
+Columns, for composing one rule at a time.
 """
 
 from __future__ import annotations
@@ -22,25 +27,57 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructType
 
+from assignment_etl_spark.caching import scoped_persist
+from assignment_etl_spark.ops.strings import normalize_strings
 from assignment_etl_spark.schemas import LOG_COLUMNS, LOG_SCHEMA
 
 
-def log_frame(df: DataFrame, **cols: Column) -> DataFrame:
-    """Project ``df`` onto the fixed LOG_SCHEMA.
+ISSUES = "_issues"
+KEEP = "_keep"
 
-    ``cols`` maps log-column name -> Column expression; unmentioned log
-    columns become NULL strings. This is the engine's equivalent of the
-    reference appending a dict with a site-specific keyset (etl.py:297-304).
-    """
+
+def _log_struct(cols: dict[str, Column | str]) -> Column:
+    """``struct<LOG_COLUMNS>`` of ``cols``, unmentioned columns NULL. One
+    struct-level cast types and names every field, as one Column call
+    instead of a cast and an alias per field."""
     unknown = set(cols) - set(LOG_COLUMNS)
     if unknown:
         raise ValueError(f"not log columns: {sorted(unknown)}")
-    projection = [
-        (cols[c].cast("string") if c in cols else F.lit(None).cast("string")).alias(c)
-        for c in LOG_COLUMNS
-    ]
-    return df.select(*projection)
+    null = F.lit(None)
+    fields = [cols.get(c, null) for c in LOG_COLUMNS]
+    return F.struct(
+        *[v if isinstance(v, Column) else F.lit(v) for v in fields]
+    ).cast(LOG_SCHEMA)
+
+
+def log_frame(df: DataFrame, **cols: Column | str) -> DataFrame:
+    """Project ``df`` onto the fixed LOG_SCHEMA.
+
+    ``cols`` maps log-column name -> Column expression or literal string;
+    unmentioned log columns become NULL strings. This is the engine's
+    equivalent of the reference appending a dict with a site-specific
+    keyset (etl.py:297-304).
+    """
+    return df.select(_log_struct(cols).alias("_log")).select("_log.*")
+
+
+def issue(fires: Column, **cols: Column | str) -> Column:
+    """One rule's log entry for the current row: ``struct<LOG_COLUMNS>``
+    (``cols`` as in :func:`log_frame`) when ``fires`` is true, else NULL."""
+    return F.when(fires, _log_struct(cols))
+
+
+def tag_issues(*issues: Column) -> Column:
+    """The entries of ``issues`` that fired on this row, in rule order."""
+    return F.filter(F.array(*issues), lambda x: x.isNotNull())
+
+
+def issue_logs(df: DataFrame, *issues: Column) -> DataFrame:
+    """The log stream of a tagged frame: one row per fired entry of its
+    ``_issues`` column — or, given ``issues``, of those entries."""
+    return df.select(F.inline(tag_issues(*issues) if issues else F.col(ISSUES)))
 
 
 def empty_logs(spark) -> DataFrame:
@@ -55,6 +92,29 @@ def union_logs(*logs: DataFrame) -> DataFrame:
     return reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
     ).select(*LOG_COLUMNS)
+
+
+def tagged_outputs(
+    tagged: DataFrame,
+    schema: StructType,
+    *,
+    nfkc: bool = True,
+    persist: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """(clean table, log stream) of a tagged frame: the ``schema`` columns
+    of the rows whose ``_keep`` holds, and the exploded ``_issues``, each
+    F3-normalized in one pass. ``persist`` caches the tagged frame — the
+    shared base of both outputs — under caching.scoped_persist, so the
+    source is scanned, parsed and deduplicated once however many actions
+    consume them."""
+    if persist:
+        tagged = scoped_persist(tagged)
+    clean = tagged.filter(F.col(KEEP)).select(*schema.fieldNames())
+    strings = [f.name for f in schema.fields if isinstance(f.dataType, StringType)]
+    return (
+        normalize_strings(clean, strings, nfkc=nfkc),
+        normalize_strings(issue_logs(tagged), LOG_COLUMNS, nfkc=nfkc),
+    )
 
 
 def orphan_check(

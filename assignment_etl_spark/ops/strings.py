@@ -49,10 +49,7 @@ def normalize_strings(
     """F3 applied to all (or the given) string columns; non-strings untouched."""
     if columns is None:
         columns = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    out = df
-    for c in columns:
-        out = out.withColumn(c, nfkc_lower(F.col(c), nfkc=nfkc))
-    return out
+    return df.withColumns({c: nfkc_lower(F.col(c), nfkc=nfkc) for c in columns})
 
 
 def trim_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:

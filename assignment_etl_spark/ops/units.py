@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.ops.quality import log_frame
+from assignment_etl_spark.ops.quality import issue, issue_logs
 
 LB_TO_KG = 0.453592
 FIRST_NUM = r"([\d.]+)"
@@ -241,6 +241,22 @@ def normalize_heights(df: DataFrame, column: str = "height") -> DataFrame:
     return with_height_cm(df, column)
 
 
+def weight_issue(
+    column: str = "weight", filename: str = "patients.csv", struct_col: str = "_w"
+) -> Column:
+    """F2's log entry over the ``with_weight_struct`` result column."""
+    w = F.col(struct_col)
+    return issue(
+        w["flagged"],
+        patient_id=F.col("patient_id"),
+        filename=filename,
+        original_value=F.col(column),
+        cleaned_value=w["weight_kg"],
+        column_name=column,
+        reason=w["reason"],
+    )
+
+
 def normalize_weights(
     df: DataFrame,
     column: str = "weight",
@@ -250,25 +266,14 @@ def normalize_weights(
 ) -> tuple[DataFrame, DataFrame]:
     """Derive ``weight_kg`` + the flagged-row log stream (etl.py:287-308).
 
-    ``persist`` caches the struct stage — the shared base of BOTH outputs.
-    Without the cache barrier, the log branch's flagged-filter is pushed
-    down through every staged projection into the scan, re-inlining the
-    full F2 chain into one Filter expression (janino 64 KB overrun →
-    interpreted fallback) and re-scanning the source. Pipelines pass
-    persist=True; leave False for single-output composition."""
+    ``persist`` caches the struct stage — the shared base of BOTH outputs —
+    so materializing both runs the F2 chain once; leave False for
+    single-output composition. (The pipelines tag the struct stage
+    instead: pipelines/patients.py.)"""
     with_struct = with_weight_struct(df, column, height_col, out="_w")
     if persist:
         from assignment_etl_spark.caching import scoped_persist
 
         with_struct = scoped_persist(with_struct)
     clean = with_struct.withColumn("weight_kg", F.col("_w.weight_kg")).drop("_w")
-    logs = log_frame(
-        with_struct.filter(F.col("_w.flagged")),
-        patient_id=F.col("patient_id"),
-        filename=F.lit(filename),
-        original_value=F.col(column),
-        cleaned_value=F.col("_w.weight_kg"),
-        column_name=F.lit(column),
-        reason=F.col("_w.reason"),
-    )
-    return clean, logs
+    return clean, issue_logs(with_struct, weight_issue(column, filename))

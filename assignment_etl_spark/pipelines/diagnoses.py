@@ -22,84 +22,71 @@ from pyspark.sql import functions as F
 from assignment_etl_spark.io.xml import read_diagnoses_xml
 from assignment_etl_spark.ops.codes import coerce_bool
 from assignment_etl_spark.ops.dates import parse_iso_with_midnight_fallback
-from assignment_etl_spark.ops.dedup import dedup_with_log
-from assignment_etl_spark.ops.quality import log_frame, union_logs
-from assignment_etl_spark.ops.strings import normalize_strings
-from assignment_etl_spark.schemas import ROW_ID
+from assignment_etl_spark.ops.dedup import duplicate_issue, mark_duplicates
+from assignment_etl_spark.ops.quality import ISSUES, KEEP, issue, tag_issues
+from assignment_etl_spark.ops.quality import tagged_outputs
+from assignment_etl_spark.schemas import DIAGNOSES_CLEAN
 
 
 def clean_diagnoses(
-    raw: DataFrame, *, nfkc: bool = True, strict_parity: bool = False
+    raw: DataFrame,
+    *,
+    nfkc: bool = True,
+    strict_parity: bool = False,
+    persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    df = raw.withColumn("is_primary", coerce_bool(F.col("is_primary_raw"))).drop(
-        "is_primary_raw"
-    )
-
-    # Rule 1: drop rows with missing code (etl.py:618-630)
-    row_json = F.to_json(F.struct("encounter_id", "code", "code_system"))
-    drop_logs = log_frame(
-        df.filter(F.col("code").isNull()),
-        encounter_id=F.col("encounter_id"),
-        code=F.col("code"),
-        original_value=row_json,
-        reason=F.lit("dropped for missing code"),
-    )
-    df = df.filter(F.col("code").isNotNull())
-
+    """raw → (clean diagnoses, log stream), both projections of one tagged
+    frame (see ops.quality); persist_intermediates caches it, so the XML
+    shred and the dedup window run once for both outputs."""
+    df = raw.withColumn("is_primary", coerce_bool(F.col("is_primary_raw")))
+    enc, code = F.col("encounter_id"), F.col("code")
+    is_primary = F.col("is_primary")
+    # Rule 1 drops rows with missing code (etl.py:618-630); the fills and
+    # the dedup run on the survivors only
+    has_code = code.isNotNull()
     # Rules 2/3: fills (if/elif quirk vs independent — see module docstring)
-    fill_enc = F.col("encounter_id").isNull()
-    fill_prim = F.col("is_primary").isNull() & (
-        ~fill_enc if strict_parity else F.lit(True)
+    fill_enc = has_code & enc.isNull()
+    fill_prim = has_code & is_primary.isNull() & (
+        enc.isNotNull() if strict_parity else F.lit(True)
     )
-    fill_logs = union_logs(
-        log_frame(
-            df.filter(fill_enc),
-            encounter_id=F.col("encounter_id"),
-            code=F.col("code"),
-            column_name=F.lit("encounter_id"),
-            cleaned_value=F.lit("UNKNOWN"),
-            reason=F.lit("missing encounter_id"),
+    # Rule 4: keep-first dedup on the FILLED (encounter_id, code)
+    filled = F.col("_enc_filled")
+    df = mark_duplicates(
+        df.withColumn("_enc_filled", F.when(fill_enc, "UNKNOWN").otherwise(enc)),
+        ["_enc_filled", "code"],
+    )
+    ids = {"encounter_id": enc, "code": code}
+    row_json = F.to_json(F.struct("encounter_id", "code", "code_system"))
+    tagged = df.select(
+        filled.alias("encounter_id"),
+        "code",
+        "code_system",
+        F.when(fill_prim, False).otherwise(is_primary).alias("is_primary"),
+        parse_iso_with_midnight_fallback(F.col("recorded_at_raw")).alias(
+            "recorded_at"
         ),
-        log_frame(
-            df.filter(fill_prim),
-            encounter_id=F.col("encounter_id"),
-            code=F.col("code"),
-            column_name=F.lit("is_primary"),
-            cleaned_value=F.lit("false"),
-            reason=F.lit("filled missing is_primary"),
-        ),
+        (has_code & (F.col("_rn") == 1)).alias(KEEP),
+        tag_issues(
+            issue(~has_code, **ids, original_value=row_json,
+                  reason="dropped for missing code"),
+            issue(fill_enc, **ids, column_name="encounter_id",
+                  cleaned_value="UNKNOWN", reason="missing encounter_id"),
+            issue(fill_prim, **ids, column_name="is_primary",
+                  cleaned_value="false", reason="filled missing is_primary"),
+            F.when(has_code, duplicate_issue(
+                ["encounter_id", "code"],
+                id_col="_enc_filled",
+                id_log_col="encounter_id",
+                reason="duplicate encounter_id + code",
+                original_value_col=F.to_json(
+                    F.struct(filled.alias("encounter_id"), code)
+                ),
+            )),
+        ).alias(ISSUES),
     )
-    # is_primary first: fill_prim's strict-parity guard reads the ORIGINAL
-    # encounter_id nullness, and Column exprs resolve against the frame
-    # they're applied to — filling encounter_id first would flip the guard
-    df = df.withColumn(
-        "is_primary", F.when(fill_prim, F.lit(False)).otherwise(F.col("is_primary"))
-    ).withColumn(
-        "encounter_id",
-        F.when(fill_enc, F.lit("UNKNOWN")).otherwise(F.col("encounter_id")),
+    return tagged_outputs(
+        tagged, DIAGNOSES_CLEAN, nfkc=nfkc, persist=persist_intermediates
     )
-
-    # Rule 4: keep-first dedup on (encounter_id, code) in document order
-    df, dup_logs = dedup_with_log(
-        df,
-        ["encounter_id", "code"],
-        id_col="encounter_id",
-        column_name="encounter_id,code",
-        reason="duplicate encounter_id + code",
-        original_value_col=F.to_json(F.struct("encounter_id", "code")),
-    )
-    # log_frame maps id_col → patient_id; diagnosis logs carry encounter_id
-    dup_logs = dup_logs.withColumn("encounter_id", F.col("patient_id")).withColumn(
-        "patient_id", F.lit(None).cast("string")
-    )
-
-    df = df.withColumn(
-        "recorded_at", parse_iso_with_midnight_fallback(F.col("recorded_at_raw"))
-    ).drop("recorded_at_raw")
-
-    df = normalize_strings(df, nfkc=nfkc)
-    logs = union_logs(drop_logs, fill_logs, dup_logs)
-    return df.drop(ROW_ID), normalize_strings(logs, nfkc=nfkc)
 
 
 def run(
@@ -110,9 +97,9 @@ def run(
     strict_parity: bool = False,
     persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    raw = read_diagnoses_xml(spark, path)
-    if persist_intermediates:
-        # the XML shred (mapInPandas) is the expensive shared base of the
-        # clean output and every log stream (SURVEY §4.3.2)
-        raw = raw.persist()
-    return clean_diagnoses(raw, nfkc=nfkc, strict_parity=strict_parity)
+    return clean_diagnoses(
+        read_diagnoses_xml(spark, path),
+        nfkc=nfkc,
+        strict_parity=strict_parity,
+        persist_intermediates=persist_intermediates,
+    )

@@ -3,7 +3,8 @@ D1 dedup → drop raw cols → F3 normalize (reference order, etl.py:664-678).
 
 Ordering constraints preserved (SURVEY §3.1): height before weight (BMI
 inference consumes height_cm); dedup after all value normalization (rounded
-kg/cm are dedup keys); global lowercase last.
+kg/cm are dedup keys); global lowercase last. Every rule logs on the full
+frame, before the dedup drops (etl.py:451-460).
 """
 
 from __future__ import annotations
@@ -12,13 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from assignment_etl_spark.io.csv import read_csv
-from assignment_etl_spark.ops.codes import map_sex
-from assignment_etl_spark.ops.dates import parse_dob
-from assignment_etl_spark.ops.dedup import patient_dedup
-from assignment_etl_spark.ops.quality import union_logs
-from assignment_etl_spark.ops.strings import normalize_strings
-from assignment_etl_spark.ops.units import normalize_heights, normalize_weights
-from assignment_etl_spark.schemas import PATIENTS_RAW, ROW_ID
+from assignment_etl_spark.ops.codes import sex_issue, sex_to_iso5218
+from assignment_etl_spark.ops.dates import DATE_FORMATS, dob_issue
+from assignment_etl_spark.ops.dates import parse_timestamp_multi
+from assignment_etl_spark.ops.dedup import mark_patient_duplicates, patient_dup_issue
+from assignment_etl_spark.ops.quality import ISSUES, tag_issues, tagged_outputs
+from assignment_etl_spark.ops.units import normalize_heights, weight_issue
+from assignment_etl_spark.ops.units import with_weight_struct
+from assignment_etl_spark.schemas import PATIENTS_CLEAN, PATIENTS_RAW
 
 
 def clean_patients(
@@ -28,25 +30,33 @@ def clean_patients(
     nfkc: bool = True,
     persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """raw (string cols + _row_id) → (clean patients, log stream).
-
-    persist_intermediates caches the post-F2 struct stage inside
-    normalize_weights — the shared base of the clean output and every log
-    branch (SURVEY §4.3.2). The cache barrier also stops the flagged-filter
-    pushdown that would re-inline the full F2 chain into the scan (see
-    normalize_weights docstring)."""
-    df = normalize_heights(raw)
-    df, w_logs = normalize_weights(
-        df, filename=filename, persist=persist_intermediates
+    """raw (string cols + _row_id) → (clean patients, log stream), both
+    projections of one tagged frame (see ops.quality) that
+    persist_intermediates caches, so the F2 chain and the two dedup windows
+    run once for both outputs."""
+    df = with_weight_struct(normalize_heights(raw))
+    df = mark_patient_duplicates(
+        df.withColumns(
+            {
+                "weight_kg": F.col("_w.weight_kg"),
+                "sex_iso": sex_to_iso5218(F.col("sex")),
+                "dob_parsed": parse_timestamp_multi(F.col("dob"), DATE_FORMATS),
+            }
+        )
     )
-    df, s_logs = map_sex(df, filename=filename)
-    df, d_logs = parse_dob(df, filename=filename)
-    df, dup_logs = patient_dedup(df, filename=filename)
-    df = df.drop("weight", "height")
-    df = normalize_strings(df, nfkc=nfkc)
-    clean = df.drop(ROW_ID)
-    logs = union_logs(w_logs, s_logs, d_logs, dup_logs)
-    return clean, normalize_strings(logs, nfkc=nfkc)
+    tagged = df.select(
+        *PATIENTS_CLEAN.fieldNames(),
+        F.col("_keep"),
+        tag_issues(
+            weight_issue(filename=filename),
+            sex_issue(filename=filename),
+            dob_issue(F.col("dob_parsed"), filename=filename),
+            patient_dup_issue(filename),
+        ).alias(ISSUES),
+    )
+    return tagged_outputs(
+        tagged, PATIENTS_CLEAN, nfkc=nfkc, persist=persist_intermediates
+    )
 
 
 def run(
@@ -56,7 +66,8 @@ def run(
     nfkc: bool = True,
     persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    raw = read_csv(spark, path, schema=PATIENTS_RAW)
     return clean_patients(
-        raw, nfkc=nfkc, persist_intermediates=persist_intermediates
+        read_csv(spark, path, schema=PATIENTS_RAW),
+        nfkc=nfkc,
+        persist_intermediates=persist_intermediates,
     )

@@ -2,9 +2,10 @@
 written to the native parquet store (and optionally JDBC — reference loads
 Postgres, etl.py:711-719).
 
-The shared intermediates behind each (clean, log) pair are persisted before
-the double consumption so the scans and cleaning expressions run once
-(SURVEY §4.3.2).
+Each pipeline persists one tagged frame per source (ops.quality), so the
+``logs`` table is a union of five branches — one per source, one per orphan
+audit — over caches. Every cache a run makes is a caching.scoped_persist:
+``release_scoped_caches()`` after the last action on the result frees all.
 """
 
 from __future__ import annotations
@@ -14,7 +15,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-from assignment_etl_spark.ops.quality import union_logs
+from assignment_etl_spark.caching import scoped_persist
+from assignment_etl_spark.ops.quality import orphan_check, union_logs
 from assignment_etl_spark.pipelines import diagnoses, encounters, patients
 
 
@@ -60,25 +62,17 @@ def run_etl(
     )
     log_parts = [p_logs, e_logs, d_logs]
     if ri_audit:
-        from assignment_etl_spark.ops.quality import orphan_check
-
-        log_parts.append(
-            orphan_check(
-                e_clean, p_clean, "patient_id", "patient_id",
-                filename="encounters.csv",
-            )
-        )
-        log_parts.append(
-            orphan_check(
-                d_clean, e_clean, "encounter_id", "encounter_id",
-                filename="diagnoses.xml",
-            )
-        )
+        log_parts += [
+            orphan_check(e_clean, p_clean, "patient_id", "patient_id",
+                         filename="encounters.csv"),
+            orphan_check(d_clean, e_clean, "encounter_id", "encounter_id",
+                         filename="diagnoses.xml"),
+        ]
     logs = union_logs(*log_parts)
     result = EtlResult(p_clean, e_clean, d_clean, logs)
     if persist:
         for df in result.tables().values():
-            df.persist(StorageLevel.MEMORY_AND_DISK)
+            scoped_persist(df, StorageLevel.MEMORY_AND_DISK)
     return result
 
 

@@ -266,3 +266,29 @@ def test_compaction_sizing_tracks_erasure(spark, tmp_path):
     store = spark.read.parquet(p)
     assert store.count() > 0
     assert store.filter("keeper_id >= 20").count() == 0
+
+
+def _short_signatures(spark, ids, length):
+    """("_id", "_sig") rows whose signatures have ``length`` values — what
+    a frame signed with another ``num_hashes`` looks like."""
+    return spark.createDataFrame(
+        [(i, list(range(length))) for i in ids], "_id long, _sig array<long>"
+    )
+
+
+def test_build_band_store_rejects_signature_length_mismatch(spark, corpus):
+    hist, _ = corpus
+    bad = _short_signatures(spark, [0, 2, 4], 16)
+    with pytest.raises(Exception, match="signature of length 16.*num_hashes=32"):
+        build_band_store(hist, portable=True, signatures=bad).collect()
+
+
+def test_incremental_dedup_rejects_signature_length_mismatch(spark, corpus):
+    hist, batch = corpus
+    store = build_band_store(hist, portable=True)
+    bad = _short_signatures(spark, [11, 13, 15, 17], 16)
+    with pytest.raises(Exception, match="signature of length 16.*num_hashes=32"):
+        incremental_minhash_dedup(
+            batch, store, history_texts=hist, jaccard_threshold=0.4,
+            portable=True, batch_signatures=bad,
+        )[2].collect()

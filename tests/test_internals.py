@@ -26,6 +26,7 @@ EXPECTED_CROSSINGS = [
     "severed_from_checkpoint",
     "cache_manager_is_empty",
     "persistent_rdd_ids",
+    "physical_plan_nodes",
 ]
 
 

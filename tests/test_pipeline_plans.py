@@ -1,0 +1,81 @@
+"""Plan shape of ``run_etl``: each source is scanned, normalized and
+deduplicated once, in one tagged frame, and every log stream is a
+projection of it (ops.quality).
+
+The ``logs`` table is a union of one branch per source plus one per
+orphan audit; each pipeline's log branch runs the NFKC pass once; and the
+encounters text file is scanned once for all four result tables. The
+plans are read before any action, walking each cache's plan once
+(internals.physical_plan_nodes), so a count here is the number of times
+the work runs when each cache is built once.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from assignment_etl_spark import internals
+from assignment_etl_spark.caching import release_scoped_caches
+from assignment_etl_spark.pipelines.runner import run_etl
+
+
+def _cls(node) -> str:
+    return internals.plan_node_class(node)
+
+
+def _executed(df):
+    return internals.query_execution(df).executedPlan()
+
+
+@pytest.fixture(scope="module")
+def etl(spark, fixture_dir):
+    res = run_etl(
+        spark,
+        str(fixture_dir / "patients.csv"),
+        str(fixture_dir / "encounters.csv"),
+        str(fixture_dir / "diagnoses.xml"),
+        ri_audit=True,
+    )
+    yield res
+    release_scoped_caches()
+
+
+def _logs_union(etl):
+    """The Union under the persisted logs table, its caches as leaves."""
+    (scan,) = [
+        n for n in internals.physical_plan_nodes(_executed(etl.logs))
+        if _cls(n) == "InMemoryTableScanExec"
+    ]
+    nodes = internals.physical_plan_nodes(internals.cached_plan(scan))
+    unions = [n for n in nodes if _cls(n) == "UnionExec"]
+    assert len(unions) == 1
+    return unions[0], nodes
+
+
+def test_logs_union_has_one_branch_per_stream(etl):
+    union, _ = _logs_union(etl)
+    # patients, encounters, diagnoses, orphan patient_id, orphan encounter_id
+    assert len(internals.plan_children(union)) == 5
+
+
+def test_each_pipeline_log_stream_runs_nfkc_once(etl):
+    union, nodes = _logs_union(etl)
+    arrow = [
+        sum(_cls(n) == "ArrowEvalPythonExec" for n in internals.physical_plan_nodes(b))
+        for b in internals.plan_children(union)
+    ]
+    # the three pipeline branches explode a cached tagged frame and run one
+    # NFKC pass; the orphan audits read the cached clean tables
+    assert sorted(arrow) == [0, 0, 1, 1, 1]
+    assert sum(_cls(n) == "ArrowEvalPythonExec" for n in nodes) == 3
+
+
+def test_encounters_file_scanned_once(etl):
+    seen: set[int] = set()
+    scans = [
+        n
+        for df in etl.tables().values()
+        for n in internals.physical_plan_nodes(_executed(df), seen)
+        if _cls(n) == "FileSourceScanExec" and "encounters.csv" in str(n.toString())
+    ]
+    assert len(scans) == 1

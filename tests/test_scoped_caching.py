@@ -80,3 +80,28 @@ def test_entry_query_caches_return_to_baseline(spark, sf_dir, name):
     assert cache_manager_is_empty(spark), (
         f"{name} left cache-manager entries after release_scoped_caches"
     )
+
+
+def test_repeated_run_etl_releases_every_cache(spark, fixture_dir, tmp_path):
+    """Every cache ``run_etl`` makes — the tagged frame per source, the XML
+    wholetext scan and the four result tables — has the registry as its
+    release owner, so a long-lived session running the ETL again and again
+    returns to an empty cache manager after each release."""
+    from assignment_etl_spark.pipelines.runner import run_etl, write_parquet_store
+
+    release_scoped_caches()
+    spark.catalog.clearCache()
+    for i in range(2):
+        res = run_etl(
+            spark,
+            str(fixture_dir / "patients.csv"),
+            str(fixture_dir / "encounters.csv"),
+            str(fixture_dir / "diagnoses.xml"),
+            ri_audit=True,
+        )
+        write_parquet_store(res, str(tmp_path / f"store{i}"))
+        assert scoped_cache_count() > 0
+        release_scoped_caches()
+        assert scoped_cache_count() == 0
+        assert [df.is_cached for df in res.tables().values()] == [False] * 4
+        assert cache_manager_is_empty(spark), f"cycle {i} left cache entries"
