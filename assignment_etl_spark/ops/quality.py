@@ -98,7 +98,6 @@ def tagged_outputs(
     tagged: DataFrame,
     schema: StructType,
     *,
-    nfkc: bool = True,
     persist: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(clean table, log stream) of a tagged frame: the ``schema`` columns
@@ -112,8 +111,8 @@ def tagged_outputs(
     clean = tagged.filter(F.col(KEEP)).select(*schema.fieldNames())
     strings = [f.name for f in schema.fields if isinstance(f.dataType, StringType)]
     return (
-        normalize_strings(clean, strings, nfkc=nfkc),
-        normalize_strings(issue_logs(tagged), LOG_COLUMNS, nfkc=nfkc),
+        normalize_strings(clean, strings),
+        normalize_strings(issue_logs(tagged), LOG_COLUMNS),
     )
 
 

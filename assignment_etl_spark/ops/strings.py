@@ -7,10 +7,21 @@ lowercase; downstream enum validation depends on it (etl.py:577). The engine
 keeps one late ``normalize_strings`` pass per pipeline for the same
 order-of-operations (SURVEY §7.4.6).
 
-Scale note: lowercase is native; NFKC has no Catalyst builtin, so it rides an
-Arrow-vectorized pandas_udf — the one sanctioned Python crossing (SURVEY
-§2.10). ``nfkc=False`` keeps the whole pass in codegen when the data is known
-ASCII. Invalid-byte replacement is a no-op for data Spark already decoded.
+Scale note: F3 runs in the executor JVM, with no Python worker and no Arrow
+batch. NFKC has no Catalyst builtin, but Spark bundles ICU4J, and one
+``reflect`` call reaches its static ``Normalizer.compose(s, true)``; the
+lowercase is the native ``lower``. ``reflect`` is nondeterministic and not
+code-generated: it runs interpreted in its own Project and no filter is
+pushed below it, so F3 stays the last projection of each output.
+Invalid-byte replacement is a no-op for data Spark already decoded.
+
+Known difference: the bundled ICU4J (77.1) implements Unicode 16.0, while
+CPython 3.11's ``unicodedata`` (so ``nfkc_lower_py`` and the reference)
+implements Unicode 14.0. Over all 1,112,064 non-surrogate code points the
+two differ on exactly 125, every one unassigned in Unicode 14.0: U+1C89,
+U+A7CB, U+A7CC, U+A7DA, U+A7DC, U+10D50..U+10D65, U+1CCD6..U+1CCF9 and
+U+1E030..U+1E06D. ICU lowercases or decomposes them; CPython leaves them
+unchanged. They are not special-cased. No assigned code point differs.
 """
 
 from __future__ import annotations
@@ -18,11 +29,9 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 
 def normalize_column_names(df: DataFrame) -> DataFrame:
@@ -34,22 +43,20 @@ def normalize_column_names(df: DataFrame) -> DataFrame:
     return df.toDF(*new)
 
 
-@pandas_udf(T.StringType())
-def _nfkc_lower(s: pd.Series) -> pd.Series:
-    return s.str.normalize("NFKC").str.lower()
+def nfkc_lower(col: Column) -> Column:
+    """F3 on one column: ICU's static ``Normalizer.compose(s, true)`` is
+    NFKC. ICU throws on NULL, so the guard is required; ``try_reflect``
+    would also hide real errors."""
+    return F.when(col.isNotNull(), F.lower(F.reflect(
+        F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), col, F.lit(True)
+    )))
 
 
-def nfkc_lower(col: Column, *, nfkc: bool = True) -> Column:
-    return _nfkc_lower(col) if nfkc else F.lower(col)
-
-
-def normalize_strings(
-    df: DataFrame, columns: list[str] | None = None, *, nfkc: bool = True
-) -> DataFrame:
+def normalize_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """F3 applied to all (or the given) string columns; non-strings untouched."""
     if columns is None:
         columns = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    return df.withColumns({c: nfkc_lower(F.col(c), nfkc=nfkc) for c in columns})
+    return df.withColumns({c: nfkc_lower(F.col(c)) for c in columns})
 
 
 def trim_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:

@@ -31,7 +31,6 @@ from assignment_etl_spark.schemas import DIAGNOSES_CLEAN
 def clean_diagnoses(
     raw: DataFrame,
     *,
-    nfkc: bool = True,
     strict_parity: bool = False,
     persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -84,22 +83,18 @@ def clean_diagnoses(
             )),
         ).alias(ISSUES),
     )
-    return tagged_outputs(
-        tagged, DIAGNOSES_CLEAN, nfkc=nfkc, persist=persist_intermediates
-    )
+    return tagged_outputs(tagged, DIAGNOSES_CLEAN, persist=persist_intermediates)
 
 
 def run(
     spark: SparkSession,
     path: str,
     *,
-    nfkc: bool = True,
     strict_parity: bool = False,
     persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     return clean_diagnoses(
         read_diagnoses_xml(spark, path),
-        nfkc=nfkc,
         strict_parity=strict_parity,
         persist_intermediates=persist_intermediates,
     )

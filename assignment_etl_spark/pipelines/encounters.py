@@ -35,7 +35,6 @@ def clean_encounters(
     raw: DataFrame,
     *,
     filename: str = "encounters.csv",
-    nfkc: bool = True,
     persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """raw → (clean encounters, log stream), both projections of one tagged
@@ -43,7 +42,7 @@ def clean_encounters(
     messy-CSV split, the first NFKC pass, the 13-format timestamp lattice
     and the dedup window run once for both outputs."""
     df = with_parsed_datetimes(
-        normalize_strings(raw, ENCOUNTER_COLUMNS, nfkc=nfkc),
+        normalize_strings(raw, ENCOUNTER_COLUMNS),
         DATETIME_COLUMNS,
         filename=filename,
     )
@@ -90,20 +89,13 @@ def clean_encounters(
         ).alias(ISSUES),
     )
     # the final clean_utf8 pass (etl.py:684) lowercases the UNKNOWN fill
-    return tagged_outputs(
-        tagged, ENCOUNTERS_CLEAN, nfkc=nfkc, persist=persist_intermediates
-    )
+    return tagged_outputs(tagged, ENCOUNTERS_CLEAN, persist=persist_intermediates)
 
 
 def run(
-    spark: SparkSession,
-    path: str,
-    *,
-    nfkc: bool = True,
-    persist_intermediates: bool = False,
+    spark: SparkSession, path: str, *, persist_intermediates: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     return clean_encounters(
         read_messy_csv(spark, path, ENCOUNTER_COLUMNS),
-        nfkc=nfkc,
         persist_intermediates=persist_intermediates,
     )

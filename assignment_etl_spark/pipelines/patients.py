@@ -27,7 +27,6 @@ def clean_patients(
     raw: DataFrame,
     *,
     filename: str = "patients.csv",
-    nfkc: bool = True,
     persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """raw (string cols + _row_id) → (clean patients, log stream), both
@@ -54,20 +53,13 @@ def clean_patients(
             patient_dup_issue(filename),
         ).alias(ISSUES),
     )
-    return tagged_outputs(
-        tagged, PATIENTS_CLEAN, nfkc=nfkc, persist=persist_intermediates
-    )
+    return tagged_outputs(tagged, PATIENTS_CLEAN, persist=persist_intermediates)
 
 
 def run(
-    spark: SparkSession,
-    path: str,
-    *,
-    nfkc: bool = True,
-    persist_intermediates: bool = False,
+    spark: SparkSession, path: str, *, persist_intermediates: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     return clean_patients(
         read_csv(spark, path, schema=PATIENTS_RAW),
-        nfkc=nfkc,
         persist_intermediates=persist_intermediates,
     )

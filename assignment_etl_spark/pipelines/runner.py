@@ -42,7 +42,6 @@ def run_etl(
     encounters_path: str,
     diagnoses_path: str,
     *,
-    nfkc: bool = True,
     persist: bool = True,
     ri_audit: bool = False,
 ) -> EtlResult:
@@ -51,14 +50,12 @@ def run_etl(
     not in patients) and orphan diagnoses (encounter_id not in encounters)
     are reported to the logs table — the data itself still flows through
     unchanged, matching reference behavior."""
-    p_clean, p_logs = patients.run(
-        spark, patients_path, nfkc=nfkc, persist_intermediates=persist
-    )
+    p_clean, p_logs = patients.run(spark, patients_path, persist_intermediates=persist)
     e_clean, e_logs = encounters.run(
-        spark, encounters_path, nfkc=nfkc, persist_intermediates=persist
+        spark, encounters_path, persist_intermediates=persist
     )
     d_clean, d_logs = diagnoses.run(
-        spark, diagnoses_path, nfkc=nfkc, persist_intermediates=persist
+        spark, diagnoses_path, persist_intermediates=persist
     )
     log_parts = [p_logs, e_logs, d_logs]
     if ri_audit:

@@ -1,6 +1,12 @@
+import os
+
 import pytest
 
 from assignment_etl_spark.session import get_spark
+
+# A bounded driver heap for the test session: the engine's 24g default lets
+# the JVM grow past the memory of a small host over the full suite.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

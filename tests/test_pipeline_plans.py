@@ -3,11 +3,11 @@ deduplicated once, in one tagged frame, and every log stream is a
 projection of it (ops.quality).
 
 The ``logs`` table is a union of one branch per source plus one per
-orphan audit; each pipeline's log branch runs the NFKC pass once; and the
-encounters text file is scanned once for all four result tables. The
-plans are read before any action, walking each cache's plan once
-(internals.physical_plan_nodes), so a count here is the number of times
-the work runs when each cache is built once.
+orphan audit; no Python evaluation runs except the XML shred (F3 is a JVM
+expression); and the encounters text file is scanned once for all four
+result tables. The plans are read before any action, walking each
+cache's plan once (internals.physical_plan_nodes), so a count here is the
+number of times the work runs when each cache is built once.
 """
 
 from __future__ import annotations
@@ -47,35 +47,39 @@ def _logs_union(etl):
         if _cls(n) == "InMemoryTableScanExec"
     ]
     nodes = internals.physical_plan_nodes(internals.cached_plan(scan))
-    unions = [n for n in nodes if _cls(n) == "UnionExec"]
-    assert len(unions) == 1
-    return unions[0], nodes
+    (union,) = [n for n in nodes if _cls(n) == "UnionExec"]
+    return union
 
 
 def test_logs_union_has_one_branch_per_stream(etl):
-    union, _ = _logs_union(etl)
+    union = _logs_union(etl)
     # patients, encounters, diagnoses, orphan patient_id, orphan encounter_id
     assert len(internals.plan_children(union)) == 5
 
 
-def test_each_pipeline_log_stream_runs_nfkc_once(etl):
-    union, nodes = _logs_union(etl)
-    arrow = [
-        sum(_cls(n) == "ArrowEvalPythonExec" for n in internals.physical_plan_nodes(b))
-        for b in internals.plan_children(union)
-    ]
-    # the three pipeline branches explode a cached tagged frame and run one
-    # NFKC pass; the orphan audits read the cached clean tables
-    assert sorted(arrow) == [0, 0, 1, 1, 1]
-    assert sum(_cls(n) == "ArrowEvalPythonExec" for n in nodes) == 3
-
-
-def test_encounters_file_scanned_once(etl):
+def _all_nodes(etl):
+    """Every node of the four result tables' plans, each cache walked once."""
     seen: set[int] = set()
-    scans = [
+    return [
         n
         for df in etl.tables().values()
         for n in internals.physical_plan_nodes(_executed(df), seen)
+    ]
+
+
+def test_only_python_node_is_the_xml_shred(etl):
+    classes = [_cls(n) for n in _all_nodes(etl)]
+    for python_eval in (
+        "ArrowEvalPythonExec", "BatchEvalPythonExec", "FlatMapGroupsInPandasExec"
+    ):
+        assert python_eval not in classes
+    assert classes.count("MapInPandasExec") == 1
+
+
+def test_encounters_file_scanned_once(etl):
+    scans = [
+        n
+        for n in _all_nodes(etl)
         if _cls(n) == "FileSourceScanExec" and "encounters.csv" in str(n.toString())
     ]
     assert len(scans) == 1

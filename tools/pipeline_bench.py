@@ -1,9 +1,16 @@
-"""ETL-pipeline throughput bench: generate a large messy encounters CSV
-(the reference's most complex ingest path: mixed delimiters, repeated
-headers, blank lines, ragged rows, mixed timestamp formats, duplicates)
-and time the engine's full encounters pipeline on it.
+"""ETL throughput bench: the reference's whole batch job at scale.
 
-Run: python tools/pipeline_bench.py [n_rows]   (default 500_000)
+Generates the three messy sources with ``perfbench/gen_sources.py``
+(BOM/CRLF patients CSV with mixed units; encounters CSV with mixed
+delimiters, repeated headers, blank lines, ragged rows and five timestamp
+formats; namespaced diagnoses XML), about ``n_rows`` rows each, then times
+``run_etl(..., ri_audit=True)`` with all four tables written to Spark's
+``noop`` sink: every column of every table is computed, the F3 pass
+included, and nothing is stored. (A ``count()`` would prune the columns
+and skip most of the work.) The rows of each table and the log rows per
+reason are then checked against the generator's expected output.
+
+Run: python tools/pipeline_bench.py [n_rows] [seed]   (default 500000 1)
 """
 
 from __future__ import annotations
@@ -13,56 +20,51 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
 
-def generate(path: str, n: int) -> None:
-    fmts = [
-        "2025-01-{d:02d}T{h:02d}:00:00+01:00",
-        "01/{d:02d}/2025 {h:02d}:30",
-        "{d:02d}-01-2025 {h:02d}:15",
-        "2025/01/{d:02d} {h:02d}:45",
-        "2025-01-{d:02d} {h:02d}:00:00",
-    ]
-    types = ["INPATIENT", "OUTPATIENT", "ED", "TELE", ""]
-    with open(path, "w") as f:
-        f.write("encounter_id,patient_id,admit_dt,discharge_dt,encounter_type,source_file\n")
-        for i in range(n):
-            d, h = (i % 27) + 1, i % 23
-            admit = fmts[i % 5].format(d=d, h=h)
-            discharge = "" if i % 17 == 3 else fmts[(i + 1) % 5].format(d=d, h=(h + 1) % 23)
-            eid = f"E-{i - (i % 13 == 7):07d}"  # every 13th re-uses the prior id (dup)
-            row = f"{eid},P-{i % 100000:06d},{admit},{discharge},{types[i % 5]},f{i % 3}.csv"
-            if i % 11 == 5:
-                row = row.replace(",", ";") + ";EXTRA"  # semicolon + 7th field
-            f.write(row + "\n")
-            if i % 97 == 11:
-                f.write("\n")  # blank line
-            if i % 251 == 13:  # repeated interior header
-                f.write("encounter_id,patient_id,admit_dt,discharge_dt,encounter_type,source_file\n")
+def run(work: str, n: int, seed: int) -> bool:
+    """Generate the sources under ``work``, time one run, check its output."""
+    from gen_sources import generate
 
-
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
-    path = os.path.join(tempfile.mkdtemp(prefix="pipe_bench_"), "encounters_big.csv")
     t0 = time.perf_counter()
-    generate(path, n)
-    print(f"generated {n} rows ({os.path.getsize(path)/1e6:.1f} MB) in {time.perf_counter()-t0:.1f}s")
+    expected = generate(work, seed, n)
+    paths = expected["paths"]
+    print(f"generated {expected['input_rows']} input rows in "
+          f"{time.perf_counter() - t0:.1f}s")
 
-    from assignment_etl_spark.pipelines import encounters
+    from assignment_etl_spark.caching import release_scoped_caches
+    from assignment_etl_spark.pipelines.runner import run_etl
     from assignment_etl_spark.session import get_spark
 
     spark = get_spark("pipeline-bench")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
-    clean, logs = encounters.run(spark, path, persist_intermediates=True)
-    n_clean = clean.count()
-    n_logs = logs.count()
+    res = run_etl(spark, paths["patients"], paths["encounters"], paths["diagnoses"],
+                  ri_audit=True)
+    for df in res.tables().values():
+        df.write.format("noop").mode("overwrite").save()
     dt = time.perf_counter() - t0
-    print(
-        f"engine encounters pipeline: {n_clean} clean rows + {n_logs} log rows "
-        f"in {dt:.1f}s = {n / dt / 1e3:.0f}k rows/s"
-    )
+
+    # the tables are cached now, so the checks rerun none of the work
+    rows = {name: df.count() for name, df in res.tables().items()}
+    reasons = dict(res.logs.groupBy("reason").count().collect())
+    release_scoped_caches()
+    ok = rows == expected["clean"] and reasons == expected["reasons"]
+    print(f"run_etl (ri_audit) + noop write: {rows} in {dt:.1f}s = "
+          f"{expected['input_rows'] / dt / 1e3:.1f}k input rows/s; "
+          f"output check {'passed' if ok else 'FAILED'}")
+    return ok
+
+
+def main() -> None:
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
+    seed = int(sys.argv[2]) if len(sys.argv) > 2 else 1
+    with tempfile.TemporaryDirectory(prefix="pipe_bench_") as work:
+        ok = run(work, n, seed)
+    sys.exit(0 if ok else 1)
 
 
 if __name__ == "__main__":
