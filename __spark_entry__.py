@@ -920,7 +920,7 @@ FROM events GROUP BY 1, 2 ORDER BY 1, 2
 
 def q_unit_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The F1 scalar library exercised at scale: synthesize mixed-unit
-    height strings from lineitem quantities, normalize with height_to_cm,
+    height strings from lineitem quantities, normalize with with_height_cm,
     aggregate exactly."""
     from assignment_etl_spark.ops.units import with_height_cm
 
@@ -5070,7 +5070,7 @@ def q_incremental_minhash_documents(spark: SparkSession, sf_dir: str) -> DataFra
     # oracle hash are unchanged.
     all_sig = _sig_frame(
         docs, text_col="text", id_col="doc_id", num_hashes=32,
-        shingle_n=5, use_numpy=True, portable=True, seed=7,
+        shingle_n=5, portable=True, seed=7,
     )
     hist_sig = all_sig.filter(F.col("_id") % 2 == 0)
     batch_sig = all_sig.filter(F.col("_id") % 2 == 1)
@@ -5259,7 +5259,7 @@ def q_band_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §4); deterministic signatures ⇒ identical index content
     all_sig = _sig_frame(
         docs, text_col="text", id_col="doc_id", num_hashes=32,
-        shingle_n=5, use_numpy=True, portable=True, seed=7,
+        shingle_n=5, portable=True, seed=7,
     )
     hist_sig = all_sig.filter(F.col("_id") % 2 == 0)
     batch_sig = all_sig.filter(F.col("_id") % 2 == 1)

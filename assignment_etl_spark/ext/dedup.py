@@ -152,11 +152,10 @@ def make_minhash_signature_udf(
     over byte n-grams (sliding_window_view · powers, uint64 wraparound —
     deterministic everywhere), then min over (a·h + b) per permutation.
 
-    This is the hot path for corpus-scale dedup: the JVM expression variant
-    (minhash_signature) re-evaluates a ~num_hashes×shingles expression tree
-    per row in interpreted mode (the tree exceeds codegen limits); the numpy
-    path is one BLAS-shaped pass per Arrow batch, ~100× faster, and the
-    signature column it produces feeds the same JVM-side banding join.
+    The non-portable signature pass of corpus-scale dedup: one BLAS-shaped
+    pass per Arrow batch, its column feeding the JVM-side banding join. A
+    JVM-expression signature (a num_hashes × shingles tree per row, past
+    codegen limits, so interpreted) measured about 100× slower.
     """
     rng = np.random.RandomState(seed)
     a = (rng.randint(1, 1 << 61, size=num_hashes).astype(np.uint64) | np.uint64(1))
@@ -187,22 +186,6 @@ def make_minhash_signature_udf(
         return pd.Series(out)
 
     return minhash_sig
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 32, seed: int = 7) -> Column:
-    """num_hashes minhash values: min over shingles of (a*x + b) mod p.
-    JVM-expression variant — prefer make_minhash_signature_udf for large
-    corpora (see its docstring)."""
-    sigs = []
-    rnd = _perm_params(num_hashes, seed)
-    for a, b in rnd:
-        hashed = F.transform(
-            shingle_col,
-            lambda x: (F.lit(a) * (x.bitwiseAND(F.lit((1 << 31) - 1))) + F.lit(b))
-            % F.lit(MERSENNE),
-        )
-        sigs.append(F.array_min(hashed))
-    return F.array(*sigs)
 
 
 def _perm_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
@@ -303,7 +286,6 @@ def _sig_frame(
     id_col: str,
     num_hashes: int,
     shingle_n: int,
-    use_numpy: bool,
     portable: bool,
     seed: int,
     fan_out: bool = True,
@@ -362,18 +344,10 @@ def _sig_frame(
         cps.unpersist()
         grams.unpersist()
         return sig  # already persisted + materialized above
-    elif use_numpy:
-        sig_udf = make_minhash_signature_udf(num_hashes, shingle_n, seed)
-        sig = df.select(
-            F.col(id_col).alias("_id"), sig_udf(F.col(text_col)).alias("_sig")
-        )
-    else:
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(
-                shingles(F.col(text_col), shingle_n), num_hashes, seed
-            ).alias("_sig"),
-        )
+    sig_udf = make_minhash_signature_udf(num_hashes, shingle_n, seed)
+    sig = df.select(
+        F.col(id_col).alias("_id"), sig_udf(F.col(text_col)).alias("_sig")
+    )
     from assignment_etl_spark.caching import scoped_persist
 
     return scoped_persist(sig)
@@ -436,7 +410,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 5,
     jaccard_threshold: float = 0.5,
-    use_numpy: bool = True,
     portable: bool = False,
     seed: int = 7,
 ) -> DataFrame:
@@ -458,7 +431,6 @@ def minhash_lsh_pairs(
         id_col=id_col,
         num_hashes=num_hashes,
         shingle_n=shingle_n,
-        use_numpy=use_numpy,
         portable=portable,
         seed=seed,
     )
@@ -664,7 +636,6 @@ def build_band_store(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 5,
-    use_numpy: bool = True,
     portable: bool = False,
     seed: int = 7,
     signatures: DataFrame | None = None,
@@ -700,7 +671,6 @@ def build_band_store(
             id_col=id_col,
             num_hashes=num_hashes,
             shingle_n=shingle_n,
-            use_numpy=use_numpy,
             portable=portable,
             seed=seed,
         )
@@ -813,7 +783,6 @@ def incremental_minhash_dedup(
     shingle_n: int = 5,
     jaccard_threshold: float = 0.5,
     verify: bool = True,
-    use_numpy: bool = True,
     portable: bool = False,
     seed: int = 7,
     eager: bool = True,
@@ -902,7 +871,6 @@ def incremental_minhash_dedup(
             id_col=id_col,
             num_hashes=num_hashes,
             shingle_n=shingle_n,
-            use_numpy=use_numpy,
             portable=portable,
             seed=seed,
         )
@@ -1038,8 +1006,7 @@ def incremental_minhash_dedup(
                     id_col=id_col,
                     num_hashes=num_hashes,
                     shingle_n=shingle_n,
-                    use_numpy=use_numpy,
-                    portable=portable,
+                            portable=portable,
                     seed=seed,
                     fan_out=False,  # semi-join output is already parallel
                 )

@@ -15,18 +15,10 @@ from assignment_etl_spark.ops.dedup import with_row_id
 from assignment_etl_spark.ops.strings import normalize_column_names
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    *,
-    header: bool = True,
-    trim_cells: bool = True,
-) -> DataFrame:
-    reader = spark.read.option("header", header).option("encoding", "UTF-8")
+def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
+    """Header CSV → normalized column names, every cell trimmed (F14, one
+    projection), source-order ``_row_id``."""
+    reader = spark.read.option("header", True).option("encoding", "UTF-8")
     df = reader.schema(schema).csv(path) if schema is not None else reader.csv(path)
     df = normalize_column_names(df)
-    if trim_cells:
-        for c in df.columns:
-            df = df.withColumn(c, F.trim(F.col(c)))
-    return with_row_id(df)
+    return with_row_id(df.withColumns({c: F.trim(F.col(c)) for c in df.columns}))

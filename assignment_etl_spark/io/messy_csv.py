@@ -22,19 +22,13 @@ from assignment_etl_spark.ops.dedup import with_row_id
 from assignment_etl_spark.schemas import ROW_ID
 
 
-def read_messy_csv(
-    spark: SparkSession,
-    path: str,
-    columns: list[str],
-    *,
-    header_prefix: str | None = None,
-) -> DataFrame:
+def read_messy_csv(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:
     """Parse a mixed-delimiter CSV into a fixed set of string columns.
 
-    header_prefix defaults to the first column name — any line that starts
-    with it (case-insensitive) is treated as a repeated header and skipped.
+    Any line that starts with the first column name (case-insensitive) is
+    a repeated header and is skipped.
     """
-    prefix = (header_prefix or columns[0]).lower()
+    prefix = columns[0].lower()
     line = F.trim(F.col("value"))
     lines = (
         with_row_id(spark.read.text(path))

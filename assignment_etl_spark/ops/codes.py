@@ -9,10 +9,10 @@ reference (mapped_code for missing/invalid, cleaned_value for U → SURVEY §1.4
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.ops.quality import issue, issue_logs
+from assignment_etl_spark.ops.quality import issue
 
 ISO5218 = {"M": 1, "F": 2, "U": 0, "O": 9}
 
@@ -40,27 +40,20 @@ def sex_log_reason(col: Column) -> Column:
     )
 
 
-def sex_issue(column: str = "sex", filename: str = "patients.csv") -> Column:
+def sex_issue() -> Column:
     """F4's log entry: every row that maps to 0 (see sex_log_reason)."""
-    reason = sex_log_reason(F.col(column))
+    reason = sex_log_reason(F.col("sex"))
     return issue(
         reason.isNotNull(),
         patient_id=F.col("patient_id"),
-        filename=filename,
-        original_value=F.col(column),
+        filename="patients.csv",
+        original_value=F.col("sex"),
         # reference quirk kept: missing/invalid branches write mapped_code,
         # the U branch writes cleaned_value (etl.py:333-363)
         mapped_code=F.when(reason.isin("missing_value", "invalid_code"), "0"),
         cleaned_value=F.when(reason == "unknown_or_missing", "0"),
         reason=reason,
     )
-
-
-def map_sex(
-    df: DataFrame, column: str = "sex", filename: str = "patients.csv"
-) -> tuple[DataFrame, DataFrame]:
-    clean = df.withColumn("sex_iso", sex_to_iso5218(F.col(column)))
-    return clean, issue_logs(df, sex_issue(column, filename))
 
 
 def enum_invalid(column: str, valid: list[str]) -> Column:
@@ -70,41 +63,16 @@ def enum_invalid(column: str, valid: list[str]) -> Column:
     return col.isNull() | ~col.isin(*valid)
 
 
-def enum_issue(
-    invalid: Column,
-    column: str,
-    filename_col: str = "source_file",
-    id_col: str = "patient_id",
-) -> Column:
+def enum_issue(invalid: Column, column: str) -> Column:
+    """P5's log entry; the filename is the row's raw ``source_file``."""
     return issue(
         invalid,
-        patient_id=F.col(id_col),
-        filename=F.col(filename_col),
+        patient_id=F.col("patient_id"),
+        filename=F.col("source_file"),
         column_name=column,
         original_value=F.col(column),
         reason="invalid_" + column,
     )
-
-
-def validate_enum(
-    df: DataFrame,
-    column: str,
-    valid: list[str],
-    fill: str = "UNKNOWN",
-    filename_col: str = "source_file",
-    id_col: str = "patient_id",
-) -> tuple[DataFrame, DataFrame]:
-    """P5: rows whose ``column`` is outside ``valid`` are logged then filled.
-
-    Reference: etl.py:577-588 (valid after lowercasing; fill is upper-case
-    "UNKNOWN", lowercased later by the final normalize pass — order kept).
-    """
-    invalid = enum_invalid(column, valid)
-    logs = issue_logs(df, enum_issue(invalid, column, filename_col, id_col))
-    clean = df.withColumn(
-        column, F.when(invalid, F.lit(fill)).otherwise(F.col(column))
-    )
-    return clean, logs
 
 
 def coerce_bool(col: Column) -> Column:

@@ -75,48 +75,28 @@ def parse_timestamp_multi(
     return F.coalesce(*[F.to_timestamp(s, f) for f in formats])
 
 
-def dob_issue(
-    parsed: Column, column: str = "dob", filename: str = "patients.csv"
-) -> Column:
-    """F5's log entry, given the parsed value of ``column``.
+def dob_issue(parsed: Column) -> Column:
+    """F5's log entry, given the parsed value of ``dob``.
 
     Blank or whitespace-only strings are non-null, so they log
     ``unparseable_date`` not ``missing_value`` — matching the verified
     reference behavior for patient P-0004 (SURVEY §2.5 F5).
     """
-    raw = F.col(column)
+    raw = F.col("dob")
     reason = F.when(raw.isNull(), F.lit("missing_value")).when(
         parsed.isNull(), F.lit("unparseable_date")
     )
     return issue(
         reason.isNotNull(),
         patient_id=F.col("patient_id"),
-        filename=filename,
-        column_name=column,
+        filename="patients.csv",
+        column_name="dob",
         original_value=raw,
         reason=reason,
     )
 
 
-def parse_dob(
-    df: DataFrame,
-    column: str = "dob",
-    filename: str = "patients.csv",
-    formats: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """F5: multi-format date parse with missing/unparseable logging."""
-    parsed = parse_timestamp_multi(F.col(column), formats or DATE_FORMATS)
-    clean = df.withColumn(column + "_parsed", parsed)
-    return clean, issue_logs(df, dob_issue(parsed, column, filename))
-
-
-def with_parsed_datetimes(
-    df: DataFrame,
-    columns: list[str],
-    filename: str = "encounters.csv",
-    id_col: str = "patient_id",
-    formats: list[str] | None = None,
-) -> DataFrame:
+def with_parsed_datetimes(df: DataFrame, columns: list[str]) -> DataFrame:
     """F6: UTC-normalizing timestamp parse over several columns, each
     column's log entry staged beside it as ``_<column>_issue``.
 
@@ -126,12 +106,11 @@ def with_parsed_datetimes(
     inlined, the two regexp_replaces would re-run inside every
     to_timestamp attempt, and the 13-format lattice once per consumer.
     """
-    formats = formats or DATETIME_FORMATS
     out = df.withColumns({f"_{c}_pre": _ts_preprocess(F.col(c)) for c in columns})
     out = out.withColumns(
         {
             f"_{c}_ts": parse_timestamp_multi(
-                F.col(f"_{c}_pre"), formats, preprocessed=True
+                F.col(f"_{c}_pre"), DATETIME_FORMATS, preprocessed=True
             )
             for c in columns
         }
@@ -142,8 +121,8 @@ def with_parsed_datetimes(
         blank = raw.isNull() | (F.col(f"_{c}_pre") == "")
         staged[f"_{c}_issue"] = issue(
             ~blank & parsed.isNull(),
-            patient_id=F.col(id_col),
-            filename=filename,
+            patient_id=F.col("patient_id"),
+            filename="encounters.csv",
             column_name=c,
             original_value=raw,
             reason="invalid_datetime_format",
@@ -155,14 +134,10 @@ def with_parsed_datetimes(
 
 
 def parse_datetime_columns(
-    df: DataFrame,
-    columns: list[str],
-    filename: str = "encounters.csv",
-    id_col: str = "patient_id",
-    formats: list[str] | None = None,
+    df: DataFrame, columns: list[str]
 ) -> tuple[DataFrame, DataFrame]:
     """F6 as a (clean, logs) pair — see :func:`with_parsed_datetimes`."""
-    out = with_parsed_datetimes(df, columns, filename, id_col, formats)
+    out = with_parsed_datetimes(df, columns)
     issues = [f"_{c}_issue" for c in columns]
     logs = issue_logs(out, *[F.col(i) for i in issues])
     return out.drop(*issues), logs

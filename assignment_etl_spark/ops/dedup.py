@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.ops.quality import KEEP, issue, issue_logs
+from assignment_etl_spark.ops.quality import KEEP, issue
 from assignment_etl_spark.schemas import ROW_ID
 
 
@@ -29,15 +29,6 @@ def with_row_id(df: DataFrame) -> DataFrame:
     read (partition index rides the high bits, so ids are monotone in file
     order); must happen before any shuffle."""
     return df.withColumn(ROW_ID, F.monotonically_increasing_id())
-
-
-def keep_first(df: DataFrame, keys: list[str], order_col: str = ROW_ID) -> DataFrame:
-    w = Window.partitionBy(*keys).orderBy(order_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def mark_duplicates(
@@ -79,42 +70,6 @@ def duplicate_issue(
     )
 
 
-def dedup_with_log(
-    df: DataFrame,
-    keys: list[str],
-    *,
-    order_col: str = ROW_ID,
-    log_all_members: bool = False,
-    filename_col=None,
-    id_col: str = "patient_id",
-    column_name: str | None = None,
-    reason: str = "duplicate_removed",
-    original_value_col=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Keep-first dedup + duplicate log stream.
-
-    log_all_members=False logs only the dropped rows (patients D1 policy,
-    etl.py:451-460); True logs every member of each duplicate group while
-    still dropping only the non-first (encounters D2, keep=False at
-    etl.py:539-549 — verified: both enc-000101 copies logged, one dropped).
-    """
-    marked = mark_duplicates(df, keys, order_col)
-    logs = issue_logs(
-        marked,
-        duplicate_issue(
-            keys,
-            log_all_members=log_all_members,
-            filename_col=filename_col,
-            id_col=id_col,
-            column_name=column_name,
-            reason=reason,
-            original_value_col=original_value_col,
-        ),
-    )
-    clean = marked.filter(F.col("_rn") == 1).drop("_rn", "_grp")
-    return clean, logs
-
-
 def mark_patient_duplicates(df: DataFrame) -> DataFrame:
     """D1's two marks (etl.py:430-490): ``_dup``, the duplicate_removed log
     mask, and ``_keep``, the survivor of the keep-first drops by id and then
@@ -152,28 +107,18 @@ def mark_patient_duplicates(df: DataFrame) -> DataFrame:
     ).drop("_id_first")
 
 
-def patient_dup_issue(filename: str = "patients.csv") -> Column:
+def patient_dup_issue() -> Column:
     """D1's log entry over a :func:`mark_patient_duplicates` frame."""
     return issue(
         F.col("_dup"),
         patient_id=F.col("patient_id"),
-        filename=filename,
+        filename="patients.csv",
         column_name="duplicate_entry",
         original_value=F.to_json(
             F.struct("given_name", "family_name", "dob", "height_cm", "weight_kg")
         ),
         reason="duplicate_removed",
     )
-
-
-def patient_dedup(
-    df: DataFrame, filename: str = "patients.csv"
-) -> tuple[DataFrame, DataFrame]:
-    """D1: drop rows duplicated by id OR by person key, both keep-first
-    (see :func:`mark_patient_duplicates`)."""
-    marked = mark_patient_duplicates(df)
-    logs = issue_logs(marked, patient_dup_issue(filename))
-    return marked.filter(F.col(KEEP)).drop("_dup", KEEP), logs
 
 
 def dedup_within_window(
@@ -192,7 +137,7 @@ def dedup_within_window(
     from ops/timeseries.sessionize with the key as the session scope).
 
     One shuffle on the key; pass ``order_cols`` with a unique
-    tie-breaker for determinism under ts ties. Contrast keep_first
+    tie-breaker for determinism under ts ties. Contrast mark_duplicates
     (exact-duplicate dedup, no time dimension).
     """
     from pyspark.sql.window import Window as _W

@@ -16,9 +16,11 @@ superset schema (schemas.LOG_SCHEMA) and union via
 ``unionByName(allowMissingColumns=True)``, which reproduces pandas'
 union-of-keys semantics deterministically.
 
-The single-rule ``ops`` operators (``map_sex``, ``parse_dob``, ...) keep
-their (clean, logs) pair signature as thin wrappers over the same issue
-Columns, for composing one rule at a time.
+Each rule has this one form: the ``ops`` modules export its value Column
+(or staged operator) and its issue Column (``sex_issue``, ``dob_issue``,
+``duplicate_issue``, ...). The one (clean, logs) DataFrame pair left,
+``dates.parse_datetime_columns``, wraps ``with_parsed_datetimes`` for the
+per-layer trace of ``perfbench/tracing.py``.
 """
 
 from __future__ import annotations

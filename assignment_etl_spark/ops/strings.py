@@ -1,4 +1,4 @@
-"""String normalization: column-name cleanup (P1), NFKC+lowercase (F3), trim.
+"""String normalization: column-name cleanup (P1) and NFKC+lowercase (F3).
 
 F3 (reference clean_utf8, /root/reference/etl.py:190-198) re-encodes UTF-8
 with replacement, NFKC-normalizes, lowercases — applied to *every* string
@@ -57,16 +57,6 @@ def normalize_strings(df: DataFrame, columns: list[str] | None = None) -> DataFr
     if columns is None:
         columns = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
     return df.withColumns({c: nfkc_lower(F.col(c)) for c in columns})
-
-
-def trim_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """F14: whitespace strip over string columns (etl.py:84)."""
-    if columns is None:
-        columns = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    out = df
-    for c in columns:
-        out = out.withColumn(c, F.trim(F.col(c)))
-    return out
 
 
 def nfkc_lower_py(s: str | None) -> str | None:

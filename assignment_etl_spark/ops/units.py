@@ -11,13 +11,13 @@ Codegen note (the load-bearing design decision here): written as one
 monolithic Column, these ~40-branch chains inline the regex/normalize
 subtrees into every branch — the generated Java method passes 64 KB, janino
 refuses, and Spark falls back to interpreted eval which re-evaluates each
-regex per reference (~10× slower). The staged operators
-(``with_height_cm`` / ``with_weight_struct``) therefore compute the
-expensive primitives (lowercase/trim, number extraction, BMI denominator)
-as named columns in a *separate projection*; CollapseProject keeps the
-stages apart (non-cheap aliases referenced more than once), each stage
-codegens small, and every regex runs exactly once per row. The plain
-Column builders remain for expression-level composition and tests.
+regex per reference (~10× slower). F1 and F2 therefore exist only as
+staged operators (``with_height_cm`` / ``with_weight_struct``, what the
+patients pipeline runs): they compute the expensive primitives
+(lowercase/trim, number extraction, BMI denominator) as named columns in a
+*separate projection*; CollapseProject keeps the stages apart (non-cheap
+aliases referenced more than once), each stage codegens small, and every
+regex runs exactly once per row.
 
 Verified goldens (SURVEY §5.3): "68 in"→172.72, "5ft 6in"→167.64,
 "1.75"→175.0, "162"→162.0; ("300 kg", 220cm)→(300.0, implausible_bmi_62.0);
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.ops.quality import issue, issue_logs
+from assignment_etl_spark.ops.quality import issue
 
 LB_TO_KG = 0.453592
 FIRST_NUM = r"([\d.]+)"
@@ -65,19 +65,6 @@ def _height_decision(
 
 def _num(col: Column, pattern: str, group: int = 1) -> Column:
     return F.nullif(F.regexp_extract(col, pattern, group), F.lit("")).cast("double")
-
-
-def height_to_cm(col: Column) -> Column:
-    """F1 as a single Column (compose-anywhere variant; prefer
-    with_height_cm on wide scans — see module docstring)."""
-    s = F.lower(F.trim(col.cast("string")))
-    return _height_decision(
-        col,
-        s,
-        _num(s, FIRST_NUM),
-        _num(s, r"^(\d+)\s*(?:ft|')"),
-        _num(s, r"^(?:\d+)\s*(?:ft|')\s*(\d+)"),
-    )
 
 
 def with_height_cm(
@@ -182,22 +169,6 @@ def _weight_final(
     )
 
 
-def _weight_decision(raw: Column, s: Column, val: Column, h2: Column) -> Column:
-    """The F2 branch chain as ONE Column (compose-anywhere/test variant —
-    the staged operator projects the base pass separately; see _weight_base)."""
-    base_w, base_reason = _weight_base(s, val, h2)
-    return _weight_final(raw, s, val, h2, base_w, base_reason)
-
-
-def weight_to_kg_struct(weight_col: Column, height_cm_col: Column) -> Column:
-    """F2 as a single Column → struct(weight_kg, flagged, reason)
-    (compose-anywhere variant; prefer with_weight_struct on wide scans)."""
-    s = F.lower(F.trim(weight_col.cast("string")))
-    val = _num(s, FIRST_NUM)
-    h2 = F.pow(height_cm_col / 100.0, F.lit(2.0))
-    return _weight_decision(weight_col, s, val, h2)
-
-
 def with_weight_struct(
     df: DataFrame,
     column: str = "weight",
@@ -231,49 +202,18 @@ def with_weight_struct(
     )
 
 
-# ------------------------------------------------------------- operator forms
+# ------------------------------------------------------------------ F2 log
 
 
-def normalize_heights(df: DataFrame, column: str = "height") -> DataFrame:
-    """Derive ``height_cm``. The reference never logs height issues
-    (acknowledged TODO at etl.py:666) — parity kept; see normalize_weights
-    for the logged pattern."""
-    return with_height_cm(df, column)
-
-
-def weight_issue(
-    column: str = "weight", filename: str = "patients.csv", struct_col: str = "_w"
-) -> Column:
-    """F2's log entry over the ``with_weight_struct`` result column."""
-    w = F.col(struct_col)
+def weight_issue() -> Column:
+    """F2's log entry over the ``with_weight_struct`` result column ``_w``."""
+    w = F.col("_w")
     return issue(
         w["flagged"],
         patient_id=F.col("patient_id"),
-        filename=filename,
-        original_value=F.col(column),
+        filename="patients.csv",
+        original_value=F.col("weight"),
         cleaned_value=w["weight_kg"],
-        column_name=column,
+        column_name="weight",
         reason=w["reason"],
     )
-
-
-def normalize_weights(
-    df: DataFrame,
-    column: str = "weight",
-    height_col: str = "height_cm",
-    filename: str = "patients.csv",
-    persist: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Derive ``weight_kg`` + the flagged-row log stream (etl.py:287-308).
-
-    ``persist`` caches the struct stage — the shared base of BOTH outputs —
-    so materializing both runs the F2 chain once; leave False for
-    single-output composition. (The pipelines tag the struct stage
-    instead: pipelines/patients.py.)"""
-    with_struct = with_weight_struct(df, column, height_col, out="_w")
-    if persist:
-        from assignment_etl_spark.caching import scoped_persist
-
-        with_struct = scoped_persist(with_struct)
-    clean = with_struct.withColumn("weight_kg", F.col("_w.weight_kg")).drop("_w")
-    return clean, issue_logs(with_struct, weight_issue(column, filename))

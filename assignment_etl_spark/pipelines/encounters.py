@@ -32,19 +32,14 @@ DATETIME_COLUMNS = ["admit_dt", "discharge_dt"]
 
 
 def clean_encounters(
-    raw: DataFrame,
-    *,
-    filename: str = "encounters.csv",
-    persist_intermediates: bool = False,
+    raw: DataFrame, *, persist_intermediates: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """raw → (clean encounters, log stream), both projections of one tagged
     frame (see ops.quality). persist_intermediates caches that frame, so the
     messy-CSV split, the first NFKC pass, the 13-format timestamp lattice
     and the dedup window run once for both outputs."""
     df = with_parsed_datetimes(
-        normalize_strings(raw, ENCOUNTER_COLUMNS),
-        DATETIME_COLUMNS,
-        filename=filename,
+        normalize_strings(raw, ENCOUNTER_COLUMNS), DATETIME_COLUMNS
     )
     df = mark_duplicates(df, ["encounter_id"])
 
@@ -57,7 +52,7 @@ def clean_encounters(
     # default) returns NaN — NOT the default — when the column exists with a
     # missing value, because Series.get only falls back on an absent KEY. So
     # every log entry after the parse carries the RAW source_file (NULL
-    # stays NULL), consistent with validate_enum's behavior.
+    # stays NULL), as enum_issue does.
     src_file = F.col("source_file")
     discharge_log = {"patient_id": F.col("patient_id"), "filename": src_file,
                      "column_name": "discharge_dt"}

@@ -18,22 +18,19 @@ from assignment_etl_spark.ops.dates import DATE_FORMATS, dob_issue
 from assignment_etl_spark.ops.dates import parse_timestamp_multi
 from assignment_etl_spark.ops.dedup import mark_patient_duplicates, patient_dup_issue
 from assignment_etl_spark.ops.quality import ISSUES, tag_issues, tagged_outputs
-from assignment_etl_spark.ops.units import normalize_heights, weight_issue
+from assignment_etl_spark.ops.units import weight_issue, with_height_cm
 from assignment_etl_spark.ops.units import with_weight_struct
 from assignment_etl_spark.schemas import PATIENTS_CLEAN, PATIENTS_RAW
 
 
 def clean_patients(
-    raw: DataFrame,
-    *,
-    filename: str = "patients.csv",
-    persist_intermediates: bool = False,
+    raw: DataFrame, *, persist_intermediates: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """raw (string cols + _row_id) → (clean patients, log stream), both
     projections of one tagged frame (see ops.quality) that
     persist_intermediates caches, so the F2 chain and the two dedup windows
     run once for both outputs."""
-    df = with_weight_struct(normalize_heights(raw))
+    df = with_weight_struct(with_height_cm(raw))
     df = mark_patient_duplicates(
         df.withColumns(
             {
@@ -47,10 +44,10 @@ def clean_patients(
         *PATIENTS_CLEAN.fieldNames(),
         F.col("_keep"),
         tag_issues(
-            weight_issue(filename=filename),
-            sex_issue(filename=filename),
-            dob_issue(F.col("dob_parsed"), filename=filename),
-            patient_dup_issue(filename),
+            weight_issue(),
+            sex_issue(),
+            dob_issue(F.col("dob_parsed")),
+            patient_dup_issue(),
         ).alias(ISSUES),
     )
     return tagged_outputs(tagged, PATIENTS_CLEAN, persist=persist_intermediates)

@@ -4,7 +4,9 @@ Postgres, etl.py:711-719).
 
 Each pipeline persists one tagged frame per source (ops.quality), so the
 ``logs`` table is a union of five branches — one per source, one per orphan
-audit — over caches. Every cache a run makes is a caching.scoped_persist:
+audit — over caches. The result tables are projections of those caches
+and are not cached themselves. Every cache a run makes (the three tagged
+frames and the XML wholetext scan) is a caching.scoped_persist:
 ``release_scoped_caches()`` after the last action on the result frees all.
 """
 
@@ -13,9 +15,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
-from assignment_etl_spark.caching import scoped_persist
 from assignment_etl_spark.ops.quality import orphan_check, union_logs
 from assignment_etl_spark.pipelines import diagnoses, encounters, patients
 
@@ -42,7 +42,6 @@ def run_etl(
     encounters_path: str,
     diagnoses_path: str,
     *,
-    persist: bool = True,
     ri_audit: bool = False,
 ) -> EtlResult:
     """Full batch run. ``ri_audit=True`` adds the referential-integrity
@@ -50,12 +49,12 @@ def run_etl(
     not in patients) and orphan diagnoses (encounter_id not in encounters)
     are reported to the logs table — the data itself still flows through
     unchanged, matching reference behavior."""
-    p_clean, p_logs = patients.run(spark, patients_path, persist_intermediates=persist)
+    p_clean, p_logs = patients.run(spark, patients_path, persist_intermediates=True)
     e_clean, e_logs = encounters.run(
-        spark, encounters_path, persist_intermediates=persist
+        spark, encounters_path, persist_intermediates=True
     )
     d_clean, d_logs = diagnoses.run(
-        spark, diagnoses_path, persist_intermediates=persist
+        spark, diagnoses_path, persist_intermediates=True
     )
     log_parts = [p_logs, e_logs, d_logs]
     if ri_audit:
@@ -65,12 +64,7 @@ def run_etl(
             orphan_check(d_clean, e_clean, "encounter_id", "encounter_id",
                          filename="diagnoses.xml"),
         ]
-    logs = union_logs(*log_parts)
-    result = EtlResult(p_clean, e_clean, d_clean, logs)
-    if persist:
-        for df in result.tables().values():
-            scoped_persist(df, StorageLevel.MEMORY_AND_DISK)
-    return result
+    return EtlResult(p_clean, e_clean, d_clean, union_logs(*log_parts))
 
 
 def write_parquet_store(result: EtlResult, base_path: str) -> None:

@@ -404,7 +404,7 @@ def build_queries(spark) -> dict:
         batch = docs.filter(F.col("doc_id") % 2 == 1)
         all_sig = _sig_frame(
             docs, text_col="text", id_col="doc_id", num_hashes=32,
-            shingle_n=5, use_numpy=True, portable=False, seed=7,
+            shingle_n=5, portable=False, seed=7,
         )
         hist_sig = all_sig.filter(F.col("_id") % 2 == 0)
         batch_sig = all_sig.filter(F.col("_id") % 2 == 1)

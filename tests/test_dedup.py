@@ -1,15 +1,36 @@
-"""D1-D3 deterministic keep-first dedup."""
+"""D1-D3 deterministic keep-first dedup, through the marks and issue
+Columns the pipelines run (``mark_duplicates`` / ``duplicate_issue`` for
+encounters and diagnoses, ``mark_patient_duplicates`` /
+``patient_dup_issue`` for patients)."""
 
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.ops.dedup import dedup_with_log, keep_first, patient_dedup
+from assignment_etl_spark.ops.dedup import (
+    duplicate_issue,
+    mark_duplicates,
+    mark_patient_duplicates,
+    patient_dup_issue,
+)
+from assignment_etl_spark.ops.quality import KEEP, issue_logs
 from assignment_etl_spark.schemas import ROW_ID
+
+PATIENT_COLS = (
+    f"{ROW_ID} long, patient_id string, given_name string, family_name string,"
+    " dob string, height_cm double, weight_kg double"
+)
+
+
+def _patient_dedup(df):
+    """(survivors, log stream) of D1, as clean_patients derives them."""
+    marked = mark_patient_duplicates(df)
+    return marked.filter(F.col(KEEP)), issue_logs(marked, patient_dup_issue())
 
 
 def test_keep_first_is_deterministic(spark):
     rows = [(i, "k" if i % 2 == 0 else "j", f"v{i}") for i in range(100)]
     df = spark.createDataFrame(rows, f"{ROW_ID} long, key string, val string")
-    out = {r.key: r.val for r in keep_first(df, ["key"]).collect()}
+    kept = mark_duplicates(df, ["key"]).filter(F.col("_rn") == 1)
+    out = {r.key: r.val for r in kept.collect()}
     assert out == {"k": "v0", "j": "v1"}  # first in source order, always
 
 
@@ -18,13 +39,17 @@ def test_dedup_log_all_members(spark):
         [(0, "a", "p1", "f1"), (1, "b", "p2", "f1"), (2, "a", "p3", "f2")],
         f"{ROW_ID} long, encounter_id string, patient_id string, source_file string",
     )
-    clean, logs = dedup_with_log(
-        df,
-        ["encounter_id"],
-        log_all_members=True,
-        filename_col=F.col("source_file"),
-        column_name="encounter_id",
-        reason="duplicate_encounter_id",
+    marked = mark_duplicates(df, ["encounter_id"])
+    clean = marked.filter(F.col("_rn") == 1)
+    logs = issue_logs(
+        marked,
+        duplicate_issue(
+            ["encounter_id"],
+            log_all_members=True,
+            filename_col=F.col("source_file"),
+            column_name="encounter_id",
+            reason="duplicate_encounter_id",
+        ),
     )
     assert clean.count() == 2
     kept = {r.encounter_id: r.patient_id for r in clean.collect()}
@@ -36,10 +61,6 @@ def test_dedup_log_all_members(spark):
 
 
 def test_patient_dedup_policies(spark):
-    cols = (
-        f"{ROW_ID} long, patient_id string, given_name string, family_name string,"
-        " dob string, height_cm double, weight_kg double"
-    )
     rows = [
         (0, "p1", "Ana", "G", "1991-02-03", 170.0, 65.0),
         (1, "p1", "Ann", "G", "1991-02-03", 171.0, 66.0),  # id dup → dropped
@@ -47,7 +68,7 @@ def test_patient_dedup_policies(spark):
         (3, "p3", "Bob", "H", "12/31/1990", 180.0, 80.0),
         (4, "p4", "Bob", "H", "1990-12-31", 180.0, 80.0),  # raw dob differs → NOT dup
     ]
-    clean, logs = patient_dedup(spark.createDataFrame(rows, cols))
+    clean, logs = _patient_dedup(spark.createDataFrame(rows, PATIENT_COLS))
     assert {r.patient_id for r in clean.collect()} == {"p1", "p3", "p4"}
     lg = logs.collect()
     assert len(lg) == 2
@@ -57,16 +78,12 @@ def test_patient_dedup_policies(spark):
 def test_patient_dedup_sequential_quirk(spark):
     """A person-dup of a row dropped as an id-dup is logged but survives
     (reference computes log masks on the full frame, drops sequentially)."""
-    cols = (
-        f"{ROW_ID} long, patient_id string, given_name string, family_name string,"
-        " dob string, height_cm double, weight_kg double"
-    )
     rows = [
         (0, "p1", "A", "B", "d", 170.0, 65.0),
         (1, "p1", "Z", "Z", "zd", 150.0, 50.0),  # id dup of row0 → dropped
         (2, "p9", "Z", "Z", "zd", 150.0, 50.0),  # person dup of row1 only
     ]
-    clean, logs = patient_dedup(spark.createDataFrame(rows, cols))
+    clean, logs = _patient_dedup(spark.createDataFrame(rows, PATIENT_COLS))
     assert {r.patient_id for r in clean.collect()} == {"p1", "p9"}  # p9 survives
     assert {r.patient_id for r in logs.collect()} == {"p1", "p9"}  # both logged
 

@@ -39,11 +39,14 @@ def test_queries_survive_hostile_session_confs(spark, sf_dir, name):
 def test_multifile_keep_first_order(spark, tmp_path):
     """Keep-first across a multi-file source follows file listing order
     (lexicographic) — the _row_id contract's multi-file clause (SCALE.md)."""
+    from pyspark.sql import functions as F
+
     from assignment_etl_spark.io.messy_csv import read_messy_csv
-    from assignment_etl_spark.ops.dedup import keep_first
+    from assignment_etl_spark.ops.dedup import mark_duplicates
 
     (tmp_path / "a_first.csv").write_text("id,v\nk1,from_a\nk2,from_a\n")
     (tmp_path / "b_second.csv").write_text("id,v\nk1,from_b\nk3,from_b\n")
-    df = read_messy_csv(spark, str(tmp_path) + "/*.csv", ["id", "v"], header_prefix="id")
-    kept = {r.id: r.v for r in keep_first(df, ["id"]).collect()}
+    df = read_messy_csv(spark, str(tmp_path) + "/*.csv", ["id", "v"])
+    first = mark_duplicates(df, ["id"]).filter(F.col("_rn") == 1)
+    kept = {r.id: r.v for r in first.collect()}
     assert kept == {"k1": "from_a", "k2": "from_a", "k3": "from_b"}

@@ -224,9 +224,7 @@ def test_consistent_with_full_corpus_dedup(spark, sf_dir):
     surv, _delta, _dropped = incremental_minhash_dedup(
         batch, store, history_texts=hist, jaccard_threshold=0.4, portable=True
     )
-    full = minhash_dedup(
-        docs, jaccard_threshold=0.4, portable=True, use_numpy=False
-    )
+    full = minhash_dedup(docs, jaccard_threshold=0.4, portable=True)
     expected = {r.doc_id for r in full.collect() if r.doc_id >= 250}
     assert {r.doc_id for r in surv.collect()} == expected
 

@@ -41,12 +41,8 @@ def etl(spark, fixture_dir):
 
 
 def _logs_union(etl):
-    """The Union under the persisted logs table, its caches as leaves."""
-    (scan,) = [
-        n for n in internals.physical_plan_nodes(_executed(etl.logs))
-        if _cls(n) == "InMemoryTableScanExec"
-    ]
-    nodes = internals.physical_plan_nodes(internals.cached_plan(scan))
+    """The Union in the logs table's plan, its caches as leaves."""
+    nodes = internals.physical_plan_nodes(_executed(etl.logs))
     (union,) = [n for n in nodes if _cls(n) == "UnionExec"]
     return union
 

@@ -12,9 +12,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from assignment_etl_spark.ext.text import quality_score, whitespace_token_count
-from assignment_etl_spark.ops.dedup import keep_first
+from assignment_etl_spark.ops.dedup import mark_duplicates
 from assignment_etl_spark.ops.strings import nfkc_lower_py
-from assignment_etl_spark.ops.units import height_to_cm, weight_to_kg_struct
+from assignment_etl_spark.ops.units import with_height_cm, with_weight_struct
 from assignment_etl_spark.schemas import ROW_ID
 
 TEXTY = st.text(
@@ -28,7 +28,7 @@ def test_height_total_never_throws(spark, values):
     """F1 is total: any junk string → double or NULL, never an error
     (the reference crashes on e.g. '..' — documented deviation)."""
     df = spark.createDataFrame([(v,) for v in values], "height string")
-    rows = df.select(height_to_cm(F.col("height")).alias("cm")).collect()
+    rows = with_height_cm(df, out="cm").select("cm").collect()
     assert len(rows) == len(values)
     for r in rows:
         assert r.cm is None or isinstance(r.cm, float)
@@ -48,10 +48,7 @@ def test_weight_struct_invariants(spark, pairs):
     df = spark.createDataFrame(
         [(w, h) for w, h in pairs], "weight string, height_cm double"
     )
-    rows = df.select(
-        "height_cm",
-        weight_to_kg_struct(F.col("weight"), F.col("height_cm")).alias("w"),
-    ).collect()
+    rows = with_weight_struct(df, out="w").select("height_cm", "w").collect()
     for r in rows:
         assert r.w.reason is not None
         if not r.w.flagged:
@@ -68,8 +65,13 @@ def test_keep_first_idempotent(spark, rows):
         [(i, k, v) for i, (k, v) in enumerate(rows)],
         f"{ROW_ID} long, key int, val string",
     )
-    once = keep_first(df, ["key"])
-    twice = keep_first(once, ["key"])
+
+    def keep_first(frame):
+        marked = mark_duplicates(frame, ["key"])
+        return marked.filter(F.col("_rn") == 1).drop("_rn", "_grp")
+
+    once = keep_first(df)
+    twice = keep_first(once)
     a = sorted((r.key, r.val) for r in once.collect())
     b = sorted((r.key, r.val) for r in twice.collect())
     assert a == b

@@ -3,6 +3,7 @@ orphans are logged but retained — the reference lets them flow silently."""
 
 from pyspark.sql import functions as F
 
+from assignment_etl_spark.caching import release_scoped_caches
 from assignment_etl_spark.ops.quality import orphan_check
 from assignment_etl_spark.pipelines.runner import run_etl
 
@@ -31,7 +32,6 @@ def test_runner_ri_audit(spark, fixture_dir):
         str(fixture_dir / "encounters.csv"),
         str(fixture_dir / "diagnoses.xml"),
         ri_audit=True,
-        persist=False,
     )
     orphans = etl.logs.filter(F.col("reason").startswith("orphan_"))
     by_reason = {r.reason: r.n for r in orphans.groupBy("reason").agg(F.count(F.lit(1)).alias("n")).collect()}
@@ -41,3 +41,4 @@ def test_runner_ri_audit(spark, fixture_dir):
     assert by_reason["orphan_encounter_id"] >= 1
     # orphan rows are still present in the data tables (retained, not dropped)
     assert etl.encounters.filter(F.col("patient_id") == "x-9999").count() == 1
+    release_scoped_caches()

@@ -61,8 +61,12 @@ HARD = st.sampled_from(
     + ["\u2126", "\u212a", "ﬁ", "ﬀ", "ﬃ", "Ĳ", "㎏", "①", "²", "½", "™"]
     + ["ｶ", "ﾞ", "Ａ", "ｚ", "a", "E", "z", " ", "-", "'", "\u00a0", "\u200d", "\u3000"]
 )
+# the documented difference is pinned by the test above, not drawn here
 MIXED = st.text(
-    alphabet=st.one_of(HARD, st.characters(blacklist_categories=("Cs",))),
+    alphabet=st.one_of(HARD, st.characters(
+        blacklist_categories=("Cs",),
+        blacklist_characters=[chr(c) for c in POST_UNICODE_14],
+    )),
     min_size=1,
     max_size=12,
 )

@@ -1,13 +1,13 @@
-"""F1/F2 golden matrix — expected values verified by executing the
-reference's height_to_cm / weight_to_kg on the same inputs (SURVEY §5.3
-method). NaN in the reference == NULL here (documented mapping)."""
+"""F1/F2 golden matrix of the staged operators the patients pipeline runs
+(``with_height_cm`` / ``with_weight_struct``) — expected values verified by
+executing the reference's height_to_cm / weight_to_kg on the same inputs
+(SURVEY §5.3 method). NaN in the reference == NULL here (documented
+mapping)."""
 
 import math
 
 import pytest
-from pyspark.sql import functions as F
-
-from assignment_etl_spark.ops.units import height_to_cm, weight_to_kg_struct
+from assignment_etl_spark.ops.units import with_height_cm, with_weight_struct
 
 HEIGHT_GOLDENS = [
     (None, None),
@@ -73,10 +73,7 @@ def test_height_to_cm_goldens(spark):
     df = spark.createDataFrame(
         [(i, h) for i, (h, _) in enumerate(HEIGHT_GOLDENS)], "i int, height string"
     )
-    got = {
-        r.i: r.cm
-        for r in df.withColumn("cm", height_to_cm(F.col("height"))).collect()
-    }
+    got = {r.i: r.cm for r in with_height_cm(df, out="cm").collect()}
     for i, (h, expected) in enumerate(HEIGHT_GOLDENS):
         if expected is None:
             assert got[i] is None, (h, got[i])
@@ -89,12 +86,7 @@ def test_weight_to_kg_goldens(spark):
         [(i, w, h) for i, (w, h, *_rest) in enumerate(WEIGHT_GOLDENS)],
         "i int, weight string, height_cm double",
     )
-    got = {
-        r.i: r.w
-        for r in df.withColumn(
-            "w", weight_to_kg_struct(F.col("weight"), F.col("height_cm"))
-        ).collect()
-    }
+    got = {r.i: r.w for r in with_weight_struct(df, out="w").collect()}
     for i, (w, h, kg, flagged, reason) in enumerate(WEIGHT_GOLDENS):
         res = got[i]
         if kg is None:
@@ -110,9 +102,7 @@ def test_weight_bmi_invariant(spark):
     assumed_* reason implies a plausible BMI."""
     rows = [(str(v), h) for v in range(20, 400, 7) for h in (150.0, 175.0, 200.0)]
     df = spark.createDataFrame(rows, "weight string, height_cm double")
-    out = df.select(
-        "height_cm", weight_to_kg_struct(F.col("weight"), F.col("height_cm")).alias("w")
-    ).collect()
+    out = with_weight_struct(df, out="w").select("height_cm", "w").collect()
     for r in out:
         if r.w.reason in ("missing_unit_assumed_kg", "missing_unit_assumed_lb"):
             bmi = r.w.weight_kg / (r.height_cm / 100.0) ** 2
