@@ -1,34 +1,45 @@
-"""Query-scoped persist registry — the release owner for every cache a
-query builder creates for its own multi-consumer intermediates.
+"""Cache and checkpoint lifecycle — the one module that decides how long
+every engine-made cache and checkpoint lives. Two lifetimes, one
+release path each:
 
-The round-12 optimizations persisted sf-proportional intermediates that
-several consumers of ONE query share (the NB token stream, the label-
-propagation closure, the HITS half-steps, the BM25 TF table, the PMI
-uni/bigram counts, ...). Those frames are consumed by the *returned*
-lazy DataFrame, so the builder itself can never unpersist them — the
-cache must live until the caller's action has run. That made the caches
-ownerless: nothing in the engine released them, and a long-lived session
-accumulated one entry per query call forever (r12 VERDICT "What's wrong"
-#1).
+- **Query-scoped persists** (:func:`scoped_persist`). The round-12
+  optimizations persisted sf-proportional intermediates that several
+  consumers of ONE query share (the NB token stream, the label-
+  propagation closure, the HITS half-steps, the BM25 TF table, the PMI
+  uni/bigram counts, ...). Those frames are consumed by the *returned*
+  lazy DataFrame, so the builder itself can never unpersist them — the
+  cache must live until the caller's action has run. Builders register
+  each such persist here; whoever drives the session — the bench
+  between timed reps, a pipeline between queries, a test — calls
+  :func:`release_scoped_caches` after the action(s) that consumed the
+  query's result. Persist semantics are untouched (same lazy
+  MEMORY_AND_DISK cache, same plan-match substitution); the registry
+  only adds the release path. A plain list, append on persist, drain on
+  release: the engine's query builders run on the driver thread.
+- **Block-scoped local checkpoints** (:func:`released_local_checkpoint`).
+  A rewrite-in-place writer checkpoints, writes, and releases exactly
+  its own checkpoint RDD when the block exits — caller-exact, so
+  concurrent callers (two streaming ``foreachBatch`` sinks) never
+  release each other's checkpoint.
 
-This module is the owner. Builders register each query-scoped persist
-via :func:`scoped_persist`; whoever drives the session — the bench
-between timed reps, a pipeline between queries, a test — calls
-:func:`release_scoped_caches` after the action(s) that consumed the
-query's result. Persist semantics are untouched (same lazy
-MEMORY_AND_DISK cache, same plan-match substitution); the registry only
-adds the release path.
+:func:`stats_severed_local_checkpoint` makes the checkpoints iterative
+trainers RETURN or chain; their caller owns the frame, and the
+ContextCleaner frees the RDD once the frame is garbage-collected.
 
-Deliberately NOT thread-safe fanciness: a plain list, append on persist,
-drain on release — the engine's query builders run on the driver thread.
-Frames persisted through other means (the probe's own persists, io/store
-checkpoint RDDs, streaming state) are out of scope and unaffected.
+The two private crossings the checkpoint helpers use
+(``internals.checkpoint_rdd``, ``internals.severed_from_checkpoint``)
+raise on failure and are probed by name in tests/test_internals.py;
+there is no degraded path here.
 """
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
+
+from assignment_etl_spark import internals
 
 _SCOPED: list[DataFrame] = []
 
@@ -67,3 +78,57 @@ def scoped_cache_count() -> int:
     """How many query-scoped persists are currently registered (test /
     probe hook)."""
     return len(_SCOPED)
+
+
+@contextlib.contextmanager
+def released_local_checkpoint(df: DataFrame):
+    """``localCheckpoint(eager=True)`` with deterministic release.
+
+    Rewrite-in-place (upsert / targeted delete / streaming state
+    rewrites) must sever lineage from the files it is about to replace —
+    you cannot overwrite a parquet dir a lazy plan still reads. But a
+    localCheckpoint's RDD lives OUTSIDE the CacheManager:
+    ``spark.catalog.clearCache()`` cannot free it and the ContextCleaner
+    only reaps it on a driver GC, so a steady-state ingest (one upsert
+    per batch) would leak one checkpoint RDD per BATCH. Scope the
+    checkpoint: yield the severed frame for the write, then unpersist
+    EXACTLY the RDD backing it (``internals.checkpoint_rdd``; the
+    checkpoint's analyzed root is a LogicalRDD by construction). No
+    global persistent-RDD id diff: two concurrent callers in one session
+    would race, and caller A's release could unpersist caller B's
+    in-flight checkpoint — unrecoverable, since localCheckpoint severs
+    lineage."""
+    ck = df.localCheckpoint(eager=True)
+    jrdd = internals.checkpoint_rdd(ck)
+    try:
+        yield ck
+    finally:
+        jrdd.unpersist(False)
+
+
+def stats_severed_local_checkpoint(df: DataFrame) -> DataFrame:
+    """``localCheckpoint(eager=True)`` that severs the PRESERVED plan
+    statistics along with the lineage — the checkpoint primitive for
+    ITERATIVE dataflows whose stages chain checkpoints of joins.
+
+    Spark 4's LogicalRDD keeps the source plan's sizeInBytes estimate.
+    Useful for one checkpoint of a scan; catastrophic when stages
+    chain: a join's default estimate is the PRODUCT of its children's,
+    so each stage's preserved number inherits the previous stages'
+    products and the DIGITS of sizeInBytes grow multiplicatively with
+    stage count. Every planning-time stats consumer —
+    ``JoinSelection.canBroadcastBySize``, ``InjectRuntimeFilter`` —
+    then does arbitrary-precision BigInteger arithmetic on the driver:
+    measured (r11, jstack-profiled): ``viterbi_encode`` over a
+    150-word table spent ~19 MINUTES of single-threaded driver CPU in
+    ``BigInteger.multiplyToomCook3`` before launching a single task,
+    and the cost is data-independent — a cluster pays it too.
+
+    Rebuilding the frame over the SAME materialized checkpoint RDD
+    (``internals.severed_from_checkpoint``) drops the origin stats to
+    the unknown sentinel (Long.MaxValue), which resets digit growth at
+    every stage — "unknown" is strictly better than "astronomically
+    wrong" here: these post-checkpoint frames are never auto-broadcast
+    candidates (the trainers broadcast their small sides explicitly)
+    and AQE re-plans from ACTUAL runtime sizes regardless."""
+    return internals.severed_from_checkpoint(df.localCheckpoint(eager=True))

@@ -83,7 +83,7 @@ def min_label_rounds(
     (CacheManager-managed — strictly better hygiene than the old
     per-round checkpoint RDDs, which clearCache() could not free).
     ``checkpoint_every`` remains for DEEP round counts, now via
-    stats-severed checkpoints (io/store) so chained join stats cannot
+    stats-severed checkpoints (caching) so chained join stats cannot
     compound; with the default (None) and the engine's fixed
     rounds=4 callers, no barrier is needed — plan depth is bounded by
     construction."""
@@ -108,7 +108,7 @@ def min_label_rounds(
             .agg(F.min("label").alias("label"))
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            from assignment_etl_spark.io.store import (
+            from assignment_etl_spark.caching import (
                 stats_severed_local_checkpoint,
             )
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 # form releases each batch's checkpoint RDD after the write (a bare
 # localCheckpoint leaks one RDD per BATCH past clearCache — see the
 # helper's docstring)
-from assignment_etl_spark.io.store import released_local_checkpoint
+from assignment_etl_spark.caching import released_local_checkpoint
 
 
 def windowed_event_counts(

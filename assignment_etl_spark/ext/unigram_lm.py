@@ -42,8 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from assignment_etl_spark.caching import stats_severed_local_checkpoint as _ck
 from assignment_etl_spark.ext.bpe import _word_freq
-from assignment_etl_spark.io.store import stats_severed_local_checkpoint as _ck
 
 DEC = "decimal(18,6)"
 

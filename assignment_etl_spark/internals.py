@@ -16,31 +16,31 @@ contract protects them across Spark versions):
 - ``checkpoint_rdd`` — the persisted RDD backing an eager
   ``localCheckpoint`` (its analyzed root is a LogicalRDD by
   construction), the exact unpersist target for
-  `io/store.released_local_checkpoint`.
+  `caching.released_local_checkpoint`.
 - ``severed_from_checkpoint`` — rebuild a frame over a checkpoint's
   materialized RDD via ``SparkSession.internalCreateDataFrame``,
   dropping the origin plan's preserved (product-inflatable) statistics
-  (`io/store.stats_severed_local_checkpoint`; the round-11
+  (`caching.stats_severed_local_checkpoint`; the round-11
   BigInteger-planning pathology).
 - ``physical_plan_nodes / cached_plan`` — physical-plan walks that see
   through AdaptiveSparkPlan and, on request, into each cache once (the
   pipelines' plan-shape test, tests/test_pipeline_plans.py).
 - ``cache_manager_is_empty / persistent_rdd_ids`` — session-level
   cache/persistence introspection for the scale sweeps' measurement
-  discipline (tools/scale_curves3) and io/store's fallback-only
-  checkpoint-release id diff (r12: the last raw crossings outside this
-  module, migrated in).
+  discipline (tools/scale_curves3).
 
-Every caller has a graceful fallback (slower, never wrong), so a Spark
-bump that removes one of these methods degrades silently — scattered
-warnings and a slower suite instead of one named failure. ``probe()``
-closes that gap: it exercises EACH crossing against the live session
-and reports per-crossing pass/fail, and ``tests/test_internals.py``
-fails BY CROSSING NAME on any breakage, so the first signal after an
-engine upgrade is one red test naming the broken API.
+The two checkpoint crossings have no fallback: the `caching` helpers
+raise when either fails. The plan-statistics callers (`ext/kmeans`,
+`ext/multimodal`) fall back to a default plan shape (slower, never
+wrong). Either way a Spark bump that removes one of these methods is
+caught by name: ``probe()`` exercises EACH crossing against the live
+session and reports per-crossing pass/fail, and
+``tests/test_internals.py`` fails BY CROSSING NAME on any breakage, so
+the first signal after an engine upgrade is one red test naming the
+broken API.
 
-All helpers here raise on failure (no swallowing) — fallback policy
-belongs to the call sites, which each document their degraded mode.
+All helpers here raise on failure (no swallowing); a call site that
+degrades documents its degraded mode.
 """
 
 from __future__ import annotations
@@ -147,7 +147,7 @@ def severed_from_checkpoint(ck: DataFrame) -> DataFrame:
     has NO origin stats, so its sizeInBytes is the unknown sentinel —
     which resets the multiplicative digit growth that chained
     checkpoints of joins otherwise compound into minutes of driver
-    BigInteger arithmetic (io/store.stats_severed_local_checkpoint)."""
+    BigInteger arithmetic (caching.stats_severed_local_checkpoint)."""
     jdf = ck._jdf
     njdf = ck.sparkSession._jsparkSession.internalCreateDataFrame(
         jdf.queryExecution().toRdd(), jdf.schema(), False
@@ -164,8 +164,8 @@ def cache_manager_is_empty(spark) -> bool:
 
 def persistent_rdd_ids(spark) -> dict[int, object]:
     """``sc._jsc.getPersistentRDDs()`` as ``{id: jrdd}`` — the scale
-    sweeps' forced checkpoint release and io/store's (fallback-only)
-    pre/post id diff when the LogicalRDD capture path is unavailable."""
+    sweeps' forced checkpoint release (tools/scale_curves3) and
+    ``probe()``'s check that its own checkpoint RDD is visible."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k): jmap.get(k) for k in jmap.keySet().toArray()}
 

@@ -13,154 +13,9 @@ bucketing metadata lives in the metastore, not in parquet footers.
 
 from __future__ import annotations
 
-import contextlib
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 
-from assignment_etl_spark import internals
-
-# Set after the first successful LogicalRDD capture in this process;
-# gates the fallback's pre-checkpoint getPersistentRDDs snapshot off
-# the common path (see released_local_checkpoint). Process-global, not
-# per-SparkSession, BY DESIGN: capture availability is a property of
-# the engine version on the classpath, not of a session. Guarded by a
-# lock (ADVICE r11): concurrent callers (two streaming foreachBatch
-# sinks run on separate micro-batch threads) must not interleave the
-# read-flag / take-snapshot / set-flag sequence, or simultaneous
-# trusted-path capture failures would EACH skip the snapshot and each
-# leak a checkpoint RDD — the lock bounds the anomalous-failure leak
-# to one RDD per failure event, same as the single-threaded analysis.
-_RDD_CAPTURE_TRUSTED = False
-_RDD_CAPTURE_LOCK = threading.Lock()
-
-
-def _capture_ck_rdd(ck: DataFrame):
-    """The persisted RDD backing an eager localCheckpoint — the
-    analyzed plan root is a LogicalRDD by construction, so ``.rdd()``
-    is the exact unpersist target. Thin wrapper over
-    `internals.checkpoint_rdd` (the probed private-API facade),
-    isolated here so tests can break it."""
-    return internals.checkpoint_rdd(ck)
-
-
-def stats_severed_local_checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=True)`` that severs the PRESERVED plan
-    statistics along with the lineage — the checkpoint primitive for
-    ITERATIVE dataflows whose stages chain checkpoints of joins.
-
-    Spark 4's LogicalRDD keeps the source plan's sizeInBytes estimate.
-    Useful for one checkpoint of a scan; catastrophic when stages
-    chain: a join's default estimate is the PRODUCT of its children's,
-    so each stage's preserved number inherits the previous stages'
-    products and the DIGITS of sizeInBytes grow multiplicatively with
-    stage count. Every planning-time stats consumer —
-    ``JoinSelection.canBroadcastBySize``, ``InjectRuntimeFilter`` —
-    then does arbitrary-precision BigInteger arithmetic on the driver:
-    measured (r11, jstack-profiled): ``viterbi_encode`` over a
-    150-word table spent ~19 MINUTES of single-threaded driver CPU in
-    ``BigInteger.multiplyToomCook3`` before launching a single task,
-    and the cost is data-independent — a cluster pays it too.
-
-    Rebuilding the frame over the SAME materialized checkpoint RDD via
-    ``internalCreateDataFrame`` drops the origin stats to the unknown
-    sentinel (Long.MaxValue), which resets digit growth at every stage
-    — "unknown" is strictly better than "astronomically wrong" here:
-    these post-checkpoint frames are never auto-broadcast candidates
-    (the trainers broadcast their small sides explicitly) and AQE
-    re-plans from ACTUAL runtime sizes regardless. The private-API
-    crossing lives in `internals.severed_from_checkpoint` (probed by
-    tests/test_internals.py); falls back to the plain checkpoint if
-    the private constructor API is unavailable."""
-    ck = df.localCheckpoint(eager=True)
-    try:
-        return internals.severed_from_checkpoint(ck)
-    except Exception as exc:  # noqa: BLE001 — degrade to preserved stats
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "stats-severed checkpoint unavailable (%s: %s) — falling "
-            "back to plain localCheckpoint; iterative trainers will pay "
-            "BigInteger stats-estimation cost at planning time",
-            type(exc).__name__,
-            exc,
-        )
-        return ck
-
-
-@contextlib.contextmanager
-def released_local_checkpoint(df: DataFrame):
-    """``localCheckpoint(eager=True)`` with deterministic release.
-
-    Rewrite-in-place (upsert / compaction / targeted delete / atomic
-    overwrite) must sever lineage from the files it is about to
-    replace — you cannot overwrite a parquet dir a lazy plan still
-    reads. But a localCheckpoint's RDD lives OUTSIDE the CacheManager:
-    ``spark.catalog.clearCache()`` cannot free it, the ContextCleaner
-    only reaps it on a driver GC, so a steady-state ingest (one upsert
-    per batch) leaks one checkpoint RDD per BATCH — caught by the
-    scale sweep's cache-discipline assertion. Scope the checkpoint:
-    yield the severed frame for the write, then unpersist EXACTLY the
-    RDD backing it. The checkpointed Dataset's analyzed plan is a
-    ``LogicalRDD`` wrapping the localCheckpointed (persisted) RDD, so
-    its id is capturable directly — a global persistent-RDD id diff
-    (the pre-r10 implementation) is NOT thread-safe: two concurrent
-    callers in one session (e.g. two Structured Streaming foreachBatch
-    sinks, which run on separate micro-batch threads) would race, and
-    caller A's release could unpersist caller B's in-flight checkpoint —
-    unrecoverable, since localCheckpoint severs lineage. The tight
-    pre/post id diff remains only as a fallback for engines where the
-    LogicalRDD capture API is unavailable — and since an eager
-    localCheckpoint's analyzed root is a LogicalRDD by construction,
-    capture availability is a property of the ENGINE VERSION, not of
-    the call: once one capture has succeeded in this process, later
-    calls skip the pre-checkpoint snapshot entirely (ADVICE r10 — the
-    global getPersistentRDDs roundtrip was paid on every call but only
-    ever read by the fallback)."""
-    global _RDD_CAPTURE_TRUSTED
-    from assignment_etl_spark import internals
-
-    spark = df.sparkSession
-    before = None
-    with _RDD_CAPTURE_LOCK:
-        trusted = _RDD_CAPTURE_TRUSTED
-    if not trusted:
-        before = set(internals.persistent_rdd_ids(spark))
-    ck = df.localCheckpoint(eager=True)
-    jrdd = None
-    try:
-        jrdd = _capture_ck_rdd(ck)
-        with _RDD_CAPTURE_LOCK:
-            _RDD_CAPTURE_TRUSTED = True
-    except Exception:  # noqa: BLE001 — fall back to the (tight) id diff
-        pass
-    try:
-        yield ck
-    finally:
-        if jrdd is not None:
-            jrdd.unpersist(False)
-        elif before is not None:
-            for rid, jr in internals.persistent_rdd_ids(spark).items():
-                if rid not in before:
-                    jr.unpersist(False)
-        else:
-            # capture succeeded earlier this process but failed now —
-            # anomalous (the API is version-level); nothing safe to
-            # release without a before-set, so say so and re-arm the
-            # snapshot for subsequent calls rather than leak silently.
-            # Leak bound: one checkpoint RDD PER FAILING CALL — with N
-            # concurrent trusted-path callers all failing, N RDDs stay
-            # persisted until driver GC (the flag lock makes the re-arm
-            # itself race-free, it cannot retroactively snapshot).
-            with _RDD_CAPTURE_LOCK:
-                _RDD_CAPTURE_TRUSTED = False
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "localCheckpoint RDD capture failed after previously "
-                "succeeding — one checkpoint RDD may stay persisted "
-                "until driver GC; snapshot fallback re-armed"
-            )
+from assignment_etl_spark.caching import released_local_checkpoint
 
 
 def write_partitioned(

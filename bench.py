@@ -413,10 +413,6 @@ def build_queries(spark) -> dict:
             batch, store, history_texts=hist, jaccard_threshold=0.4,
             batch_signatures=batch_sig, history_signatures=hist_sig,
         )
-        # eager=True materialized delta/dropped above — the shared
-        # signature cache has served every consumer; release it so the
-        # bench session doesn't accumulate per-rep signature caches
-        all_sig.unpersist()
         delta_counts = delta.groupBy(F.col("keeper_id").alias("doc_id")).agg(
             F.count(F.lit(1)).alias("_n")
         )

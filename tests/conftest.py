@@ -2,6 +2,7 @@ import os
 
 import pytest
 
+from assignment_etl_spark.caching import release_scoped_caches
 from assignment_etl_spark.session import get_spark
 
 # A bounded driver heap for the test session: the engine's 24g default lets
@@ -14,6 +15,15 @@ def spark():
     spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield spark
     spark.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_query_caches():
+    """The suite is a long-lived consumer of the session: release every
+    query-scoped persist a test's builders registered once the test ends,
+    so the blocks do not pile up in the driver heap across the run."""
+    yield
+    release_scoped_caches()
 
 
 # --------------------------------------------------------------------------

@@ -3,11 +3,14 @@
 localCheckpoint RDDs live outside the CacheManager — clearCache cannot
 free them and the ContextCleaner only reaps them on a driver GC — so
 any checkpoint-then-discard site leaks storage at steady state (one
-RDD per upsert batch / per Lloyd iteration). These tests pin the fix:
-the store's rewrite-in-place writers and the portable trainers leave
-ZERO persistent RDDs behind. Operators that RETURN a checkpointed
-frame (temp-dir-pinned gates, bpe/unigram trainers) are exempt by
-contract — the caller owns release — and are not asserted here.
+RDD per upsert batch / per Lloyd iteration). These tests pin the one
+release path in `caching.released_local_checkpoint`: it unpersists
+exactly the caller's own checkpoint RDD, raises when the capture
+crossing fails, and the store's rewrite-in-place writers, the
+streaming sinks and the portable trainers leave ZERO persistent RDDs
+behind. Operators that RETURN a checkpointed frame (temp-dir-pinned
+gates, bpe/unigram trainers) are exempt by contract — the caller owns
+release — and are not asserted here.
 """
 
 import pytest
@@ -158,80 +161,22 @@ def test_released_local_checkpoint_releases_own(spark):
     assert _persistent_rdd_count(spark) == 0
 
 
-def test_release_fallback_snapshot_diff(spark, monkeypatch):
-    """With the LogicalRDD capture unavailable (API drift), the
-    pre/post id-diff fallback still releases the checkpoint RDD —
-    and the pre-checkpoint snapshot is actually taken (r11: the
-    snapshot moved off the trusted-capture common path)."""
-    import assignment_etl_spark.io.store as store
+def test_release_raises_when_capture_fails(spark, monkeypatch):
+    """One release path, no degraded mode: when the checkpoint-RDD
+    capture crossing fails, the helper raises (naming the crossing's
+    error) instead of running the write with nothing to release."""
+    from assignment_etl_spark import internals
+    from assignment_etl_spark.caching import released_local_checkpoint
 
-    monkeypatch.setattr(store, "_RDD_CAPTURE_TRUSTED", False)
-    monkeypatch.setattr(
-        store,
-        "_capture_ck_rdd",
-        lambda ck: (_ for _ in ()).throw(RuntimeError("api drift")),
-    )
-    df = spark.range(100).selectExpr("id", "id * 2 as v")
-    with store.released_local_checkpoint(df) as ck:
-        assert ck.count() == 100
-        assert _persistent_rdd_count(spark) >= 1
-    assert _persistent_rdd_count(spark) == 0
-    # the failed capture must not have marked the API trusted
-    assert store._RDD_CAPTURE_TRUSTED is False
+    def gone(ck):
+        raise AttributeError("'JavaObject' object has no attribute 'rdd'")
 
-
-def test_release_common_path_skips_snapshot(spark, monkeypatch):
-    """Once one capture has succeeded, later calls skip the global
-    getPersistentRDDs snapshot (ADVICE r10) — pinned by counting
-    snapshot calls through a wrapped _capture_ck_rdd."""
-    import assignment_etl_spark.io.store as store
-
-    df = spark.range(50).selectExpr("id", "id * 3 as v")
-    monkeypatch.setattr(store, "_RDD_CAPTURE_TRUSTED", False)
-    with store.released_local_checkpoint(df) as ck:
-        ck.count()
-    assert store._RDD_CAPTURE_TRUSTED is True
-
-    seen = []
-    real = store._capture_ck_rdd
-
-    def counting(ck):
-        # before is None on the trusted path — observable via closure
-        seen.append(True)
-        return real(ck)
-
-    monkeypatch.setattr(store, "_capture_ck_rdd", counting)
-    with store.released_local_checkpoint(df) as ck:
-        ck.count()
-    assert seen and _persistent_rdd_count(spark) == 0
-
-
-def test_release_anomalous_failure_warns_and_rearms(spark, monkeypatch, caplog):
-    """Capture fails AFTER being trusted: nothing safe to release for
-    that call — warn, re-arm the snapshot fallback, and the NEXT call
-    (still broken) releases via the diff."""
-    import logging
-
-    import assignment_etl_spark.io.store as store
-
-    monkeypatch.setattr(store, "_RDD_CAPTURE_TRUSTED", True)
-    monkeypatch.setattr(
-        store,
-        "_capture_ck_rdd",
-        lambda ck: (_ for _ in ()).throw(RuntimeError("api drift")),
-    )
+    monkeypatch.setattr(internals, "checkpoint_rdd", gone)
     df = spark.range(20).selectExpr("id")
-    with caplog.at_level(logging.WARNING, logger=store.__name__):
-        with store.released_local_checkpoint(df) as ck:
-            ck.count()
-    assert any("re-armed" in r.getMessage() for r in caplog.records)
-    assert store._RDD_CAPTURE_TRUSTED is False
-    leaked = _persistent_rdd_count(spark)
-    assert leaked == 1  # the documented one-call leak
+    with pytest.raises(AttributeError, match="rdd"):
+        with released_local_checkpoint(df):
+            pytest.fail("block ran without a captured checkpoint RDD")
     _release_all(spark)
-    with store.released_local_checkpoint(df) as ck:
-        ck.count()
-    assert _persistent_rdd_count(spark) == 0
 
 
 def test_stats_severed_checkpoint_contract(spark):
@@ -242,7 +187,7 @@ def test_stats_severed_checkpoint_contract(spark):
     planning grind; see SCALE.md r11)."""
     from pyspark.sql import functions as F
 
-    from assignment_etl_spark.io.store import stats_severed_local_checkpoint
+    from assignment_etl_spark.caching import stats_severed_local_checkpoint
 
     df = spark.range(200).selectExpr("id", "id % 5 as k")
     j = df.join(df.selectExpr("id % 5 as k", "id as id2"), on="k")

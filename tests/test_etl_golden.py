@@ -49,12 +49,9 @@ def _run(spark, d):
 
 
 def test_full_rows_match_golden(spark, fixture_dir):
-    from assignment_etl_spark.caching import release_scoped_caches
-
     with open(GOLDEN) as fh:
         golden = json.load(fh)
     got = snapshot(_run(spark, str(fixture_dir)))
-    release_scoped_caches()
     assert set(got) == set(golden)
     for name in golden:
         assert got[name][0] == golden[name][0], f"{name} columns"

@@ -8,8 +8,6 @@ instead of the pre-r12 failure mode (scattered log warnings plus a
 silently slower suite as every call site degrades to its fallback).
 """
 
-import logging
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,12 +78,14 @@ def test_call_sites_route_through_facade():
     without executing the sites.)"""
     import inspect
 
+    from assignment_etl_spark import caching
     from assignment_etl_spark.ext import kmeans, multimodal
-    from assignment_etl_spark.io import store
 
-    assert "internals.checkpoint_rdd" in inspect.getsource(store._capture_ck_rdd)
+    assert "internals.checkpoint_rdd" in inspect.getsource(
+        caching.released_local_checkpoint
+    )
     assert "internals.severed_from_checkpoint" in inspect.getsource(
-        store.stats_severed_local_checkpoint
+        caching.stats_severed_local_checkpoint
     )
     assert "internals.optimized_plan" in inspect.getsource(kmeans._stats_bytes)
     assert "internals.plan_size_bytes" in inspect.getsource(
@@ -95,25 +95,25 @@ def test_call_sites_route_through_facade():
     assert "_jdf" not in src, "plan_audit bypasses the internals facade"
 
 
-def test_severed_checkpoint_fallback_still_returns_checkpoint(
-    spark, monkeypatch, caplog
-):
+def test_severed_checkpoint_raises_when_sever_fails(spark, monkeypatch):
     """When the constructor crossing is gone, stats_severed_local_checkpoint
-    degrades to the PLAIN checkpoint (correct rows, preserved stats) and
-    warns once — behavior unchanged from pre-facade (VERDICT r11 ask #1
-    'all existing fallback behaviors unchanged')."""
-    from assignment_etl_spark.io import store
+    raises instead of returning a plain checkpoint whose preserved stats
+    would compound in an iterative trainer."""
+    from assignment_etl_spark.caching import stats_severed_local_checkpoint
 
     def gone(ck):
         raise AttributeError("internalCreateDataFrame")
 
     monkeypatch.setattr(internals, "severed_from_checkpoint", gone)
+    before = set(internals.persistent_rdd_ids(spark))
     df = spark.range(5).withColumn("v", F.col("id") + 1)
-    with caplog.at_level(logging.WARNING):
-        ck = store.stats_severed_local_checkpoint(df)
-    assert ck.count() == 5
-    assert any("stats-severed checkpoint unavailable" in r.message for r in caplog.records)
-    internals.checkpoint_rdd(ck).unpersist(False)
+    try:
+        with pytest.raises(AttributeError, match="internalCreateDataFrame"):
+            stats_severed_local_checkpoint(df)
+    finally:
+        for rid, jrdd in internals.persistent_rdd_ids(spark).items():
+            if rid not in before:
+                jrdd.unpersist(False)
 
 
 def test_stats_bytes_ignores_logicalrdd_leaf(spark):

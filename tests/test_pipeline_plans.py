@@ -15,7 +15,6 @@ from __future__ import annotations
 import pytest
 
 from assignment_etl_spark import internals
-from assignment_etl_spark.caching import release_scoped_caches
 from assignment_etl_spark.pipelines.runner import run_etl
 
 
@@ -27,17 +26,17 @@ def _executed(df):
     return internals.query_execution(df).executedPlan()
 
 
-@pytest.fixture(scope="module")
+@pytest.fixture
 def etl(spark, fixture_dir):
-    res = run_etl(
+    # one run per test: conftest releases the run's caches after each
+    # test, and a plan built after that release would not read them
+    return run_etl(
         spark,
         str(fixture_dir / "patients.csv"),
         str(fixture_dir / "encounters.csv"),
         str(fixture_dir / "diagnoses.xml"),
         ri_audit=True,
     )
-    yield res
-    release_scoped_caches()
 
 
 def _logs_union(etl):

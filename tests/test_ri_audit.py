@@ -3,7 +3,6 @@ orphans are logged but retained — the reference lets them flow silently."""
 
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.caching import release_scoped_caches
 from assignment_etl_spark.ops.quality import orphan_check
 from assignment_etl_spark.pipelines.runner import run_etl
 
@@ -41,4 +40,3 @@ def test_runner_ri_audit(spark, fixture_dir):
     assert by_reason["orphan_encounter_id"] >= 1
     # orphan rows are still present in the data tables (retained, not dropped)
     assert etl.encounters.filter(F.col("patient_id") == "x-9999").count() == 1
-    release_scoped_caches()

@@ -199,7 +199,7 @@ def test_trained_plan_stats_stay_bounded(spark):
     InjectRuntimeFilter) grinds arbitrary-precision BigInteger products
     at PLANNING time — measured 19 minutes of single-threaded driver
     CPU to encode a 150-word table. The stats-severed checkpoint
-    (io/store.stats_severed_local_checkpoint) resets every stage to the
+    (caching.stats_severed_local_checkpoint) resets every stage to the
     unknown sentinel, so the final plan's estimate stays within a few
     machine words. This asserts the structural property, not a timing."""
     docs = spark.createDataFrame(
