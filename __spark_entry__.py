@@ -4943,17 +4943,16 @@ FROM b GROUP BY 1 ORDER BY 1
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidate mining (shingle → 32 minhashes →
-    8 bands → bucket self-join), oracle-checked: portable=True swaps
-    xxhash64/numpy for the PORTABLE_P polynomial hash family that DuckDB
-    replays bit-for-bit (_sql_minhash_lsh_pairs), exercising the identical
-    explode → equi-join → zip-verify plan. The numpy production path is
-    benched separately (bench.py) and quality-evaluated in
-    tools/dedup_eval.py."""
+    8 bands → bucket self-join), oracle-checked: the engine's one hash
+    family (PORTABLE_P polynomials) is what DuckDB replays bit-for-bit
+    (_sql_minhash_lsh_pairs) over the identical explode → equi-join →
+    zip-verify plan. The benched callable is this gate; its candidate
+    quality is evaluated in tools/dedup_eval.py."""
     from assignment_etl_spark.ext.dedup import minhash_lsh_pairs
 
     _prep(spark)
     docs = _t(spark, sf_dir, "documents")
-    out = minhash_lsh_pairs(docs, jaccard_threshold=0.4, portable=True)
+    out = minhash_lsh_pairs(docs, jaccard_threshold=0.4)
     return out.select(
         "id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard")
     ).orderBy("id_a", "id_b")
@@ -4962,11 +4961,11 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_minhash_preamble(
     num_hashes: int, bands: int, shingle_n: int, seed: int
 ) -> str:
-    """The shared CTE stack of the portable MinHash replicas: normalized +
+    """The shared CTE stack of the MinHash replicas: normalized +
     padded text → polynomial gram hashes → minhash signature columns →
     per-band polynomial folds → a banded (doc_id, sig, band, bh) relation.
     Same gram polynomial, same (a, b) permutation constants, same band
-    fold as ext/dedup.py's portable path — all int64 arithmetic mod
+    fold as ext/dedup.py's minhash_signature — all int64 arithmetic mod
     PORTABLE_P, so results hash-match exactly."""
     from assignment_etl_spark.ext.dedup import (
         PORTABLE_BAND_MULT,
@@ -5015,9 +5014,8 @@ def _sql_minhash_lsh_pairs(
     num_hashes: int = 32, bands: int = 8, shingle_n: int = 5,
     seed: int = 7, threshold: float = 0.4,
 ) -> str:
-    """DuckDB replica of the portable MinHash+LSH pipeline: candidate
-    pairs and estimated Jaccards hash-match ext/dedup.minhash_lsh_pairs
-    (portable=True) exactly."""
+    """DuckDB replica of the MinHash+LSH pipeline: candidate pairs and
+    estimated Jaccards hash-match ext/dedup.minhash_lsh_pairs exactly."""
     return f"""
 WITH {_sql_minhash_preamble(num_hashes, bands, shingle_n, seed)},
 pairs AS (
@@ -5062,7 +5060,7 @@ def q_incremental_minhash_documents(spark: SparkSession, sf_dir: str) -> DataFra
     docs = _t(spark, sf_dir, "documents")
     hist = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    # ONE portable-minhash pass signs the whole corpus (history and
+    # ONE minhash pass signs the whole corpus (history and
     # batch are disjoint halves of the same table); the store build, the
     # batch banding, and the stage-2 keeper-signature fetch all reuse it
     # (guide §4 / r12 VERDICT ask #1 — was 3 signature passes).
@@ -5070,17 +5068,16 @@ def q_incremental_minhash_documents(spark: SparkSession, sf_dir: str) -> DataFra
     # oracle hash are unchanged.
     all_sig = _sig_frame(
         docs, text_col="text", id_col="doc_id", num_hashes=32,
-        shingle_n=5, portable=True, seed=7,
+        shingle_n=5, seed=7,
     )
     hist_sig = all_sig.filter(F.col("_id") % 2 == 0)
     batch_sig = all_sig.filter(F.col("_id") % 2 == 1)
-    store = build_band_store(hist, portable=True, signatures=hist_sig)
+    store = build_band_store(hist, signatures=hist_sig)
     _surv, delta, dropped = incremental_minhash_dedup(
         batch,
         store,
         history_texts=hist,
         jaccard_threshold=0.4,
-        portable=True,
         batch_signatures=batch_sig,
         history_signatures=hist_sig,
         # eager=False keeps the gate's dataflow lazy (plan-visible): the
@@ -5254,20 +5251,19 @@ def q_band_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     d = tempfile.mkdtemp(prefix="band_store_gate_")
     path = f"{d}/band_store"
-    # one shared portable-minhash pass over the whole corpus (same
+    # one shared minhash pass over the whole corpus (same
     # signature-reuse restructure as q_incremental_minhash_documents —
     # guide §4); deterministic signatures ⇒ identical index content
     all_sig = _sig_frame(
         docs, text_col="text", id_col="doc_id", num_hashes=32,
-        shingle_n=5, portable=True, seed=7,
+        shingle_n=5, seed=7,
     )
     hist_sig = all_sig.filter(F.col("_id") % 2 == 0)
     batch_sig = all_sig.filter(F.col("_id") % 2 == 1)
-    build_band_store(hist, portable=True, signatures=hist_sig).write.parquet(path)
+    build_band_store(hist, signatures=hist_sig).write.parquet(path)
     store = spark.read.parquet(path)
     _surv, delta, _dropped = incremental_minhash_dedup(
-        batch, store, history_texts=hist, jaccard_threshold=0.4,
-        portable=True, eager=False,
+        batch, store, history_texts=hist, jaccard_threshold=0.4, eager=False,
         batch_signatures=batch_sig, history_signatures=hist_sig,
     )
     # stage the delta, then blind-append it (a committed batch would do
@@ -10396,8 +10392,9 @@ GROUP BY 1 ORDER BY 1
 
 
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Survivorship dedup (ext/dedup.minhash_dedup_keep_best): portable
-    MinHash+LSH candidate pairs → four rounds of min-label propagation →
+    """Survivorship dedup (ext/dedup.minhash_dedup_keep_best): MinHash+LSH
+    candidate pairs (the engine's one, DuckDB-replayable hash family) →
+    four rounds of min-label propagation →
     per-cluster winner by ext/text.quality_score (ties → min id) — the
     keep-the-CLEAN-copy policy, composed from three individually
     certified kernels (minhash_lsh_pairs, cc_label_propagation,
@@ -10414,7 +10411,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_score(F.col("text")),
         jaccard_threshold=0.4,
         rounds=4,
-        portable=True,
         # The oracle replays the UNCOLLAPSED clique graph; under
         # FIXED-round propagation the exact-collapse star edges can
         # differ at the rounds-reach boundary, so the gate pins the

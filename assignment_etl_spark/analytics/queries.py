@@ -117,17 +117,6 @@ def histogram_time(
     )
 
 
-def quality_summary(logs_df: DataFrame) -> DataFrame:
-    """The dashboard's Data Quality tab in one frame: reason frequencies
-    (interactive_dashboard.py:134) ordered for display."""
-    return value_counts(logs_df, "reason")
-
-
-def quality_by_file(logs_df: DataFrame) -> DataFrame:
-    """file × reason counts (interactive_dashboard.py:147)."""
-    return group_sizes(logs_df, ["filename", "reason"])
-
-
 def affected_entities(
     logs_df: DataFrame, *, filename_contains: str = "patient", id_col: str = "patient_id"
 ) -> DataFrame:

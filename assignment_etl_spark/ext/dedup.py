@@ -29,10 +29,10 @@ from assignment_etl_spark.ext.text import fingerprint
 MERSENNE = (1 << 61) - 1
 
 # Portable-hash prime (2^31 - 1): with all operands < 2^31 every product in
-# the portable hash family stays inside int64, so ANY engine with 64-bit
-# integer arithmetic (Spark, DuckDB, Trino, ...) computes bit-identical
-# signatures. Used by the `portable=True` variants that exist so the LSH
-# pipelines can be replayed — and hash-verified — in a second engine.
+# the minhash family stays inside int64, so ANY engine with 64-bit integer
+# arithmetic (Spark, DuckDB, Trino, ...) computes bit-identical signatures
+# and band keys — the one family every LSH pipeline runs, which is why the
+# DuckDB oracle can replay (and hash-verify) them in a second engine.
 from assignment_etl_spark.portable import PRIME_P as PORTABLE_P  # noqa: E402
 PORTABLE_BAND_MULT = 1000003
 
@@ -144,130 +144,65 @@ def make_gram_set_udf(n: int = 5):
     return gram_set
 
 
-@functools.lru_cache(maxsize=None)
-def make_minhash_signature_udf(
-    num_hashes: int = 32, shingle_n: int = 5, seed: int = 7
-):
-    """Arrow-batched numpy minhash: normalize text, roll a polynomial hash
-    over byte n-grams (sliding_window_view · powers, uint64 wraparound —
-    deterministic everywhere), then min over (a·h + b) per permutation.
-
-    The non-portable signature pass of corpus-scale dedup: one BLAS-shaped
-    pass per Arrow batch, its column feeding the JVM-side banding join. A
-    JVM-expression signature (a num_hashes × shingles tree per row, past
-    codegen limits, so interpreted) measured about 100× slower.
-    """
-    rng = np.random.RandomState(seed)
-    a = (rng.randint(1, 1 << 61, size=num_hashes).astype(np.uint64) | np.uint64(1))
-    b = rng.randint(0, 1 << 61, size=num_hashes).astype(np.uint64)
-    powers = np.uint64(1099511628211) ** np.arange(shingle_n, dtype=np.uint64)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_sig(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                # NULL text ⇒ NULL signature: a shared "empty" sentinel
-                # signature would band-collide every NULL-text doc with
-                # est-agreement 1.0 (r9 ADVICE regression); NULL sigs
-                # fail the est cut instead, so NULL docs never pair
-                out.append(None)
-                continue
-            norm = " ".join(str(t).lower().split())
-            data = np.frombuffer(norm.encode("utf-8"), dtype=np.uint8)
-            if data.size < shingle_n:
-                data = np.pad(data, (0, shingle_n - data.size), constant_values=32)
-            with np.errstate(over="ignore"):
-                windows = np.lib.stride_tricks.sliding_window_view(data, shingle_n)
-                h = (windows.astype(np.uint64) * powers).sum(axis=1)  # wraps mod 2^64
-                h = np.unique(h)
-                sig = (a[:, None] * h[None, :] + b[:, None]).min(axis=1)
-            out.append(sig.view(np.int64).tolist())
-        return pd.Series(out)
-
-    return minhash_sig
-
-
-def _perm_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
-    # deterministic LCG so signatures are reproducible across runs
+def portable_perm_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
+    """The minhash permutations' (a, b) pairs: a deterministic LCG stream
+    (reproducible across runs and engines) reduced below PORTABLE_P so
+    a*h + b never leaves int64."""
     params, state = [], seed
     for _ in range(num_hashes):
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
         a = (state % (MERSENNE - 1)) + 1
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
         b = state % MERSENNE
-        params.append((a, b))
+        params.append((a % (PORTABLE_P - 1) + 1, b % PORTABLE_P))
     return params
 
 
-def portable_perm_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
-    """(a, b) pairs reduced below PORTABLE_P so a*h + b never leaves int64."""
-    return [
-        (a % (PORTABLE_P - 1) + 1, b % PORTABLE_P)
-        for a, b in _perm_params(num_hashes, seed)
-    ]
+@functools.lru_cache(maxsize=None)
+def _minhash_udf(num_hashes: int, shingle_n: int, seed: int):
+    """Arrow-batched numpy minhash over NORMALIZED, padded text: per row,
+    codepoints (UTF-32, so astral characters stay whole) → each sliding
+    n-window hashed as Σ cp·31^(n-1-j) mod PORTABLE_P (the 31-ary
+    polynomial; the powers are pre-reduced, so each product stays below
+    2^52) → the min of (a·h + b) mod PORTABLE_P per permutation (each
+    product below 2^62). Duplicate grams cannot move a min, so they are
+    not deduplicated first.
+    NULL text ⇒ NULL signature: NULL sigs have NULL band keys, so
+    NULL-text docs never collide with anything."""
+    ab = np.array(portable_perm_params(num_hashes, seed), dtype=np.int64)
+    a, b = ab[:, :1], ab[:, 1:]  # (num_hashes, 1) columns
+    powers = np.array(
+        [pow(31, shingle_n - 1 - j, PORTABLE_P) for j in range(shingle_n)],
+        dtype=np.int64,
+    )
+
+    @pandas_udf(T.ArrayType(T.LongType()))
+    def minhash_sig(texts: pd.Series) -> pd.Series:
+        out = []
+        for s in texts:
+            if s is None:
+                out.append(None)
+                continue
+            cps = np.frombuffer(s.encode("utf-32-le"), np.uint32).astype(np.int64)
+            windows = np.lib.stride_tricks.sliding_window_view(cps, shingle_n)
+            h = windows @ powers % PORTABLE_P
+            out.append(((a * h + b) % PORTABLE_P).min(axis=1).tolist())
+        return pd.Series(out)
+
+    return minhash_sig
 
 
-def portable_codepoints(col: Column, n: int = 5) -> Column:
-    """Codepoint array of the normalized text (lowercased, whitespace
-    collapsed, right-padded to n): one O(len) split pass — the staging
-    column for portable gram hashing. Per-position substring() would seek
-    from the string start each call (O(len²) per row — measured 16s vs 3s
-    on the 500-doc gate)."""
-    s = F.lower(F.regexp_replace(col, r"\s+", " "))
-    s = F.when(F.length(s) < n, F.rpad(s, n, " ")).otherwise(s)
-    return F.transform(F.split(s, ""), F.ascii)
-
-
-def portable_gram_hashes_from_cp(cp: Column, n: int = 5) -> Column:
-    """Distinct n-gram polynomial hashes from a MATERIALIZED codepoint
-    array column (O(1) element_at per char). The cp argument must be a
-    stored column (persist barrier), not an expression — element_at
-    re-evaluates its child per access."""
-    idx = F.sequence(F.lit(1), F.size(cp) - (n - 1))
-
-    def gram(i: Column) -> Column:
-        acc = F.lit(0).cast("long")
-        for j in range(n):
-            acc = (acc * 31 + F.element_at(cp, i + F.lit(j))) % PORTABLE_P
-        return acc
-
-    return F.array_distinct(F.transform(idx, gram))
-
-
-def portable_gram_hashes(col: Column, n: int = 5) -> Column:
-    """Distinct character n-gram hashes via a 31-ary polynomial over
-    codepoints mod PORTABLE_P — the cross-engine-exact sibling of
-    ``shingles`` (which uses JVM-only xxhash64). Compose-anywhere Column
-    variant; the staged two-step (portable_codepoints → persist →
-    portable_gram_hashes_from_cp) is what minhash_lsh_pairs(portable=True)
-    runs — see portable_codepoints for why."""
-    s = F.lower(F.regexp_replace(col, r"\s+", " "))
-    s = F.when(F.length(s) < n, F.rpad(s, n, " ")).otherwise(s)
-    idx = F.sequence(F.lit(1), F.length(s) - (n - 1))
-
-    def gram(i: Column) -> Column:
-        acc = F.lit(0).cast("long")
-        for j in range(n):
-            acc = (acc * 31 + F.ascii(F.substring(s, i + F.lit(j), F.lit(1)))) % PORTABLE_P
-        return acc
-
-    return F.array_distinct(F.transform(idx, gram))
-
-
-def portable_minhash_signature(
+def minhash_signature(
     col: Column, num_hashes: int = 32, shingle_n: int = 5, seed: int = 7
 ) -> Column:
-    """Minhash signature over portable gram hashes: min of (a·h + b) mod
-    PORTABLE_P per permutation. Bit-identical in any int64 SQL engine."""
-    grams = portable_gram_hashes(col, shingle_n)
-    # F.transform is invoked eagerly per iteration, so the closure over
-    # (a, b) is bound before the next loop step.
-    sigs = [
-        F.array_min(F.transform(grams, lambda h: (F.lit(a) * h + F.lit(b)) % PORTABLE_P))
-        for a, b in portable_perm_params(num_hashes, seed)
-    ]
-    return F.array(*sigs)
+    """Minhash signature of a text column — the one hash family every LSH
+    pipeline runs and the DuckDB oracle replays bit for bit. The JVM
+    normalizes (lowercase, ``\\s+`` → one space, right-pad to
+    ``shingle_n``: Java regex and case semantics, exactly what the SQL
+    replica runs); :func:`_minhash_udf` hashes the normalized string."""
+    s = F.lower(F.regexp_replace(col, r"\s+", " "))
+    s = F.when(F.length(s) < shingle_n, F.rpad(s, shingle_n, " ")).otherwise(s)
+    return _minhash_udf(num_hashes, shingle_n, seed)(s)
 
 
 def portable_band_hash(sig_col: Column, start: int, rows: int) -> Column:
@@ -286,24 +221,21 @@ def _sig_frame(
     id_col: str,
     num_hashes: int,
     shingle_n: int,
-    portable: bool,
     seed: int,
     fan_out: bool = True,
 ) -> DataFrame:
     """Persisted ("_id", "_sig") minhash signatures — the shared first
     stage of minhash_lsh_pairs / build_band_store /
-    incremental_minhash_dedup. Persisting matters: Catalyst's
-    CollapseProject would otherwise inline the (shingle → num_hashes ×
-    min-hash) expression into every band hash AND both sides of any
-    downstream self-join — an O(bands × 2) recompute of the most
-    expensive projection. At cluster scale this is where you'd
-    checkpoint signatures to the store instead."""
-    # The signature projection is CPU-bound per row (num_hashes × gram
-    # transforms, or the Arrow UDF); when the source has fewer partitions
-    # than cores (a single-file local parquet, a small filtered split),
-    # fan out first — one round-robin exchange of the batch text,
-    # skipped whenever the input is already parallel (any real cluster
-    # layout, where the guard sees thousands of input splits).
+    incremental_minhash_dedup. Persisting matters: without it both sides
+    of the downstream band self-join would re-run the Arrow UDF over the
+    text. At cluster scale this is where you'd checkpoint signatures to
+    the store instead."""
+    # The signature projection is CPU-bound per row (the Arrow UDF); when
+    # the source has fewer partitions than cores (a single-file local
+    # parquet, a small filtered split), fan out first — one round-robin
+    # exchange of the batch text, skipped whenever the input is already
+    # parallel (any real cluster layout, where the guard sees thousands
+    # of input splits).
     # ``fan_out=False`` skips the guard: the .rdd partition probe
     # finalizes the physical plan, which under AQE EXECUTES the upstream
     # query stages — paid per call, and pointless when the input is a
@@ -313,56 +245,29 @@ def _sig_frame(
         target = df.sparkSession.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
-    if portable:
-        # Two persist barriers: (1) codepoint arrays — element_at in the
-        # gram fold must read a STORED column or its child is re-evaluated
-        # per access; (2) gram arrays — each of the num_hashes
-        # array_min(transform(...)) branches embeds its child wholesale,
-        # so unmaterialized grams would be recomputed 32× per row
-        # (measured: 50× slower without these barriers at 500 docs).
-        cps = df.select(
-            F.col(id_col).alias("_id"),
-            portable_codepoints(F.col(text_col), shingle_n).alias("_cp"),
-        ).persist()
-        grams = cps.select(
-            "_id",
-            portable_gram_hashes_from_cp(F.col("_cp"), shingle_n).alias("_gh"),
-        ).persist()
-        mins = [
-            F.array_min(
-                F.transform(F.col("_gh"), lambda h: (F.lit(a) * h + F.lit(b)) % PORTABLE_P)
-            )
-            for a, b in portable_perm_params(num_hashes, seed)
-        ]
-        # materialize signatures here, then drop the scaffolding caches —
-        # repeated callers would otherwise accumulate two cached frames
-        # (codepoints ≈ 4× the text size) per invocation
-        from assignment_etl_spark.caching import scoped_persist
-
-        sig = scoped_persist(grams.select("_id", F.array(*mins).alias("_sig")))
-        sig.count()
-        cps.unpersist()
-        grams.unpersist()
-        return sig  # already persisted + materialized above
-    sig_udf = make_minhash_signature_udf(num_hashes, shingle_n, seed)
-    sig = df.select(
-        F.col(id_col).alias("_id"), sig_udf(F.col(text_col)).alias("_sig")
-    )
     from assignment_etl_spark.caching import scoped_persist
 
-    return scoped_persist(sig)
+    return scoped_persist(
+        df.select(
+            F.col(id_col).alias("_id"),
+            minhash_signature(F.col(text_col), num_hashes, shingle_n, seed).alias("_sig"),
+        )
+    )
 
 
 def _checked_signatures(sig: DataFrame, num_hashes: int, arg: str) -> DataFrame:
     """A caller-passed ("_id", "_sig") frame, failing loudly when a row's
     signature length is not ``num_hashes``: signatures made with other
     minhash parameters would band and estimate Jaccard silently wrong.
-    The check is a per-row size test in the plan, so it raises when the
-    result is computed and costs no extra job."""
+    A NULL signature (NULL text) passes: it bands to NULL keys and never
+    pairs. The check is a per-row size test in the plan, so it raises
+    when the result is computed and costs no extra job."""
     size = F.size("_sig")
     return sig.withColumn(
         "_sig",
-        F.when(size == num_hashes, F.col("_sig")).otherwise(
+        F.when(
+            F.col("_sig").isNull() | (size == num_hashes), F.col("_sig")
+        ).otherwise(
             F.raise_error(
                 F.format_string(
                     f"{arg}: signature of length %d for _id %s, expected "
@@ -375,24 +280,17 @@ def _checked_signatures(sig: DataFrame, num_hashes: int, arg: str) -> DataFrame:
     )
 
 
-def _with_bands(
-    sig: DataFrame, *, num_hashes: int, bands: int, portable: bool
-) -> DataFrame:
+def _with_bands(sig: DataFrame, *, num_hashes: int, bands: int) -> DataFrame:
     """Explode a signature frame into ("_id", "_sig", "_band", "_bhash") —
     one row per (doc, band): the LSH bucket keys every candidate join
     (self-join OR persisted-store lookup) equi-joins on."""
-    rows_per_band = num_hashes // bands
-    if portable:
-        _bh = lambda i: portable_band_hash(  # noqa: E731
-            F.col("_sig"), i * rows_per_band + 1, rows_per_band
-        )
-    else:
-        _bh = lambda i: F.xxhash64(  # noqa: E731
-            F.slice(F.col("_sig"), i * rows_per_band + 1, rows_per_band)
-        )
+    rows = num_hashes // bands
     band_structs = F.array(
         *[
-            F.struct(F.lit(i).alias("band"), _bh(i).alias("bhash"))
+            F.struct(
+                F.lit(i).alias("band"),
+                portable_band_hash(F.col("_sig"), i * rows + 1, rows).alias("bhash"),
+            )
             for i in range(bands)
         ]
     )
@@ -410,7 +308,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 5,
     jaccard_threshold: float = 0.5,
-    portable: bool = False,
     seed: int = 7,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash banding, verified with estimated
@@ -420,10 +317,9 @@ def minhash_lsh_pairs(
     self-equi-join on (band_idx, band_hash) → verify. Returns
     (id_a, id_b, est_jaccard) with id_a < id_b.
 
-    ``portable=True`` swaps the xxhash64/numpy hashing for the PORTABLE_P
-    polynomial family so a second engine (DuckDB oracle) reproduces the
-    exact pairs — identical plan shape (explode → self-equi-join on
-    (band, bhash) → zip-verify), different hash constants.
+    Signatures and band keys are the PORTABLE_P polynomial family
+    (:func:`minhash_signature`, :func:`portable_band_hash`), so the DuckDB
+    oracle reproduces the exact pairs.
     """
     sig = _sig_frame(
         df,
@@ -431,10 +327,9 @@ def minhash_lsh_pairs(
         id_col=id_col,
         num_hashes=num_hashes,
         shingle_n=shingle_n,
-        portable=portable,
         seed=seed,
     )
-    banded = _with_bands(sig, num_hashes=num_hashes, bands=bands, portable=portable)
+    banded = _with_bands(sig, num_hashes=num_hashes, bands=bands)
 
     # Deliberately dedup-then-est (r13 tried-and-reverted the map-side
     # est cut): the band self-join emits many duplicate collisions per
@@ -636,7 +531,6 @@ def build_band_store(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 5,
-    portable: bool = False,
     seed: int = 7,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
@@ -671,11 +565,10 @@ def build_band_store(
             id_col=id_col,
             num_hashes=num_hashes,
             shingle_n=shingle_n,
-            portable=portable,
             seed=seed,
         )
     )
-    banded = _with_bands(sig, num_hashes=num_hashes, bands=bands, portable=portable)
+    banded = _with_bands(sig, num_hashes=num_hashes, bands=bands)
     return banded.select(
         F.col("_band").alias("band"),
         F.col("_bhash").alias("bhash"),
@@ -783,7 +676,6 @@ def incremental_minhash_dedup(
     shingle_n: int = 5,
     jaccard_threshold: float = 0.5,
     verify: bool = True,
-    portable: bool = False,
     seed: int = 7,
     eager: bool = True,
     batch_signatures: DataFrame | None = None,
@@ -871,11 +763,10 @@ def incremental_minhash_dedup(
             id_col=id_col,
             num_hashes=num_hashes,
             shingle_n=shingle_n,
-            portable=portable,
             seed=seed,
         )
     )
-    banded = _with_bands(sig, num_hashes=num_hashes, bands=bands, portable=portable)
+    banded = _with_bands(sig, num_hashes=num_hashes, bands=bands)
 
     # stage 1: within-batch (minhash_dedup contract). Deliberately
     # dedup-then-est (r13 tried-and-reverted the map-side est cut,
@@ -1006,7 +897,6 @@ def incremental_minhash_dedup(
                     id_col=id_col,
                     num_hashes=num_hashes,
                     shingle_n=shingle_n,
-                            portable=portable,
                     seed=seed,
                     fan_out=False,  # semi-join output is already parallel
                 )
@@ -1559,7 +1449,6 @@ def minhash_dedup_keep_best(
     text_col: str = "text",
     jaccard_threshold: float = 0.4,
     rounds: int = 4,
-    portable: bool = False,
     collapse_exact: bool = True,
     **lsh_kwargs,
 ) -> DataFrame:
@@ -1597,7 +1486,6 @@ def minhash_dedup_keep_best(
         text_col=text_col,
         id_col=id_col,
         jaccard_threshold=jaccard_threshold,
-        portable=portable,
         **lsh_kwargs,
     )
     if member_edges is not None:

@@ -144,8 +144,8 @@ def _salted_cell_seed(
     PORTABLE_P polynomial family (assignment_etl_spark/portable.py) so
     a DuckDB oracle replays the bucketing bit-for-bit — the SAME
     salted-join + bucket-BLAS-scorer dataflow, only the salt hash
-    differs (the minhash_lsh_pairs gate precedent). Production keeps
-    xxhash64: adversarial/clustered ids call for a real mixer.
+    differs. Production keeps xxhash64: adversarial/clustered ids call
+    for a real mixer.
 
     Returns (src, dst, cos_sim, rank) like cell_multiprobe_topk."""
     from assignment_etl_spark.portable import ADD_B, MULT_A, PRIME_P

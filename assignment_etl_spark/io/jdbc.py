@@ -108,13 +108,6 @@ def read_jdbc(
     return reader.jdbc(url, table, properties=properties or {})
 
 
-def write_parquet(df: DataFrame, path: str, *, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def execute_jdbc(
     spark: SparkSession,
     url: str,

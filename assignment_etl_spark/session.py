@@ -91,19 +91,3 @@ def get_spark(
             builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the driver's parquet tables from ``sf_dir`` as a dict of DataFrames."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

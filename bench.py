@@ -363,83 +363,9 @@ def check_registry_partition(queries: dict) -> None:
         )
 
 
-def build_queries(spark) -> dict:
-    """The benched callables: the registry, with the minhash GATE entry
-    (portable-hash oracle variant) swapped for the production numpy
-    path — the one a 100 TB corpus would run — exactly as benched in
-    round 1. Shared with tools/rebaseline_bench.py so the baseline and
-    the per-round bench always measure the SAME callables."""
-    queries = entry_mod.queries()
-
-    def _minhash_production(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from assignment_etl_spark.ext.dedup import minhash_lsh_pairs
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return minhash_lsh_pairs(docs, jaccard_threshold=0.4)
-
-    queries["minhash_lsh_pairs"] = _minhash_production
-
-    def _incremental_minhash_production(spark, sf_dir):
-        # same swap as minhash_lsh_pairs: the benched callable runs the
-        # numpy signature path a 100 TB ingest would run, same dataflow
-        # and output shape as the portable-hash gate. ONE Arrow-UDF
-        # minhash pass signs the whole corpus (history and batch are
-        # disjoint halves of the same table); the store build, the batch
-        # banding, and the stage-2 keeper-signature fetch all reuse it
-        # (guide §4: cross the Python boundary once — was 3 passes).
-        # Signatures are a deterministic function of the text, so the
-        # verdicts are identical to the per-side signing.
-        from pyspark.sql import functions as F
-
-        from assignment_etl_spark.ext.dedup import (
-            _sig_frame,
-            build_band_store,
-            incremental_minhash_dedup,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        hist = docs.filter(F.col("doc_id") % 2 == 0)
-        batch = docs.filter(F.col("doc_id") % 2 == 1)
-        all_sig = _sig_frame(
-            docs, text_col="text", id_col="doc_id", num_hashes=32,
-            shingle_n=5, portable=False, seed=7,
-        )
-        hist_sig = all_sig.filter(F.col("_id") % 2 == 0)
-        batch_sig = all_sig.filter(F.col("_id") % 2 == 1)
-        store = build_band_store(hist, signatures=hist_sig)
-        _surv, delta, dropped = incremental_minhash_dedup(
-            batch, store, history_texts=hist, jaccard_threshold=0.4,
-            batch_signatures=batch_sig, history_signatures=hist_sig,
-        )
-        delta_counts = delta.groupBy(F.col("keeper_id").alias("doc_id")).agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        return (
-            batch.select("doc_id")
-            .join(dropped, on="doc_id", how="left")
-            .join(delta_counts, on="doc_id", how="left")
-            .select(
-                "doc_id",
-                F.coalesce(F.col("reason"), F.lit("kept")).alias("verdict"),
-                F.coalesce(F.col("keeper"), F.lit(-1)).cast("long").alias("keeper"),
-                F.coalesce(F.col("_n"), F.lit(0)).cast("long").alias("n_delta_bands"),
-            )
-        )
-
-    queries["incremental_minhash_documents"] = _incremental_minhash_production
-    return queries
-
-
 def warm_up(spark, queries, sf_dir) -> None:
-    """JVM, parquet footer caches, and the Python UDF worker pool (first
-    pandas_udf call forks the daemon) — not billed to any query."""
+    """JVM and parquet footer caches — not billed to any query."""
     queries["event_type_counts"](spark, sf_dir).collect()
-    from assignment_etl_spark.ext.dedup import make_minhash_signature_udf
-
-    warm_udf = make_minhash_signature_udf(num_hashes=4, shingle_n=3)
-    spark.createDataFrame([("warm",)], "t string").select(warm_udf("t")).collect()
     # List-head warm (VERDICT r9 ask #6): the first HEADLINE query used to
     # absorb the session's remaining one-off codegen/JIT cost that the
     # generic warm-up above doesn't reach (whole-stage-codegen compiler
@@ -497,7 +423,7 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    queries = build_queries(spark)
+    queries = entry_mod.queries()
     check_registry_partition(queries)
     warm_up(spark, queries, sf_dir)
     timings, cold, runs3 = measure_pass(spark, queries, sf_dir)

@@ -166,7 +166,7 @@ def test_minhash_dedup_keep_best(spark):
 
     long_a = "the quick brown fox jumps over the lazy dog again and again. " * 8
     # near-dup: same text with a short appended tail (high shingle overlap)
-    long_b = long_a + "appended trailing sentence here"
+    long_b = long_a + "appended tail"
     other = "completely different content about spark window aggregates here. " * 8
     docs = spark.createDataFrame(
         [(1, long_b), (2, long_a), (3, other)], "doc_id long, text string"
@@ -191,9 +191,14 @@ def test_null_text_docs_never_collapse(spark):
     doc identically and silently drops all but one — drops the
     uncollapsed run never makes (NULL shingles can't form verified
     pairs). Each NULL-text doc must stay its own representative and
-    survive every dedup flavor."""
+    survive every dedup flavor — including the incremental path fed
+    precomputed signatures, where a NULL signature must pass the
+    signature-length check instead of raising."""
     from assignment_etl_spark.ext.dedup import (
         _collapse_exact,
+        _sig_frame,
+        build_band_store,
+        incremental_minhash_dedup,
         minhash_dedup_cc,
         minhash_dedup_keep_best,
     )
@@ -221,6 +226,30 @@ def test_null_text_docs_never_collapse(spark):
         ).collect()
     }
     assert kb[2] and kb[3] and kb[5]  # every NULL-text doc survives
+
+    null_ids = {2, 3, 5}
+    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.3).collect()
+    assert [(r.id_a, r.id_b) for r in pairs] == [(0, 1)]
+
+    sig = _sig_frame(
+        docs, text_col="text", id_col="doc_id", num_hashes=32, shingle_n=5, seed=7
+    )
+    assert {r._id for r in sig.filter(F.col("_sig").isNull()).collect()} == null_ids
+    hist = docs.filter(F.col("doc_id") % 2 == 0)
+    batch = docs.filter(F.col("doc_id") % 2 == 1)
+    hist_sig = sig.filter(F.col("_id") % 2 == 0)
+    surv, _delta, dropped = incremental_minhash_dedup(
+        batch,
+        build_band_store(hist, signatures=hist_sig),
+        history_texts=hist,
+        jaccard_threshold=0.3,
+        batch_signatures=sig.filter(F.col("_id") % 2 == 1),
+        history_signatures=hist_sig,
+    )
+    assert [(r.doc_id, r.reason, r.keeper) for r in dropped.collect()] == [
+        (1, "dup_history", 0)
+    ]
+    assert sorted(r.doc_id for r in surv.collect()) == [3, 5]
 
 
 def test_hard_negatives_label_exclusion(spark):

@@ -50,9 +50,9 @@ def corpus(spark):
 
 def test_drop_semantics_and_delta(spark, corpus):
     hist, batch = corpus
-    store = build_band_store(hist, portable=True)
+    store = build_band_store(hist)
     surv, delta, dropped = incremental_minhash_dedup(
-        batch, store, history_texts=hist, jaccard_threshold=0.4, portable=True
+        batch, store, history_texts=hist, jaccard_threshold=0.4
     )
     got = {r.doc_id: (r.reason, r.keeper) for r in dropped.collect()}
     assert got == {
@@ -71,9 +71,9 @@ def test_store_only_no_history_text(spark, corpus):
     decides (documented LSH-precision caveat); per-batch cost is then
     trivially bounded by batch + matched store rows."""
     hist, batch = corpus
-    store = build_band_store(hist, portable=True)
+    store = build_band_store(hist)
     surv, _delta, dropped = incremental_minhash_dedup(
-        batch, store, jaccard_threshold=0.4, portable=True, verify=False
+        batch, store, jaccard_threshold=0.4, verify=False
     )
     got = {r.doc_id: r.reason for r in dropped.collect()}
     assert got[11] == "dup_history" and got[15] == "dup_batch"
@@ -82,16 +82,16 @@ def test_store_only_no_history_text(spark, corpus):
 
 def test_verify_without_history_texts_raises(spark, corpus):
     hist, batch = corpus
-    store = build_band_store(hist, portable=True)
+    store = build_band_store(hist)
     with pytest.raises(ValueError, match="history_texts"):
-        incremental_minhash_dedup(batch, store, verify=True, portable=True)
+        incremental_minhash_dedup(batch, store, verify=True)
 
 
 def test_no_store_is_within_batch_only(spark, corpus):
     _hist, batch = corpus
     surv, _delta, dropped = incremental_minhash_dedup(
         batch, None, history_texts=None, jaccard_threshold=0.4,
-        portable=True, verify=False,
+        verify=False,
     )
     assert {r.doc_id for r in dropped.collect()} == {15, 17}
     assert surv.count() == 2  # 11 survives: no store to catch it
@@ -105,11 +105,11 @@ def test_per_batch_cost_store_equijoined_once(spark, corpus, tmp_path):
     history (history text never enters the dataflow)."""
     hist, batch = corpus
     p = str(tmp_path / "band_store.parquet")
-    build_band_store(hist, portable=True).write.parquet(p)
+    build_band_store(hist).write.parquet(p)
     store = spark.read.parquet(p)
     spark.conf.set("spark.sql.debug.maxToStringFields", "2000")
     _surv, _delta, dropped = incremental_minhash_dedup(
-        batch, store, jaccard_threshold=0.4, portable=True, verify=False,
+        batch, store, jaccard_threshold=0.4, verify=False,
         eager=False,  # keep the full dataflow visible in the plan
     )
     plan = dropped._sc._jvm.PythonSQLUtils.explainString(
@@ -145,8 +145,8 @@ def test_compaction_preserves_lookup_results(spark, corpus, tmp_path):
     hist, batch = corpus
     p = str(tmp_path / "band_store")
     # blind-append the store in two halves to accumulate small files
-    build_band_store(hist.filter("doc_id <= 2"), portable=True).write.parquet(p)
-    build_band_store(hist.filter("doc_id > 2"), portable=True).write.mode(
+    build_band_store(hist.filter("doc_id <= 2")).write.parquet(p)
+    build_band_store(hist.filter("doc_id > 2")).write.mode(
         "append"
     ).parquet(p)
     n_before = len(glob.glob(f"{p}/**/*.parquet", recursive=True))
@@ -154,7 +154,7 @@ def test_compaction_preserves_lookup_results(spark, corpus, tmp_path):
     def lookup():
         _s, _d, dropped = incremental_minhash_dedup(
             batch, spark.read.parquet(p), history_texts=hist,
-            jaccard_threshold=0.4, portable=True,
+            jaccard_threshold=0.4,
         )
         return sorted((r.doc_id, r.reason, r.keeper) for r in dropped.collect())
 
@@ -177,13 +177,12 @@ def test_tombstoned_keeper_stops_matching(spark, corpus, tmp_path):
 
     hist, batch = corpus
     p = str(tmp_path / "band_store")
-    build_band_store(hist, portable=True).write.parquet(p)
+    build_band_store(hist).write.parquet(p)
     tomb = spark.createDataFrame([(0,)], "keeper_id long")
 
     def dropped_with(store):
         _s, delta, dropped = incremental_minhash_dedup(
             batch, store, history_texts=hist, jaccard_threshold=0.4,
-            portable=True,
         )
         got = {r.doc_id: r.reason for r in dropped.collect()}
         # the documented caller contract: release the returned persisted
@@ -220,11 +219,11 @@ def test_consistent_with_full_corpus_dedup(spark, sf_dir):
     )
     hist = docs.filter(F.col("doc_id") < 250)
     batch = docs.filter(F.col("doc_id") >= 250)
-    store = build_band_store(hist, portable=True)
+    store = build_band_store(hist)
     surv, _delta, _dropped = incremental_minhash_dedup(
-        batch, store, history_texts=hist, jaccard_threshold=0.4, portable=True
+        batch, store, history_texts=hist, jaccard_threshold=0.4
     )
-    full = minhash_dedup(docs, jaccard_threshold=0.4, portable=True)
+    full = minhash_dedup(docs, jaccard_threshold=0.4)
     expected = {r.doc_id for r in full.collect() if r.doc_id >= 250}
     assert {r.doc_id for r in surv.collect()} == expected
 
@@ -244,7 +243,7 @@ def test_compaction_sizing_tracks_erasure(spark, tmp_path):
         "doc_id long, text string",
     )
     p = str(tmp_path / "band_store")
-    build_band_store(docs, portable=True).write.parquet(p)
+    build_band_store(docs).write.parquet(p)
 
     def disk_bytes():
         return sum(
@@ -278,15 +277,15 @@ def test_build_band_store_rejects_signature_length_mismatch(spark, corpus):
     hist, _ = corpus
     bad = _short_signatures(spark, [0, 2, 4], 16)
     with pytest.raises(Exception, match="signature of length 16.*num_hashes=32"):
-        build_band_store(hist, portable=True, signatures=bad).collect()
+        build_band_store(hist, signatures=bad).collect()
 
 
 def test_incremental_dedup_rejects_signature_length_mismatch(spark, corpus):
     hist, batch = corpus
-    store = build_band_store(hist, portable=True)
+    store = build_band_store(hist)
     bad = _short_signatures(spark, [11, 13, 15, 17], 16)
     with pytest.raises(Exception, match="signature of length 16.*num_hashes=32"):
         incremental_minhash_dedup(
             batch, store, history_texts=hist, jaccard_threshold=0.4,
-            portable=True, batch_signatures=bad,
+            batch_signatures=bad,
         )[2].collect()

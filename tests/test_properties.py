@@ -101,12 +101,12 @@ def test_text_metrics_bounded(spark, values):
 @settings(max_examples=1, deadline=None)
 @given(st.lists(TEXTY, min_size=40, max_size=60))
 def test_portable_minhash_matches_python_model(spark, values):
-    """The portable minhash signature (Spark expressions) must equal an
-    independent pure-Python model of the same math on arbitrary text —
+    """The minhash signature (JVM normalization + numpy UDF) must equal
+    an independent pure-Python model of the same math on arbitrary text —
     the cross-engine-exactness claim the DuckDB oracle relies on."""
     from assignment_etl_spark.ext.dedup import (
         PORTABLE_P,
-        portable_minhash_signature,
+        minhash_signature,
         portable_perm_params,
     )
 
@@ -135,7 +135,7 @@ def test_portable_minhash_matches_python_model(spark, values):
     got = {
         r.i: list(r.sig)
         for r in df.select(
-            "i", portable_minhash_signature(F.col("t"), num_hashes, n, seed).alias("sig")
+            "i", minhash_signature(F.col("t"), num_hashes, n, seed).alias("sig")
         ).collect()
     }
     for i, v in enumerate(values):

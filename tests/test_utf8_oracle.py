@@ -51,15 +51,16 @@ def test_exact_dedup_matches_python(spark, docs, docs_df):
 
 def test_portable_minhash_and_bands_match_python(spark, docs, docs_df):
     from assignment_etl_spark.ext.dedup import (
+        _sig_frame,
+        minhash_signature,
         portable_band_hash,
-        portable_minhash_signature,
     )
 
     sig = F.col("sig")
     rows = (
         docs_df.select(
             "doc_id",
-            portable_minhash_signature(F.col("text"), 32, 5, 7).alias("sig"),
+            minhash_signature(F.col("text"), 32, 5, 7).alias("sig"),
         )
         .select(
             "doc_id",
@@ -70,9 +71,20 @@ def test_portable_minhash_and_bands_match_python(spark, docs, docs_df):
         )
         .collect()
     )
+    # the staged frame every LSH pipeline (and the three minhash gates)
+    # bands — fan-out exchange and persist included
+    staged = {
+        r._id: list(r._sig)
+        for r in _sig_frame(
+            docs_df, text_col="text", id_col="doc_id", num_hashes=32,
+            shingle_n=5, seed=7,
+        ).collect()
+    }
+    assert len(staged) == len(rows) == len(docs)
     for r in rows:
         want_sig = O.minhash_sig(dict(docs)[r.doc_id])
         assert list(r.sig) == want_sig, f"sig mismatch doc {r.doc_id}"
+        assert staged[r.doc_id] == want_sig, f"_sig_frame mismatch doc {r.doc_id}"
         assert list(r.bands) == O.band_hashes(want_sig), f"bands doc {r.doc_id}"
 
 

@@ -20,6 +20,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+import __spark_entry__ as entry  # noqa: E402
 import bench as bench_mod  # noqa: E402
 from assignment_etl_spark.caching import release_scoped_caches  # noqa: E402
 from assignment_etl_spark.session import get_spark  # noqa: E402
@@ -81,7 +82,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = bench_mod.build_queries(spark)
+    queries = entry.queries()
     if top:
         with open("/root/repo/BENCH_FULL.json") as f:
             full = json.load(f)

@@ -7,7 +7,7 @@ untouched queries. This tool produces a HOMOGENEOUS baseline:
 
   - one Spark session, one warm-up, then FOUR full measurement passes
     of the entire bench headline (each pass = bench.py's min-of-3 per
-    query, the exact callables bench.py times via build_queries);
+    query, the exact callables bench.py times: __spark_entry__.queries());
   - the baseline value per query is the MAX across passes 1–3 — the
     conservative envelope of an idle session. NOT the median: a
     median over in-session passes under-baselines list-head queries
@@ -34,7 +34,8 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from bench import HEADLINE, build_queries, measure_pass, warm_up  # noqa: E402
+import __spark_entry__ as entry  # noqa: E402
+from bench import HEADLINE, measure_pass, warm_up  # noqa: E402
 from assignment_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -44,7 +45,7 @@ def main() -> int:
     load1 = os.getloadavg()[0]
     spark = get_spark("rebaseline")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = build_queries(spark)
+    queries = entry.queries()
     warm_up(spark, queries, sf_dir)
 
     passes = []
@@ -82,7 +83,7 @@ def main() -> int:
             "Round-7 homogeneous re-baseline (VERDICT r6 ask #1): ONE "
             "Spark session, one warm-up, four consecutive full passes of "
             f"the {len(HEADLINE)}-query headline (each pass = bench.py "
-            "min-of-3 per query, same callables via bench.build_queries). "
+            "min-of-3 per query, same callables: __spark_entry__.queries()). "
             "Per-query baseline = MAX across passes 1-3 (conservative "
             "idle envelope: an in-session median under-baselines "
             "list-head queries whose fresh-session first-run cost the "

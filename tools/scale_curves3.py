@@ -9,11 +9,11 @@ visible: between sf1 and sf10 data grows 10×, so a linear operator's
 RATIO2 (sf10/sf1) must approach ~10× once out of the latency floor, and
 anything well beyond ~12× (or ~20× for sort-bound) is a plan bug.
 
-Callables come from bench.build_queries — the PRODUCTION variants a real
-cluster would run (numpy minhash, not the interpreted-HOF portable
-oracle flavor, whose per-element expression eval is a measurement
-artifact at 100× data: jstack showed ArrayTransform.eval grinding 4G+
-interpreted ops in the portable signature projection).
+Callables are the gates of __spark_entry__.queries() — the ones
+bench.py times — with three scaled overrides defined below:
+dedup_keep_best_quality with its production default collapse_exact=True,
+the media decoders with a payload count that grows with the corpus, and
+a constant-density geo_radius_pairs.
 
 Env knobs: SCALE3_REPEATS (default 2), SCALE3_SF10_BUDGET seconds
 (default 120 — if the sf1 run already exceeds it, the sf10 point is
@@ -156,16 +156,17 @@ def main() -> int:
     sf10_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf10_synth"
     names = sys.argv[3:] or TARGETS
 
-    import bench
+    import __spark_entry__ as entry
     from assignment_etl_spark.session import get_spark
 
     spark = get_spark("scale-curves3")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = bench.build_queries(spark)
+    qs = entry.queries()
 
     def _keep_best_production(spark, sf_dir):
-        # same swap rationale as bench's minhash override: the gate runs
-        # portable=True for the oracle; a cluster runs the numpy path
+        # the gate pins collapse_exact=False so the oracle replays the
+        # uncollapsed clique graph; a corpus pipeline runs the default
+        # collapse_exact=True
         from pyspark.sql import functions as F
 
         from assignment_etl_spark.ext.dedup import minhash_dedup_keep_best
@@ -185,8 +186,6 @@ def main() -> int:
         )
 
     qs["dedup_keep_best_quality"] = _keep_best_production
-
-    import __spark_entry__ as entry
 
     def _scaled_media(gate):
         # the gate pins 24 payloads for the oracle; the sweep scales the

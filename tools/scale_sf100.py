@@ -46,12 +46,12 @@ def main() -> int:
     sf100_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf100_synth"
     names = sys.argv[3:] or TARGETS
 
-    import bench
+    import __spark_entry__ as entry
     from assignment_etl_spark.session import get_spark
 
     spark = get_spark("scale-sf100")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = bench.build_queries(spark)
+    qs = entry.queries()
 
     print("| query | sf10 s | sf100 s | r3 (sf100/sf10) | rows 10→100 | verdict |")
     print("|---|---|---|---|---|---|")

@@ -97,8 +97,9 @@ def exact_dedup_survivors(docs: list[tuple[int, str]]) -> list[tuple]:
 
 
 def gram_hashes(text: str, n: int = 5) -> set[int]:
-    """Distinct 31-ary codepoint-polynomial n-gram hashes mod P31 —
-    ext/dedup.portable_gram_hashes (right-padded to n with spaces)."""
+    """Distinct 31-ary codepoint-polynomial n-gram hashes mod P31 — the
+    grams ext/dedup.minhash_signature hashes (normalized text
+    right-padded to n with spaces)."""
     s = norm_text(text)
     if len(s) < n:
         s = s.ljust(n, " ")
