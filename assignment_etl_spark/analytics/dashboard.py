@@ -8,6 +8,7 @@ returns only render-sized results — the design that survives 100 TB tables.
 |---------------------------------------------|------------------------|
 | table pick + head (36-42)                   | table_overview         |
 | dtype-driven column pickers (47-49)         | classify_columns (P8)  |
+| row count + bounds, once per table          | table_stats            |
 | numeric histogram, 30 bins (67-70)          | numeric_histogram      |
 | scatter w/ optional category color (72-93)  | scatter_sample         |
 | records-over-time, 50 bins (98-110)         | records_over_time      |
@@ -17,6 +18,9 @@ returns only render-sized results — the design that survives 100 TB tables.
 | quality: affected patients (159-177)        | quality_report         |
 | quality: reason drilldown (180-186)         | quality_drilldown      |
 | quality: CSV export (189-194)               | export_csv             |
+
+The served dashboard and the static export take ``table_stats`` once per
+table and pass its count and bounds on, so each widget is one aggregation.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from assignment_etl_spark.analytics.queries import (
+    affected_entities,
     group_sizes,
     histogram_numeric,
     histogram_time,
@@ -52,17 +57,30 @@ def classify_columns(df: DataFrame) -> dict[str, list[str]]:
     return out
 
 
+def table_stats(df: DataFrame) -> dict:
+    """One aggregation over the table: its row count, its column kinds
+    (``classify_columns``) and the ``(min, max)`` bounds of each numeric
+    column as double and each datetime column as epoch seconds — the
+    bounds ``histogram_numeric`` and ``histogram_time`` would compute per
+    call. A column with no non-NULL value has bounds ``(None, None)``."""
+    kinds = classify_columns(df)
+    exprs = [F.col(c).cast("double") for c in kinds["numeric"]]
+    exprs += [F.unix_timestamp(F.col(c)).cast("double") for c in kinds["datetime"]]
+    row = df.agg(
+        F.count(F.lit(1)), *[agg(e) for e in exprs for agg in (F.min, F.max)]
+    ).first()
+    cols = kinds["numeric"] + kinds["datetime"]
+    bounds = {c: (row[1 + 2 * i], row[2 + 2 * i]) for i, c in enumerate(cols)}
+    return {"rows": row[0], "kinds": kinds, "bounds": bounds}
+
+
 def table_overview(df: DataFrame, n: int = 5) -> tuple[DataFrame, dict[str, list[str]]]:
     """Head preview (P9) + column classification."""
     return df.limit(n), classify_columns(df)
 
 
-def numeric_histogram(df: DataFrame, column: str, nbins: int = 30) -> DataFrame:
-    return histogram_numeric(df, column, nbins)
-
-
-def records_over_time(df: DataFrame, ts_column: str, nbins: int = 50) -> DataFrame:
-    return histogram_time(df, ts_column, nbins)
+numeric_histogram = histogram_numeric
+records_over_time = histogram_time
 
 
 def scatter_sample(
@@ -108,17 +126,10 @@ def top_categories(df: DataFrame, column: str, k: int = 20) -> DataFrame:
 def quality_report(logs_df: DataFrame, *, entity_file_token: str = "patient") -> dict:
     """The Data Quality tab in one call: reason histogram, file × reason
     matrix, and distinct affected entities from matching source files."""
-    scoped = logs_df.filter(
-        F.col("filename").isNotNull()
-        & F.lower(F.col("filename")).contains(entity_file_token.lower())
-    )
     return {
         "reason_counts": value_counts(logs_df, "reason"),
         "file_reason_counts": group_sizes(logs_df, ["filename", "reason"]),
-        "affected_entities": scoped.agg(
-            F.countDistinct("patient_id").alias("affected"),
-            F.countDistinct("patient_id", "reason").alias("entity_reason_pairs"),
-        ),
+        "affected_entities": affected_entities(logs_df, filename_contains=entity_file_token),
     }
 
 

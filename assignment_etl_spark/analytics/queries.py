@@ -7,8 +7,9 @@ compiles to TakeOrderedAndProject (no global sort).
 
 Scale notes: value_counts/top_k shuffle once on the group key (map-side
 partial agg first); distinct_count offers approx_count_distinct for the
-100 TB path; histograms are a single pass (bucket = arithmetic, then one
-aggregation) rather than a driver-side binning.
+100 TB path; a histogram is one aggregation (bucket = arithmetic) once its
+bounds are known. Render-sized results (value_counts, the histograms) sort
+inside one partition: no range-partition sample or sort exchange.
 """
 
 from __future__ import annotations
@@ -17,11 +18,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def value_counts(df: DataFrame, column: str, *, desc: bool = True) -> DataFrame:
+def value_counts(df: DataFrame, column: str) -> DataFrame:
     """A1: group-count sorted by frequency (dashboard reason histogram,
     interactive_dashboard.py:134-135)."""
-    out = df.groupBy(column).agg(F.count(F.lit(1)).alias("count"))
-    return out.orderBy(F.desc("count"), F.col(column)) if desc else out
+    return (
+        df.groupBy(column)
+        .agg(F.count(F.lit(1)).alias("count"))
+        .coalesce(1)
+        .sortWithinPartitions(F.desc("count"), F.col(column))
+    )
 
 
 def top_k(df: DataFrame, column: str, k: int) -> DataFrame:
@@ -68,6 +73,25 @@ def bucketize(col: Column, min_val: float, max_val: float, nbins: int) -> Column
     return F.least(F.greatest(idx, F.lit(0)), F.lit(nbins - 1)).cast("bigint")
 
 
+def _histogram(
+    df: DataFrame, column: str, value: Column, nbins: int, lo: float | None, hi: float | None
+) -> DataFrame:
+    """Equal-width bucket counts of ``value`` over the rows where
+    ``column`` is not NULL, ordered by bucket. Bounds not given come from a
+    first min/max pass; the dashboard passes them from its table stats
+    (dashboard.table_stats) instead."""
+    if lo is None or hi is None:
+        mn, mx = df.agg(F.min(value), F.max(value)).first()
+        lo, hi = (mn if lo is None else lo), (mx if hi is None else hi)
+    return (
+        df.filter(F.col(column).isNotNull())
+        .groupBy(bucketize(value, lo, hi, nbins).alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("count"))
+        .coalesce(1)
+        .sortWithinPartitions("bucket")
+    )
+
+
 def histogram_numeric(
     df: DataFrame,
     column: str,
@@ -77,21 +101,8 @@ def histogram_numeric(
     max_val: float | None = None,
 ) -> DataFrame:
     """A6: equal-width histogram (px.histogram nbins,
-    interactive_dashboard.py:69). If bounds are not given they are computed
-    in a first cheap pass (min/max agg — at 100 TB this is a single scan,
-    or supply bounds from table stats)."""
-    if min_val is None or max_val is None:
-        mn, mx = df.agg(
-            F.min(F.col(column).cast("double")), F.max(F.col(column).cast("double"))
-        ).first()
-        min_val = mn if min_val is None else min_val
-        max_val = mx if max_val is None else max_val
-    return (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(bucketize(F.col(column), min_val, max_val, nbins).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy("bucket")
-    )
+    interactive_dashboard.py:69)."""
+    return _histogram(df, column, F.col(column).cast("double"), nbins, min_val, max_val)
 
 
 def histogram_time(
@@ -105,16 +116,7 @@ def histogram_time(
     """A6 time variant: records-over-time histogram
     (interactive_dashboard.py:98-110) over epoch seconds."""
     epoch = F.unix_timestamp(F.col(ts_column)).cast("double")
-    if min_ts is None or max_ts is None:
-        mn, mx = df.agg(F.min(epoch), F.max(epoch)).first()
-        min_ts = mn if min_ts is None else min_ts
-        max_ts = mx if max_ts is None else max_ts
-    return (
-        df.filter(F.col(ts_column).isNotNull())
-        .groupBy(bucketize(epoch, min_ts, max_ts, nbins).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy("bucket")
-    )
+    return _histogram(df, ts_column, epoch, nbins, min_ts, max_ts)
 
 
 def affected_entities(

@@ -6,31 +6,38 @@ dependency-free HTML report over the engine's pushdown widget queries
 The reference ships whole tables to the browser and lets plotly aggregate;
 here every figure is computed by Spark (histogram_numeric / histogram_time /
 top_k / scatter_sample / quality_report return render-sized results) and the
-driver only assembles inline SVG — the shape that still works when the
-tables are 100 TB. No Streamlit/plotly in the container, so the output is a
-self-contained .html anyone can open; the widget inventory matches the
-reference tab-for-tab (preview, numeric histogram, scatter, records over
-time, categorical top-N, data-quality tab for logs).
+driver only assembles inline SVG. The ``*_chart`` helpers are the one
+widget layer, called by the served dashboard (analytics/server.py) and by
+this static export: each is one aggregation over the bounds and row count
+``table_stats`` took once per table. The output is a self-contained .html
+whose widgets match the reference tab-for-tab (preview, numeric histogram,
+scatter, records over time, categorical top-N, data-quality tab for logs).
 """
 
 from __future__ import annotations
 
 import html
+from collections import Counter
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
 from assignment_etl_spark.analytics.dashboard import (
-    classify_columns,
-    numeric_histogram,
     quality_report,
-    records_over_time,
     scatter_sample,
+    table_stats,
     top_categories,
 )
+from assignment_etl_spark.analytics.queries import histogram_numeric, histogram_time
 
 _W, _H, _PAD = 640, 220, 40
 _PALETTE = ["#4e79a7", "#f28e2b", "#59a14f", "#e15759", "#76b7b2", "#edc948"]
+_STYLE = (
+    "<style>body{font-family:sans-serif;max-width:820px;margin:auto}"
+    "table{border-collapse:collapse;font-size:12px}"
+    "td,th{border:1px solid #ccc;padding:2px 6px}svg{display:block;margin:12px 0}"
+    "</style>"
+)
 
 
 def _esc(v: object) -> str:
@@ -110,48 +117,75 @@ def _html_table(rows: list[dict], max_rows: int = 25) -> str:
     return f"<table><thead><tr>{head}</tr></thead><tbody>{body}</tbody></table>"
 
 
-def render_table_section(df: DataFrame, name: str, *, id_col: str | None = None) -> str:
-    """One table's tab set: preview + numeric/datetime/categorical widgets
-    (reference tabs at interactive_dashboard.py:52-121)."""
-    kinds = classify_columns(df)
-    parts = [f"<h2>{_esc(name)}</h2>", "<h3>Preview</h3>",
-             _html_table([r.asDict() for r in df.limit(5).collect()])]
-
-    for c in kinds["numeric"][:3]:
-        hist = numeric_histogram(df, c, nbins=30).collect()
-        parts.append(_svg_bars([r["bucket"] for r in hist],
-                               [r["count"] for r in hist], f"Distribution of {c}"))
-    if len(kinds["numeric"]) >= 2:
-        x, y = kinds["numeric"][0], kinds["numeric"][1]
-        color = kinds["categorical"][0] if kinds["categorical"] else None
-        pts = scatter_sample(df, x, y, color, max_points=1000, id_col=id_col).collect()
-        parts.append(_svg_scatter(
-            [r[x] for r in pts], [r[y] for r in pts],
-            [r[color] if color else "all" for r in pts],
-            f"{y} vs {x}" + (f" colored by {color}" if color else "")))
-    for c in kinds["datetime"][:2]:
-        hist = records_over_time(df, c, nbins=50).collect()
-        parts.append(_svg_bars([r["bucket"] for r in hist],
-                               [r["count"] for r in hist], f"Records over time by {c}"))
-    for c in kinds["categorical"][:2]:
-        top = top_categories(df, c, k=10).collect()
-        parts.append(_svg_bars([r[c] for r in top], [r["count"] for r in top],
-                               f"Top 10 values of {c}"))
-    return "\n".join(parts)
+def html_page(title: str, body: str) -> str:
+    return (
+        f"<!doctype html><html><head><meta charset='utf-8'><title>{_esc(title)}"
+        f"</title>{_STYLE}</head><body><h1>{_esc(title)}</h1>{body}</body></html>"
+    )
 
 
-def render_quality_section(logs_df: DataFrame) -> str:
-    """The Data Quality tab (reference interactive_dashboard.py:134-186)."""
+def _bars(rows: list, label: str, title: str) -> str:
+    return _svg_bars([r[label] for r in rows], [r["count"] for r in rows], title)
+
+
+def preview_table(df: DataFrame) -> str:
+    return _html_table([r.asDict() for r in df.limit(5).collect()])
+
+
+def histogram_chart(df: DataFrame, stats: dict, column: str, bins: int) -> str:
+    """Numeric histogram over the ``table_stats`` bounds; a column with no
+    non-NULL value is an empty chart."""
+    lo, hi = stats["bounds"][column]
+    rows = [] if lo is None else histogram_numeric(
+        df, column, bins, min_val=lo, max_val=hi).collect()
+    return _bars(rows, "bucket", f"Distribution of {column}")
+
+
+def timeline_chart(df: DataFrame, stats: dict, column: str, bins: int) -> str:
+    """Records-over-time bars over the ``table_stats`` bounds."""
+    lo, hi = stats["bounds"][column]
+    rows = [] if lo is None else histogram_time(
+        df, column, bins, min_ts=lo, max_ts=hi).collect()
+    return _bars(rows, "bucket", f"Records over time by {column}")
+
+
+def categories_chart(df: DataFrame, column: str, k: int) -> str:
+    return _bars(top_categories(df, column, k).collect(), column,
+                 f"Top {k} values of {column}")
+
+
+def scatter_chart(df: DataFrame, stats: dict, x: str, y: str, color: str | None,
+                  id_col: str | None) -> str:
+    """About 1,000 points sampled against the ``table_stats`` row count."""
+    pts = scatter_sample(df, x, y, color, max_points=1000, id_col=id_col,
+                         total_rows=stats["rows"]).collect()
+    return _svg_scatter(
+        [r[x] for r in pts], [r[y] for r in pts],
+        [r[color] if color else "all" for r in pts],
+        f"{y} vs {x}" + (f" colored by {color}" if color else ""))
+
+
+def quality_section(logs_df: DataFrame) -> tuple[str, list]:
+    """The Data Quality tab (reference interactive_dashboard.py:134-177)
+    from the file × reason counts and the affected-entity counts. The
+    reason bars sum the file × reason rows, in ``value_counts`` order
+    (count descending, reason ascending, NULL first). Returns the HTML and
+    the reasons in bar order."""
     rep = quality_report(logs_df)
-    reasons = rep["reason_counts"].collect()
-    parts = ["<h2>Data Quality</h2>",
-             _svg_bars([r["reason"] for r in reasons], [r["count"] for r in reasons],
-                       "Log entries per reason"),
-             "<h3>File × reason</h3>",
-             _html_table([r.asDict() for r in rep["file_reason_counts"].collect()]),
-             "<h3>Affected entities</h3>",
-             _html_table([r.asDict() for r in rep["affected_entities"].collect()])]
-    return "\n".join(parts)
+    files = rep["file_reason_counts"].collect()
+    totals: Counter = Counter()
+    for r in files:
+        totals[r["reason"]] += r["count"]
+    reasons = sorted(totals, key=lambda v: (-totals[v], v is not None, v or ""))
+    files.sort(key=lambda r: [(v is not None, v or "") for v in (r["filename"], r["reason"])])
+    html_ = "\n".join([
+        _svg_bars(reasons, [totals[r] for r in reasons], "Frequency of Data Quality Issues"),
+        "<h3>Issues per source file</h3>",
+        _html_table([r.asDict() for r in files]),
+        "<h3>Affected patients</h3>",
+        _html_table([r.asDict() for r in rep["affected_entities"].collect()]),
+    ])
+    return html_, reasons
 
 
 def render_dashboard(
@@ -167,19 +201,20 @@ def render_dashboard(
     sections = []
     for name, df in tables.items():
         if name == logs_table:
-            sections.append(render_quality_section(df))
-        else:
-            sections.append(render_table_section(df, name, id_col=id_cols.get(name)))
-    doc = (
-        "<!doctype html><html><head><meta charset='utf-8'>"
-        "<title>ETL Data Distribution Dashboard</title>"
-        "<style>body{font-family:sans-serif;max-width:820px;margin:auto}"
-        "table{border-collapse:collapse;font-size:12px}"
-        "td,th{border:1px solid #ccc;padding:2px 6px}svg{display:block;margin:12px 0}"
-        "</style></head><body><h1>ETL Data Distribution Dashboard</h1>"
-        + "\n".join(sections)
-        + "</body></html>"
-    )
+            sections.append("<h2>Data Quality</h2>\n" + quality_section(df)[0])
+            continue
+        # the reference's tabs (interactive_dashboard.py:52-121)
+        stats = table_stats(df)
+        num, cat = stats["kinds"]["numeric"], stats["kinds"]["categorical"]
+        parts = [f"<h2>{_esc(name)}</h2>", "<h3>Preview</h3>", preview_table(df)]
+        parts += [histogram_chart(df, stats, c, 30) for c in num[:3]]
+        if len(num) >= 2:
+            parts.append(scatter_chart(df, stats, num[0], num[1], cat[0] if cat else None,
+                                       id_cols.get(name)))
+        parts += [timeline_chart(df, stats, c, 50) for c in stats["kinds"]["datetime"][:2]]
+        parts += [categories_chart(df, c, 10) for c in cat[:2]]
+        sections.append("\n".join(parts))
+    doc = html_page("ETL Data Distribution Dashboard", "\n".join(sections))
     with open(out_path, "w", encoding="utf-8") as f:
         f.write(doc)
     return out_path

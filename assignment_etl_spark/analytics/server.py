@@ -5,11 +5,17 @@ stdlib ``http.server`` endpoint over the engine's pushdown widget queries.
 Widget-for-widget parity, but with the serving model inverted for scale:
 Streamlit loads ENTIRE tables into pandas per rerun (`pd.read_sql_table`,
 interactive_dashboard.py:25-27) and lets plotly aggregate in the browser;
-here every widget change is a fresh HTTP request whose handler re-runs
-the corresponding *pushed-down* Spark query (analytics/dashboard.py) and
-returns a render-sized HTML fragment from analytics/render.py's SVG
-helpers. A 100 TB table costs one aggregation per interaction, never a
-table download.
+here a widget change is an HTTP request that runs one pushed-down Spark
+aggregation through analytics/render.py's chart helpers and returns a
+render-sized HTML fragment — never a table download.
+
+The app serves a snapshot: it takes ``table_stats`` once per table (row
+count, column kinds, numeric and datetime bounds), so a histogram or
+timeline runs no bounds pass and a scatter no count; /quality sums its
+reason bars from the file × reason counts. Columns are checked against
+that schema before any query is built (a bad one is a 400). The stats are
+read-only, so the handler threads share them without a lock; a rewritten
+store needs a new app.
 
 Routes → reference widgets:
   /                         table selectbox (dashboard.py:37)
@@ -21,11 +27,6 @@ Routes → reference widgets:
   /quality                   Data Quality tab (134-177)
   /drilldown?reason=R        reason drilldown table (180-186)
   /download?reason=R         filtered-log CSV download (189-194)
-
-Concurrency note: handlers run on the server thread pool but all Spark
-work happens through the one driver session — fine for a dashboard's
-request rates; put a real ASGI front and a query cache in front for
-multi-user production.
 """
 
 from __future__ import annotations
@@ -37,39 +38,52 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from assignment_etl_spark.analytics.dashboard import (
-    classify_columns,
-    numeric_histogram,
-    quality_drilldown,
-    quality_report,
-    records_over_time,
-    scatter_sample,
-    top_categories,
+from assignment_etl_spark.analytics.dashboard import quality_drilldown, table_stats
+from assignment_etl_spark.analytics.render import (
+    _esc,
+    _html_table,
+    categories_chart,
+    histogram_chart,
+    html_page,
+    preview_table,
+    quality_section,
+    scatter_chart,
+    timeline_chart,
 )
-from assignment_etl_spark.analytics.render import _esc, _html_table, _svg_bars, _svg_scatter
 
 DRILLDOWN_COLS = ["patient_id", "filename", "original_value", "cleaned_value", "reason"]
-_STYLE = (
-    "<style>body{font-family:sans-serif;max-width:820px;margin:auto}"
-    "table{border-collapse:collapse;font-size:12px}"
-    "td,th{border:1px solid #ccc;padding:2px 6px}svg{display:block;margin:12px 0}"
-    "</style>"
-)
 
 
 def _page(title: str, body: str) -> bytes:
-    return (
-        f"<!doctype html><html><head><meta charset='utf-8'><title>{_esc(title)}"
-        f"</title>{_STYLE}</head><body><h1>{_esc(title)}</h1>{body}"
-        "<p><a href='/'>⌂ tables</a></p></body></html>"
-    ).encode()
+    return html_page(title, body + "<p><a href='/'>⌂ tables</a></p>").encode()
+
+
+def _bins(params: dict, default: str) -> int:
+    bins = int(params.get("bins", [default])[0])
+    if bins < 1:
+        raise ValueError("bins must be at least 1")
+    return bins
+
+
+def _column(
+    params: dict, key: str, df: DataFrame, stats: dict, kind: str | None = None
+) -> str:
+    """``params[key]`` checked against the table's schema and, with
+    ``kind``, against that ``classify_columns`` kind."""
+    col = params[key][0]
+    if col not in df.columns:
+        raise KeyError(f"unknown column {col!r}")
+    if kind is not None and col not in stats["kinds"][kind]:
+        raise ValueError(f"column {col!r} is not {kind}")
+    return col
 
 
 class DashboardApp:
     """Routes widget requests onto pushdown queries. Split from the HTTP
-    handler so tests can drive it directly and any front end can reuse it."""
+    handler so tests can drive it directly and any front end can reuse it.
+    Serves a snapshot: ``__init__`` takes ``table_stats`` of every table
+    once, so a store rewritten while it is served needs a new app."""
 
     def __init__(
         self,
@@ -81,12 +95,13 @@ class DashboardApp:
         self.tables = tables
         self.logs_table = logs_table
         self.id_cols = id_cols or {}
+        self.stats = {name: table_stats(df) for name, df in tables.items()}
 
-    def _df(self, params: dict, key: str = "table") -> DataFrame:
+    def _table(self, params: dict, key: str = "table") -> tuple[str, DataFrame, dict]:
         name = params.get(key, [""])[0]
         if name not in self.tables:
             raise KeyError(f"unknown table {name!r}")
-        return self.tables[name]
+        return name, self.tables[name], self.stats[name]
 
     # ------------------------------------------------------------ routes
 
@@ -98,128 +113,69 @@ class DashboardApp:
         return _page("ETL Data Distribution Dashboard", f"<ul>{links}</ul>")
 
     def table(self, params: dict) -> bytes:
-        name = params.get("name", [""])[0]
-        df = self._df({"table": [name]})
-        kinds = classify_columns(df)
-        preview = _html_table([r.asDict() for r in df.limit(5).collect()])
-        pickers = []
-        for c in kinds["numeric"]:
-            pickers.append(
-                f"<li><a href='/histogram?table={name}&column={c}&bins=30'>"
-                f"histogram of {_esc(c)}</a></li>"
-            )
-        for c in kinds["datetime"]:
-            pickers.append(
-                f"<li><a href='/timeline?table={name}&column={c}&bins=50'>"
-                f"records over time by {_esc(c)}</a></li>"
-            )
-        for c in kinds["categorical"]:
-            pickers.append(
-                f"<li><a href='/categories?table={name}&column={c}&k=10'>"
-                f"top values of {_esc(c)}</a></li>"
-            )
+        name, df, stats = self._table(params, "name")
+        kinds = stats["kinds"]
+        links = [(f"histogram?table={name}&column={c}&bins=30", f"histogram of {c}")
+                 for c in kinds["numeric"]]
+        links += [(f"timeline?table={name}&column={c}&bins=50", f"records over time by {c}")
+                  for c in kinds["datetime"]]
+        links += [(f"categories?table={name}&column={c}&k=10", f"top values of {c}")
+                  for c in kinds["categorical"]]
         if len(kinds["numeric"]) >= 2:
             x, y = kinds["numeric"][:2]
-            pickers.append(
-                f"<li><a href='/scatter?table={name}&x={x}&y={y}'>"
-                f"scatter {_esc(y)} vs {_esc(x)}</a></li>"
-            )
-        body = f"<h3>Preview of {_esc(name)}</h3>{preview}<ul>{''.join(pickers)}</ul>"
+            links.append((f"scatter?table={name}&x={x}&y={y}", f"scatter {y} vs {x}"))
+        pickers = "".join(f"<li><a href='/{href}'>{_esc(text)}</a></li>" for href, text in links)
+        body = f"<h3>Preview of {_esc(name)}</h3>{preview_table(df)}<ul>{pickers}</ul>"
         if name == self.logs_table:
             body += "<p><a href='/quality'>🧹 Data Quality tab</a></p>"
         return _page(f"Table {name}", body)
 
     def histogram(self, params: dict) -> bytes:
-        df = self._df(params)
-        col = params["column"][0]
-        bins = int(params.get("bins", ["30"])[0])
-        rows = numeric_histogram(df, col, nbins=bins).collect()
-        svg = _svg_bars(
-            [r["bucket"] for r in rows], [r["count"] for r in rows],
-            f"Distribution of {col}",
-        )
+        _, df, stats = self._table(params)
+        col = _column(params, "column", df, stats, "numeric")
+        svg = histogram_chart(df, stats, col, _bins(params, "30"))
         return _page(f"Distribution of {col}", svg)
 
     def timeline(self, params: dict) -> bytes:
-        df = self._df(params)
-        col = params["column"][0]
-        bins = int(params.get("bins", ["50"])[0])
-        rows = records_over_time(df, col, nbins=bins).collect()
-        svg = _svg_bars(
-            [r["bucket"] for r in rows], [r["count"] for r in rows],
-            f"Records over time by {col}",
-        )
+        _, df, stats = self._table(params)
+        col = _column(params, "column", df, stats, "datetime")
+        svg = timeline_chart(df, stats, col, _bins(params, "50"))
         return _page(f"Records over time by {col}", svg)
 
     def categories(self, params: dict) -> bytes:
-        df = self._df(params)
-        col = params["column"][0]
-        k = int(params.get("k", ["10"])[0])  # slider 5..50, validated below
-        rows = top_categories(df, col, k=k).collect()
-        svg = _svg_bars(
-            [r[col] for r in rows], [r["count"] for r in rows],
-            f"Top {k} values of {col}",
-        )
-        return _page(f"Top {k} values of {col}", svg)
+        _, df, stats = self._table(params)
+        col = _column(params, "column", df, stats)
+        k = int(params.get("k", ["10"])[0])  # slider 5..50, validated by top_categories
+        return _page(f"Top {k} values of {col}", categories_chart(df, col, k))
 
     def scatter(self, params: dict) -> bytes:
-        name = params.get("table", [""])[0]
-        df = self._df(params)
-        x, y = params["x"][0], params["y"][0]
-        color = params.get("color", [None])[0]
-        pts = scatter_sample(
-            df, x, y, color, max_points=1000, id_col=self.id_cols.get(name)
-        ).collect()
-        svg = _svg_scatter(
-            [r[x] for r in pts], [r[y] for r in pts],
-            [r[color] if color else "all" for r in pts],
-            f"{y} vs {x}" + (f" colored by {color}" if color else ""),
-        )
+        name, df, stats = self._table(params)
+        x, y = (_column(params, key, df, stats, "numeric") for key in ("x", "y"))
+        color = _column(params, "color", df, stats) if "color" in params else None
+        svg = scatter_chart(df, stats, x, y, color, self.id_cols.get(name))
         return _page(f"{y} vs {x}", svg)
 
     def quality(self, params: dict) -> bytes:
-        logs = self.tables[self.logs_table]
-        rep = quality_report(logs)
-        reasons = rep["reason_counts"].collect()
+        body, reasons = quality_section(self.tables[self.logs_table])
         drill = "".join(
-            f"<li><a href='/drilldown?reason={_esc(r['reason'])}'>{_esc(r['reason'])}"
-            f"</a> (<a href='/download?reason={_esc(r['reason'])}'>csv</a>)</li>"
+            f"<li><a href='/drilldown?reason={_esc(r)}'>{_esc(r)}"
+            f"</a> (<a href='/download?reason={_esc(r)}'>csv</a>)</li>"
             for r in reasons
         )
-        body = "\n".join(
-            [
-                _svg_bars(
-                    [r["reason"] for r in reasons], [r["count"] for r in reasons],
-                    "Frequency of Data Quality Issues",
-                ),
-                "<h3>Issues per source file</h3>",
-                _html_table([r.asDict() for r in rep["file_reason_counts"].collect()]),
-                "<h3>Affected patients</h3>",
-                _html_table([r.asDict() for r in rep["affected_entities"].collect()]),
-                "<h3>Inspect specific issue type</h3>",
-                f"<ul>{drill}</ul>",
-            ]
-        )
+        body += f"\n<h3>Inspect specific issue type</h3>\n<ul>{drill}</ul>"
         return _page("Data Quality Overview", body)
 
     def _drill_rows(self, params: dict, limit: int = 1000) -> list[dict]:
         reason = params.get("reason", [""])[0]
         logs = self.tables[self.logs_table]
         cols = [c for c in DRILLDOWN_COLS if c in logs.columns]
-        rows = (
-            quality_drilldown(logs, reason)
-            .select(*cols)
-            .orderBy(*[F.col(c) for c in cols])
-            .limit(limit)
-            .collect()
-        )
-        return [r.asDict() for r in rows]
+        rows = quality_drilldown(logs, reason).select(*cols).orderBy(*cols).limit(limit)
+        return [r.asDict() for r in rows.collect()]
 
     def drilldown(self, params: dict) -> bytes:
         reason = params.get("reason", [""])[0]
-        return _page(
-            f"Issue type: {reason}", _html_table(self._drill_rows(params), max_rows=1000)
-        )
+        rows = self._drill_rows(params)
+        return _page(f"Issue type: {reason}", _html_table(rows, max_rows=1000))
 
     def download(self, params: dict) -> tuple[bytes, str, str]:
         """CSV export of the drilldown — body, content type, filename."""
@@ -236,23 +192,21 @@ class DashboardApp:
 def serve_dashboard(
     tables: dict[str, DataFrame],
     *,
+    host: str = "127.0.0.1",
     port: int = 0,
     logs_table: str = "logs",
     id_cols: dict[str, str] | None = None,
 ) -> ThreadingHTTPServer:
-    """Start the dashboard server on ``port`` (0 = ephemeral) in a daemon
-    thread and return the server (``.server_address[1]`` is the bound
-    port; ``.shutdown()`` stops it)."""
+    """Start the dashboard server on ``host``:``port`` (0 = ephemeral) in a
+    daemon thread and return the server (``.server_address`` is the bound
+    address; ``.shutdown()`` stops it). The tables are served as the
+    snapshot ``DashboardApp`` took their stats of; serve a rewritten store
+    with a new call."""
     app = DashboardApp(tables, logs_table=logs_table, id_cols=id_cols)
-    routes = {
-        "/": app.index,
-        "/table": app.table,
-        "/histogram": app.histogram,
-        "/timeline": app.timeline,
-        "/categories": app.categories,
-        "/scatter": app.scatter,
-        "/quality": app.quality,
-        "/drilldown": app.drilldown,
+    routes = {"/": app.index} | {
+        f"/{r}": getattr(app, r)
+        for r in ("table", "histogram", "timeline", "categories", "scatter", "quality",
+                  "drilldown")
     }
 
     class Handler(BaseHTTPRequestHandler):
@@ -262,30 +216,28 @@ def serve_dashboard(
         def do_GET(self):  # noqa: N802 (stdlib API name)
             u = urlparse(self.path)
             params = parse_qs(u.query)
+            status, headers = 200, {"Content-Type": "text/html; charset=utf-8"}
             try:
                 if u.path == "/download":
                     body, ctype, fname = app.download(params)
-                    self.send_response(200)
-                    self.send_header("Content-Type", ctype)
-                    self.send_header(
-                        "Content-Disposition", f'attachment; filename="{fname}"'
-                    )
+                    headers = {"Content-Type": ctype,
+                               "Content-Disposition": f'attachment; filename="{fname}"'}
                 elif u.path in routes:
                     body = routes[u.path](params)
-                    self.send_response(200)
-                    self.send_header("Content-Type", "text/html; charset=utf-8")
                 else:
-                    body = b"not found"
-                    self.send_response(404)
-                    self.send_header("Content-Type", "text/plain")
+                    status, body = 404, b"not found"
             except (KeyError, ValueError) as e:
-                body = str(e).encode()
-                self.send_response(400)
-                self.send_header("Content-Type", "text/plain")
-            self.send_header("Content-Length", str(len(body)))
+                status, body = 400, str(e).encode()
+            except Exception as e:  # answer, never drop the connection
+                status, body = 500, f"{type(e).__name__}: {e}".encode()
+            if status != 200:
+                headers = {"Content-Type": "text/plain"}
+            self.send_response(status)
+            for k, v in {**headers, "Content-Length": str(len(body))}.items():
+                self.send_header(k, v)
             self.end_headers()
             self.wfile.write(body)
 
-    srv = ThreadingHTTPServer(("127.0.0.1", port), Handler)
+    srv = ThreadingHTTPServer((host, port), Handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     return srv

@@ -4,17 +4,19 @@ docker-compose.yml:10,41) as one argparse CLI over the Spark engine.
 
   python -m assignment_etl_spark run-etl --patients P --encounters E \
       --diagnoses D --store DIR [--jdbc-url URL]
-  python -m assignment_etl_spark serve-dashboard --store DIR --port 8501
+  python -m assignment_etl_spark serve-dashboard --store DIR --port 8501 \
+      [--host 0.0.0.0]
 
 run-etl executes the full pipeline, writes the parquet store, and — when
 a JDBC URL is given — loads the four outputs into the warehouse exactly
 like the reference's to_sql(if_exists='replace') load (overwrite +
 truncate via io/jdbc.write_jdbc). serve-dashboard reads the store back
-and serves the interactive widget endpoints (analytics/server.py),
-blocking until interrupted. Container wiring lives in /Dockerfile and
-/docker-compose.yml; the env vars there (POSTGRES_HOST etc.) are
-assembled into the JDBC URL here, mirroring the reference's compose
-contract.
+and serves the interactive widget endpoints (analytics/server.py) on
+--host (default 127.0.0.1; a container passes 0.0.0.0 so its published
+port reaches the server), blocking until interrupted. Container wiring
+lives in /Dockerfile and /docker-compose.yml; the env vars there
+(POSTGRES_HOST etc.) are assembled into the JDBC URL here, mirroring the
+reference's compose contract.
 """
 
 from __future__ import annotations
@@ -77,8 +79,9 @@ def cmd_serve_dashboard(args: argparse.Namespace) -> int:
     if not tables:
         print(f"no tables found under {args.store}", file=sys.stderr)
         return 1
-    srv = serve_dashboard(tables, port=args.port)
-    print(f"dashboard on http://0.0.0.0:{srv.server_address[1]}/ "
+    srv = serve_dashboard(tables, host=args.host, port=args.port)
+    host, port = srv.server_address[:2]
+    print(f"dashboard on http://{host}:{port}/ "
           f"(tables: {', '.join(tables)})")
     try:
         import threading
@@ -106,6 +109,8 @@ def build_parser() -> argparse.ArgumentParser:
 
     d = sub.add_parser("serve-dashboard", help="serve the interactive dashboard")
     d.add_argument("--store", required=True)
+    d.add_argument("--host", default="127.0.0.1",
+                   help="address to bind (0.0.0.0 inside a container)")
     d.add_argument("--port", type=int, default=8501)
     d.add_argument("--master", default=None)
     d.set_defaults(fn=cmd_serve_dashboard)

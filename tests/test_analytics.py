@@ -9,9 +9,11 @@ from assignment_etl_spark.analytics.queries import (
     group_sizes,
     grouped_distinct_count,
     histogram_numeric,
+    histogram_time,
     top_k,
     value_counts,
 )
+from assignment_etl_spark.internals import executed_plan_string
 
 
 def test_value_counts_and_topk(spark):
@@ -28,6 +30,24 @@ def test_topk_plans_take_ordered(spark):
     df = spark.range(1000).select((F.col("id") % 7).alias("k"))
     plan = top_k(df, "k", 3)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan  # no global sort for top-k
+
+
+def test_render_sized_results_sort_without_range_exchange(spark):
+    """value_counts and the histograms order their aggregated rows inside
+    one partition: no range-partition sample or sort exchange."""
+    df = spark.range(1000).select(
+        (F.col("id") % 7).cast("string").alias("k"), F.col("id").cast("double").alias("v"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("t"),
+    )
+    for q in (value_counts(df, "k"), histogram_numeric(df, "v", 30),
+              histogram_numeric(df, "v", 30, min_val=0.0, max_val=999.0),
+              histogram_time(df, "t", 50)):
+        plan = executed_plan_string(q).lower()
+        assert "rangepartitioning" not in plan, plan
+        assert "sort [" in plan
+    rows = histogram_numeric(df, "v", 30).collect()
+    assert [r.bucket for r in rows] == list(range(30))
+    assert sum(r["count"] for r in rows) == 1000
 
 
 def test_group_sizes_and_distinct(spark):

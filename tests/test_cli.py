@@ -53,6 +53,23 @@ def test_serve_dashboard_from_store(spark, fixture_dir, tmp_path):
         srv.shutdown()
 
 
+def test_serve_dashboard_host(spark):
+    """--host defaults to loopback; serve_dashboard binds the host it is
+    given (0.0.0.0 in a container, so a published port reaches it)."""
+    from assignment_etl_spark.analytics.server import serve_dashboard
+
+    args = build_parser().parse_args(["serve-dashboard", "--store", "s"])
+    assert args.host == "127.0.0.1"
+    srv = serve_dashboard({"t": spark.range(3)}, host="0.0.0.0")
+    try:
+        assert srv.server_address[0] == "0.0.0.0"
+        port = srv.server_address[1]
+        with urllib.request.urlopen(f"http://127.0.0.1:{port}/table?name=t") as r:
+            assert r.status == 200
+    finally:
+        srv.shutdown()
+
+
 def test_jdbc_url_from_env(monkeypatch):
     from assignment_etl_spark.cli import _jdbc_props_from_env, _jdbc_url_from_env
 

@@ -4,14 +4,23 @@ pushdown queries the widgets wrap."""
 
 import csv
 import io
+import re
+import time
 import urllib.request
 
 import pytest
 from pyspark.sql import functions as F
 
-from assignment_etl_spark.analytics.dashboard import top_categories
-from assignment_etl_spark.analytics.server import serve_dashboard
-from assignment_etl_spark.pipelines.runner import run_etl
+from assignment_etl_spark.analytics.dashboard import (
+    numeric_histogram,
+    records_over_time,
+    top_categories,
+)
+from assignment_etl_spark.analytics.queries import value_counts
+from assignment_etl_spark.analytics.server import DashboardApp, serve_dashboard
+from assignment_etl_spark.pipelines.runner import run_etl, write_parquet_store
+
+_BAR = re.compile(r"<title>([^<]*): (\d+)</title>")
 
 
 @pytest.fixture(scope="module")
@@ -36,6 +45,22 @@ def server(etl):
     )
     yield srv
     srv.shutdown()
+
+
+@pytest.fixture(scope="module")
+def store_app(spark, etl, tmp_path_factory):
+    """The app over the written parquet store, as serve-dashboard builds
+    it: the job counts below are those of a served store."""
+    store = str(tmp_path_factory.mktemp("store"))
+    write_parquet_store(etl, store)
+    names = ("patients", "encounters", "diagnoses", "logs")
+    return DashboardApp({n: spark.read.parquet(f"{store}/{n}") for n in names})
+
+
+def _bars(body: bytes) -> list[tuple[str, int]]:
+    """(label, count) of each bar of the page's first chart."""
+    svg = body.decode().split("</svg>", 1)[0]
+    return [(lab, int(n)) for lab, n in _BAR.findall(svg)]
 
 
 def _get(server, path):
@@ -117,3 +142,111 @@ def test_unknown_table_is_400(server):
 def test_unknown_route_is_404(server):
     status, _, _ = _get(server, "/nope")
     assert status == 404
+
+
+def _job_count(spark, group: str, fn) -> int:
+    """Jobs ``fn`` ran, read from the status tracker under its own group
+    (the tracker is fed asynchronously: wait until the count settles)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    seen, n = -1, 0
+    for _ in range(50):
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        if n == seen:
+            break
+        seen = n
+        time.sleep(0.1)
+    return n
+
+
+def test_routes_run_one_aggregation_per_widget(spark, store_app):
+    """Bounds and the row count come from the app's table stats, and the
+    render-sized results sort inside one partition: no bounds pass, no
+    count, no range-partition sample or sort exchange per request."""
+    calls = {
+        "histogram": ({"table": ["patients"], "column": ["height_cm"], "bins": ["30"]}, 2),
+        "timeline": ({"table": ["encounters"], "column": ["admit_dt"], "bins": ["50"]}, 2),
+        "scatter": ({"table": ["patients"], "x": ["height_cm"], "y": ["weight_kg"],
+                     "color": ["sex"]}, 1),
+        "quality": ({}, 5),
+    }
+    for route, (params, most) in calls.items():
+        fn = getattr(store_app, route)
+        n = _job_count(spark, f"route-jobs-{route}", lambda f=fn, p=params: f(p))
+        assert 0 < n <= most, (route, n)
+
+
+def test_stats_backed_histograms_match_per_request_bounds(store_app):
+    """The snapshot bounds give the same bars as bounds computed per
+    request."""
+    for table, col, bins in (("patients", "height_cm", 10), ("encounters",
+                             "length_of_stay_hours", 30), ("patients", "weight_kg", 7)):
+        body = store_app.histogram({"table": [table], "column": [col], "bins": [str(bins)]})
+        want = numeric_histogram(store_app.tables[table], col, bins).collect()
+        assert _bars(body) == [(str(r["bucket"]), r["count"]) for r in want]
+    for table, col, bins in (("encounters", "admit_dt", 5), ("encounters",
+                             "discharge_dt", 50), ("patients", "dob_parsed", 20)):
+        body = store_app.timeline({"table": [table], "column": [col], "bins": [str(bins)]})
+        want = records_over_time(store_app.tables[table], col, bins).collect()
+        assert _bars(body) == [(str(r["bucket"]), r["count"]) for r in want]
+
+
+def test_quality_reason_bars_in_value_counts_order(store_app):
+    """The reason bars, summed from the file × reason counts, keep
+    value_counts' order: count descending, then reason ascending."""
+    body = store_app.quality({})
+    want = value_counts(store_app.tables["logs"], "reason").collect()
+    assert _bars(body) == [(str(r["reason"]), r["count"]) for r in want]
+    # the drilldown links follow the bars
+    links = re.findall(r"/drilldown\?reason=([^']*)'", body.decode())
+    assert links == [r["reason"] for r in want]
+
+
+def test_unknown_column_is_400(server):
+    for path in ("/histogram?table=patients&column=nope",
+                 "/timeline?table=encounters&column=nope",
+                 "/categories?table=logs&column=nope&k=5",
+                 "/scatter?table=patients&x=nope&y=weight_kg",
+                 "/scatter?table=patients&x=height_cm&y=weight_kg&color=nope"):
+        status, _, body = _get(server, path)
+        assert status == 400 and "unknown column 'nope'" in body, path
+
+
+def test_wrong_column_kind_is_400(server):
+    """/histogram takes numeric columns and /timeline datetime columns,
+    as the table page's pickers link them."""
+    for path, kind in (("/histogram?table=patients&column=sex", "numeric"),
+                       ("/histogram?table=patients&column=dob_parsed", "numeric"),
+                       ("/timeline?table=patients&column=height_cm", "datetime"),
+                       ("/scatter?table=patients&x=sex&y=weight_kg", "numeric")):
+        status, _, body = _get(server, path)
+        assert status == 400 and body.endswith(f"is not {kind}"), path
+
+
+def test_bins_below_one_is_400(server):
+    for bins in ("0", "-3"):
+        status, _, body = _get(server, f"/histogram?table=patients&column=height_cm&bins={bins}")
+        assert status == 400 and "bins must be at least 1" in body
+    status, _, _ = _get(server, "/timeline?table=encounters&column=admit_dt&bins=0")
+    assert status == 400
+
+
+def test_column_without_values_is_empty_chart(etl):
+    """An all-NULL column and an empty table render an empty chart, 200."""
+    srv = serve_dashboard({
+        "nulls": etl.patients.withColumn("height_cm", F.lit(None).cast("double")),
+        "empty": etl.encounters.limit(0),
+    })
+    try:
+        for path in ("/histogram?table=nulls&column=height_cm&bins=10",
+                     "/histogram?table=empty&column=length_of_stay_hours",
+                     "/timeline?table=empty&column=admit_dt",
+                     "/scatter?table=empty&x=length_of_stay_hours&y=length_of_stay_hours"):
+            status, _, body = _get(srv, path)
+            assert status == 200 and "(no data for " in body and "<rect" not in body, path
+    finally:
+        srv.shutdown()

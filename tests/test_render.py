@@ -51,7 +51,7 @@ def test_render_dashboard_end_to_end(etl, tmp_path):
     assert "Distribution of height_cm" in html
     assert "weight_kg vs height_cm" in html
     assert "Records over time by admit_dt" in html
-    assert "Log entries per reason" in html
-    assert "File × reason" in html
+    assert "Frequency of Data Quality Issues" in html
+    assert "Issues per source file" in html
     # self-contained: no external script/img references
     assert "<script" not in html and "http" not in html.split("</title>")[1]
