@@ -574,17 +574,10 @@ GROUP BY 1 ORDER BY 1
 
 def q_histogram_orders_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 records-over-time histogram, 50 bins over epoch seconds."""
-    _prep(spark)
-    orders = _t(spark, sf_dir, "orders")
-    from assignment_etl_spark.analytics.queries import bucketize
+    from assignment_etl_spark.analytics.queries import histogram_time
 
-    epoch = F.col("o_orderdate").cast("double")
-    mn, mx = orders.agg(F.min(epoch), F.max(epoch)).first()
-    return (
-        orders.groupBy(bucketize(epoch, mn, mx, 50).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy("bucket")
-    )
+    _prep(spark)
+    return histogram_time(_t(spark, sf_dir, "orders"), "o_orderdate", 50)
 
 
 SQL_HISTOGRAM_ORDERS_TIME = """
@@ -671,7 +664,7 @@ def q_xml_shred_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The S3 namespaced-XML source, gate-verified end to end: serialize
     the first 200 orders into a namespaced XML document with
     deterministically missing elements (priority dropped every 7th record,
-    price every 11th), shred it back with the mapInPandas reader
+    price every 11th), read it back with io.xml's native scan
     (attribute extraction included), aggregate per priority. Oracle models
     the omissions directly on the clean table."""
     import os
@@ -715,7 +708,6 @@ def q_xml_shred_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         path,
         record_tag="Order",
-        namespace="http://example.org/order",
         fields={
             "order_key": ("orderKey", None),
             "price": ("price", None),

@@ -27,7 +27,8 @@ from assignment_etl_spark.schemas import ROW_ID
 def with_row_id(df: DataFrame) -> DataFrame:
     """Attach the source-order id. Valid immediately after a single ordered
     read (partition index rides the high bits, so ids are monotone in file
-    order); must happen before any shuffle."""
+    order); must happen before any shuffle. Across files the order is the
+    scan's partition order, the same for the CSV and the XML readers."""
     return df.withColumn(ROW_ID, F.monotonically_increasing_id())
 
 

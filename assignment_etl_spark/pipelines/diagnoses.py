@@ -36,7 +36,7 @@ def clean_diagnoses(
 ) -> tuple[DataFrame, DataFrame]:
     """raw → (clean diagnoses, log stream), both projections of one tagged
     frame (see ops.quality); persist_intermediates caches it, so the XML
-    shred and the dedup window run once for both outputs."""
+    scan and the dedup window run once for both outputs."""
     df = raw.withColumn("is_primary", coerce_bool(F.col("is_primary_raw")))
     enc, code = F.col("encounter_id"), F.col("code")
     is_primary = F.col("is_primary")

@@ -6,7 +6,7 @@ Each pipeline persists one tagged frame per source (ops.quality), so the
 ``logs`` table is a union of five branches — one per source, one per orphan
 audit — over caches. The result tables are projections of those caches
 and are not cached themselves. Every cache a run makes (the three tagged
-frames and the XML wholetext scan) is a caching.scoped_persist:
+frames) is a caching.scoped_persist:
 ``release_scoped_caches()`` after the last action on the result frees all.
 """
 

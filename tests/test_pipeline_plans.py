@@ -3,11 +3,12 @@ deduplicated once, in one tagged frame, and every log stream is a
 projection of it (ops.quality).
 
 The ``logs`` table is a union of one branch per source plus one per
-orphan audit; no Python evaluation runs except the XML shred (F3 is a JVM
-expression); and the encounters text file is scanned once for all four
-result tables. The plans are read before any action, walking each
-cache's plan once (internals.physical_plan_nodes), so a count here is the
-number of times the work runs when each cache is built once.
+orphan audit; no Python evaluation runs (F3 is a JVM expression and the
+XML source is Spark's own reader); and the encounters text file is
+scanned once for all four result tables. The plans are read before any
+action, walking each cache's plan once (internals.physical_plan_nodes), so
+a count here is the number of times the work runs when each cache is
+built once.
 """
 
 from __future__ import annotations
@@ -62,13 +63,13 @@ def _all_nodes(etl):
     ]
 
 
-def test_only_python_node_is_the_xml_shred(etl):
+def test_no_python_node_in_run_etl(etl):
     classes = [_cls(n) for n in _all_nodes(etl)]
     for python_eval in (
         "ArrowEvalPythonExec", "BatchEvalPythonExec", "FlatMapGroupsInPandasExec"
     ):
         assert python_eval not in classes
-    assert classes.count("MapInPandasExec") == 1
+    assert classes.count("MapInPandasExec") == 0
 
 
 def test_encounters_file_scanned_once(etl):

@@ -83,11 +83,10 @@ def test_entry_query_caches_return_to_baseline(spark, sf_dir, name):
 
 
 def test_repeated_run_etl_releases_every_cache(spark, fixture_dir, tmp_path):
-    """Every cache ``run_etl`` makes — the tagged frame per source and the
-    XML wholetext scan; the result tables are projections of those, not
-    caches — has the registry as its release owner, so a long-lived
-    session running the ETL again and again returns to an empty cache
-    manager after each release."""
+    """Every cache ``run_etl`` makes — the tagged frame per source; the
+    result tables are projections of those, not caches — has the registry
+    as its release owner, so a long-lived session running the ETL again
+    and again returns to an empty cache manager after each release."""
     from assignment_etl_spark.pipelines.runner import run_etl, write_parquet_store
 
     release_scoped_caches()
@@ -101,7 +100,7 @@ def test_repeated_run_etl_releases_every_cache(spark, fixture_dir, tmp_path):
             ri_audit=True,
         )
         write_parquet_store(res, str(tmp_path / f"store{i}"))
-        assert scoped_cache_count() == 4
+        assert scoped_cache_count() == 3
         release_scoped_caches()
         assert scoped_cache_count() == 0
         assert [df.is_cached for df in res.tables().values()] == [False] * 4

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import subprocess
 import sys
 import time
@@ -23,13 +24,15 @@ import time
 import duckdb
 import pandas as pd
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def gates_new_since(rev: str) -> list[str]:
     """Gate names in the working-tree GATES.json but not in ``rev``'s."""
-    with open("/root/repo/GATES.json") as f:
+    with open(os.path.join(REPO, "GATES.json")) as f:
         now = set(json.load(f)["gates"])
     out = subprocess.run(
-        ["git", "-C", "/root/repo", "show", f"{rev}:GATES.json"],
+        ["git", "-C", REPO, "show", f"{rev}:GATES.json"],
         capture_output=True,
         text=True,
         check=True,
@@ -74,7 +77,7 @@ def main() -> int:
         print(f"gates added since {new_since}: {new}")
         only = set(new)
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry
     from assignment_etl_spark.session import get_spark
 

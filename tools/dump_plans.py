@@ -6,10 +6,12 @@ Run: python tools/dump_plans.py
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry
 from assignment_etl_spark.session import get_spark
@@ -95,7 +97,7 @@ def main() -> None:
             "```",
             "",
         ]
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "docs/PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote docs/PLANS.md ({len(SHOWCASE)} plans)")
 

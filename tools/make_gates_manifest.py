@@ -21,16 +21,18 @@ Regenerate (the ONE command) after deliberately adding/changing a gate:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.check_correctness import canon  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
-OUT = "/root/repo/GATES.json"
+OUT = os.path.join(REPO, "GATES.json")
 
 
 def build_manifest(sf_dir: str = SF_DIR) -> dict[str, dict]:

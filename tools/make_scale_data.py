@@ -29,10 +29,12 @@ region/nation are fixed-size dims and copy through unchanged.
 
 from __future__ import annotations
 
+import os
 import string
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 

@@ -30,6 +30,8 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # PLANAUDIT top shuffle counts (r11 table) — the sweep's default set.
 HEAVY_GATES = [
     "rfm_segments",  # 77 shuffles
@@ -57,7 +59,7 @@ def _rest(path: str):
 
 
 def child(query: str, sf_dir: str) -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry
     from assignment_etl_spark.session import get_spark
 

@@ -27,10 +27,12 @@ any hard violation.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from assignment_etl_spark import internals
 
@@ -423,7 +425,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
     from assignment_etl_spark.session import get_spark
 
@@ -534,7 +535,7 @@ def write_report(rows, violations, sf_dir) -> None:
             f"| {c['scans_with_pushdown']}/{c['scans']} "
             f"| {c['global_windows']} | {c['stats_bits']} |"
         )
-    with open("/root/repo/PLANAUDIT.md", "w", encoding="utf-8") as f:
+    with open(os.path.join(REPO, "PLANAUDIT.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(lines) + "\n")
 
 

@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 import bench as bench_mod  # noqa: E402
@@ -84,7 +85,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry.queries()
     if top:
-        with open("/root/repo/BENCH_FULL.json") as f:
+        with open(os.path.join(REPO, "BENCH_FULL.json")) as f:
             full = json.load(f)
         ranked = sorted(full["queries"].items(), key=lambda kv: -kv[1])
         names = [n for n, _ in ranked[:top]]

@@ -22,7 +22,7 @@ untouched queries. This tool produces a HOMOGENEOUS baseline:
     no file written).
 
 Usage: python tools/rebaseline_bench.py [--force]
-Writes /root/repo/BENCH_BASELINE.json on success.
+Writes BENCH_BASELINE.json at the repo root on success.
 """
 
 from __future__ import annotations
@@ -32,7 +32,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 from bench import HEADLINE, measure_pass, warm_up  # noqa: E402
@@ -99,7 +100,7 @@ def main() -> int:
         "self_check_pass4": {k: round(v, 3) for k, v in check.items()},
         "wall_total_sec": round(time.time() - t_start, 1),
     }
-    path = "/root/repo/BENCH_BASELINE.json"
+    path = os.path.join(REPO, "BENCH_BASELINE.json")
     with open(path, "w", encoding="utf-8") as f:
         json.dump(out, f, indent=1)
         f.write("\n")

@@ -12,10 +12,12 @@ Prints a markdown table to paste into SCALE.md.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SLOW_TAIL = [
     "dedup_keep_best_quality",

@@ -32,7 +32,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REPEATS = int(os.environ.get("SCALE3_REPEATS", "2"))
 SF10_BUDGET = float(os.environ.get("SCALE3_SF10_BUDGET", "120"))

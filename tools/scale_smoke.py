@@ -6,10 +6,12 @@ results). Not part of CI; run: python tools/scale_smoke.py [factors...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
