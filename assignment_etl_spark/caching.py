@@ -14,8 +14,12 @@ release path each:
   :func:`release_scoped_caches` after the action(s) that consumed the
   query's result. Persist semantics are untouched (same lazy
   MEMORY_AND_DISK cache, same plan-match substitution); the registry
-  only adds the release path. A plain list, append on persist, drain on
-  release: the engine's query builders run on the driver thread.
+  only adds the release path. One process-wide list behind one lock:
+  builders register from several driver threads at once (``run_etl``
+  builds its three pipelines concurrently, and a threaded server such
+  as the dashboard's builds its queries on per-request handler
+  threads), so append, drain and count each hold the lock.
+  Unpersisting happens outside it.
 - **Block-scoped local checkpoints** (:func:`released_local_checkpoint`).
   A rewrite-in-place writer checkpoints, writes, and releases exactly
   its own checkpoint RDD when the block exits — caller-exact, so
@@ -35,6 +39,7 @@ there is no degraded path here.
 from __future__ import annotations
 
 import contextlib
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -42,6 +47,7 @@ from pyspark.storagelevel import StorageLevel
 from assignment_etl_spark import internals
 
 _SCOPED: list[DataFrame] = []
+_SCOPED_LOCK = threading.Lock()
 
 
 def scoped_persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
@@ -53,7 +59,8 @@ def scoped_persist(df: DataFrame, level: StorageLevel | None = None) -> DataFram
         df.persist()
     else:
         df.persist(level)
-    _SCOPED.append(df)
+    with _SCOPED_LOCK:
+        _SCOPED.append(df)
     return df
 
 
@@ -63,9 +70,11 @@ def release_scoped_caches(blocking: bool = False) -> int:
     frame that is mid-consumption only degrades to recompute, never
     breaks correctness — but the intended call sites are between
     queries / bench reps, after the consuming action has finished."""
+    with _SCOPED_LOCK:
+        drained = _SCOPED[::-1]
+        _SCOPED.clear()
     n = 0
-    while _SCOPED:
-        df = _SCOPED.pop()
+    for df in drained:
         try:
             df.unpersist(blocking)
             n += 1
@@ -77,7 +86,8 @@ def release_scoped_caches(blocking: bool = False) -> int:
 def scoped_cache_count() -> int:
     """How many query-scoped persists are currently registered (test /
     probe hook)."""
-    return len(_SCOPED)
+    with _SCOPED_LOCK:
+        return len(_SCOPED)
 
 
 @contextlib.contextmanager
