@@ -2971,8 +2971,8 @@ FROM g a JOIN g b ON b.doc_id = a.doc_id + 1
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pair count by label (brute-force verify
-    slice — the LSH-bucketed variant is the scale path, q_minhash shows the
-    banding shape)."""
+    slice — at scale ``ext.dedup.semantic_dedup`` clusters first and pairs
+    only within a cluster; q_minhash shows the banding shape)."""
     from assignment_etl_spark.ext.similarity import cosine
 
     _prep(spark)

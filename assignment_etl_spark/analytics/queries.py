@@ -124,14 +124,26 @@ def affected_entities(
 ) -> DataFrame:
     """Distinct entities with ≥1 issue from matching files
     (interactive_dashboard.py:159-177): string-contains filter (P7, na=False
-    semantics via the isNotNull guard) + distinct counts."""
-    scoped = logs_df.filter(
-        F.col("filename").isNotNull()
-        & F.lower(F.col("filename")).contains(filename_contains.lower())
+    semantics via the isNotNull guard) + distinct counts.
+
+    Both counts come from one shuffle on the id: the per-id distinct
+    reasons (NULL reasons not counted, as ``countDistinct(id, reason)``
+    skips them) sum to the pair count, and the per-id rows count the
+    ids. Two ``countDistinct`` aggregates would plan an Expand and a
+    job more."""
+    per_id = (
+        logs_df.filter(
+            F.col("filename").isNotNull()
+            & F.lower(F.col("filename")).contains(filename_contains.lower())
+            & F.col(id_col).isNotNull()
+        )
+        .repartition(id_col)
+        .groupBy(id_col)
+        .agg(F.countDistinct("reason").alias("_reasons"))
     )
-    return scoped.agg(
-        F.countDistinct(id_col).alias("affected"),
-        F.countDistinct(id_col, "reason").alias("entity_reason_pairs"),
+    return per_id.coalesce(1).agg(
+        F.count(F.lit(1)).alias("affected"),
+        F.coalesce(F.sum("_reasons"), F.lit(0)).alias("entity_reason_pairs"),
     )
 
 

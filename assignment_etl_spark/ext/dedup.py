@@ -1,9 +1,9 @@
 """Deduplication family for LLM training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket-join),
-SimHash (hamming buckets), n-gram Jaccard verification, and embedding-cosine
-near-dup. The generalization of the reference's exact/fuzzy dedup (SURVEY
-§2.7) to web-corpus scale.
+SimHash (hamming buckets), n-gram Jaccard verification, and embedding
+near-dup within semantic clusters (SemDeDup). The generalization of the
+reference's exact/fuzzy dedup (SURVEY §2.7) to web-corpus scale.
 
 Scale shape: every variant reduces to *bucket then compare within bucket* —
 the only joins are equi-joins on bucket keys (shuffle on a well-distributed
@@ -1117,91 +1117,6 @@ def ngram_jaccard(
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def make_simhash_udf(bits: int = 64, seed: int = 11):
-    """Arrow-batched numpy SimHash: FNV-1a token hashes vote per bit,
-    sign of the vote sum becomes the bit. The fast path for corpus-scale
-    fingerprinting (the Column-expression variant below builds a
-    bits×aggregate tree that runs interpreted).
-
-    Fully vectorized: ALL tokens of an Arrow batch are hashed in one padded
-    byte-matrix FNV sweep (one numpy op per byte POSITION, not per token),
-    and the per-text bit votes reduce via np.add.reduceat over token
-    segments. Output is bit-identical to the original per-token loop."""
-    assert 1 <= bits <= 63
-    mask = np.uint64((1 << bits) - 1)
-
-    fnv_offset = np.uint64((14695981039346656037 + seed) & ((1 << 64) - 1))
-    fnv_prime = np.uint64(1099511628211)
-    bit_idx = np.arange(bits, dtype=np.uint64)
-
-    def _fnv_batch(tokens: list[bytes]) -> np.ndarray:
-        """FNV-1a of every token at once: pad to (n, maxlen) and sweep byte
-        positions; each step updates only the tokens still that long."""
-        n = len(tokens)
-        lens = np.fromiter((len(b) for b in tokens), dtype=np.int64, count=n)
-        total = int(lens.sum())
-        maxlen = int(lens.max()) if n else 0
-        flat = np.frombuffer(b"".join(tokens), dtype=np.uint8, count=total)
-        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        rows = np.repeat(np.arange(n), lens)
-        cols = np.arange(total) - np.repeat(starts, lens)
-        mat = np.zeros((n, maxlen), dtype=np.uint8)
-        mat[rows, cols] = flat
-        h = np.full(n, fnv_offset, dtype=np.uint64)
-        with np.errstate(over="ignore"):
-            for j in range(maxlen):
-                active = lens > j
-                h[active] = (h[active] ^ mat[active, j]) * fnv_prime
-        return h & mask
-
-    @pandas_udf(T.LongType())
-    def simhash_sig(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        tok_bytes: list[bytes] = []
-        counts, slots = [], []
-        for i, t in enumerate(texts):
-            if t is None:
-                continue
-            toks = str(t).lower().split()
-            if not toks:
-                continue
-            tok_bytes.extend(tok.encode("utf-8") for tok in toks)
-            counts.append(len(toks))
-            slots.append(i)
-        if not tok_bytes:
-            return pd.Series(out)
-        hashes = _fnv_batch(tok_bytes)
-        bit_mat = ((hashes[:, None] >> bit_idx) & np.uint64(1)).astype(np.int64)
-        counts_arr = np.asarray(counts, dtype=np.int64)
-        offsets = np.concatenate(([0], np.cumsum(counts_arr)[:-1]))
-        ones = np.add.reduceat(bit_mat, offsets, axis=0)  # (n_texts, bits)
-        votes = 2 * ones - counts_arr[:, None]
-        sigs = ((votes > 0).astype(np.uint64) << bit_idx).sum(axis=1)
-        out[np.asarray(slots)] = sigs.astype(np.int64)
-        return pd.Series(out)
-
-    return simhash_sig
-
-
-def simhash(col: Column, bits: int = 64) -> Column:
-    """SimHash over word tokens: sign of per-bit weighted sums of token
-    hashes. Near-dups differ in few bits (compare via hamming distance)."""
-    tokens = F.split(F.lower(F.regexp_replace(col, r"\s+", " ")), " ")
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    bit_cols = []
-    for i in range(bits):
-        contrib = F.transform(
-            hashes,
-            lambda h: F.when(h.bitwiseAND(F.lit(1 << i if i < 63 else -(1 << 63))) != 0, 1).otherwise(-1),
-        )
-        total = F.aggregate(contrib, F.lit(0), lambda acc, v: acc + v)
-        bit_cols.append(F.when(total > 0, F.lit(1)).otherwise(F.lit(0)))
-    out = F.lit(0).cast("long")
-    for i, bit in enumerate(bit_cols[:63]):  # keep sign bit clear
-        out = out + (bit.cast("long") * F.lit(1 << i))
-    return out
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -1210,9 +1125,8 @@ def simhash_portable(col: Column, bits: int = 16) -> Column:
     """Cross-engine-exact SimHash: whitespace tokens → 31-ary polynomial
     codepoint hash mod PORTABLE_P masked to ``bits`` → per-bit majority
     vote. Pure Catalyst expressions; replayable in any int64 SQL engine
-    (the DuckDB oracle for the simhash gate query runs the same formula).
-    Production corpora use make_simhash_udf (numpy FNV); this variant
-    exists so the bucketing math itself is hash-verifiable."""
+    (the DuckDB oracle for the simhash gate query runs the same formula),
+    so the bucketing math itself is hash-verifiable."""
     assert 1 <= bits <= 31
     mask = (1 << bits) - 1
     tokens = F.filter(F.split(F.lower(col), r"\s+"), lambda t: F.length(t) > 0)
@@ -1230,48 +1144,6 @@ def simhash_portable(col: Column, bits: int = 16) -> Column:
         ones = F.size(F.filter(hashes, lambda h: h.bitwiseAND(F.lit(1 << b)) != 0))
         out = out + F.when(ones * 2 > n, F.lit(1 << b)).otherwise(F.lit(0))
     return out
-
-
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    *,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding-cosine near-dup candidates: LSH-bucket then verify cosine
-    within bucket (one equi-join shuffle; no cross product). ``dim`` is
-    required — schema-derivable array lengths don't exist for ArrayType and
-    a first()-probe would cost a driver-side job per call."""
-    from assignment_etl_spark.ext.similarity import (
-        cosine,
-        lsh_signature,
-        random_hyperplanes,
-    )
-
-    planes = random_hyperplanes(dim, n_planes, seed)
-    sig = emb.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        lsh_signature(F.col(vec_col), planes).alias("_bucket"),
-    )
-    a, b = sig.alias("a"), sig.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a._bucket") == F.col("b._bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            cosine(F.col("a._v"), F.col("b._v")).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1405,8 +1277,9 @@ def semantic_dedup(
     the prune is ONE self-equi-join shuffled on the cluster id. Candidate
     work is Θ(Σ_c |c|²): ``k`` is the density knob — production corpora
     raise k so clusters stay small (SemDeDup uses k≈10⁴ for 10⁸ docs);
-    for huge clusters, chain ``embedding_near_dup_pairs`` *inside* the
-    cluster (LSH banding) instead of the exact pairing. No driver
+    for huge clusters, bucket each cluster again by random-hyperplane
+    signatures (``ext.similarity.lsh_signature``) and pair only within a
+    bucket instead of the exact pairing. No driver
     collect; the centroid table (k×dim) is the only broadcast state.
     """
     from assignment_etl_spark.ext.kmeans import kmeans

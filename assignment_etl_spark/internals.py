@@ -26,8 +26,8 @@ contract protects them across Spark versions):
   through AdaptiveSparkPlan and, on request, into each cache once (the
   pipelines' plan-shape test, tests/test_pipeline_plans.py).
 - ``cache_manager_is_empty / persistent_rdd_ids`` — session-level
-  cache/persistence introspection for the scale sweeps' measurement
-  discipline (tools/scale_curves3).
+  cache/persistence introspection for the scaling tool's cache-cold step
+  before every repeat (tools/scale.py ``cold_start``).
 
 The two checkpoint crossings have no fallback: the `caching` helpers
 raise when either fails. The plan-statistics callers (`ext/kmeans`,
@@ -156,16 +156,17 @@ def severed_from_checkpoint(ck: DataFrame) -> DataFrame:
 
 
 def cache_manager_is_empty(spark) -> bool:
-    """``sharedState().cacheManager().isEmpty()`` — the scale sweeps'
-    cache-discipline assertion (a clearCache() that silently stopped
-    clearing would corrupt every cross-query measurement)."""
+    """``sharedState().cacheManager().isEmpty()`` — the scaling tool's
+    cache-cold check before every repeat (a clearCache() that silently
+    stopped clearing would let a repeat read an earlier one's caches)."""
     return bool(spark._jsparkSession.sharedState().cacheManager().isEmpty())
 
 
 def persistent_rdd_ids(spark) -> dict[int, object]:
-    """``sc._jsc.getPersistentRDDs()`` as ``{id: jrdd}`` — the scale
-    sweeps' forced checkpoint release (tools/scale_curves3) and
-    ``probe()``'s check that its own checkpoint RDD is visible."""
+    """``sc._jsc.getPersistentRDDs()`` as ``{id: jrdd}`` — the scaling
+    tool's forced checkpoint release before every repeat
+    (tools/scale.py ``cold_start``) and ``probe()``'s check that its own
+    checkpoint RDD is visible."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k): jmap.get(k) for k in jmap.keySet().toArray()}
 

@@ -79,6 +79,17 @@ def test_affected_entities_na_false_semantics(spark):
     row = affected_entities(df).first()
     assert row.affected == 1  # NULL filename excluded (pandas na=False), case-insensitive
     assert row.entity_reason_pairs == 2
+    # a NULL id is no entity; a NULL reason makes no (entity, reason) pair
+    df = df.union(spark.createDataFrame(
+        [("patients.csv", None, "r3"), ("patients.csv", "p4", None),
+         ("patients.csv", "p1", None)],
+        "filename string, patient_id string, reason string",
+    ))
+    assert affected_entities(df).first() == (2, 2)
+    empty = affected_entities(df.limit(0))
+    assert empty.first() == (0, 0)
+    assert empty.schema.simpleString() == "struct<affected:bigint,entity_reason_pairs:bigint>"
+    assert not any(f.nullable for f in empty.schema)
 
 
 def test_parquet_pushdown(spark, sf_dir):

@@ -172,7 +172,7 @@ def test_routes_run_one_aggregation_per_widget(spark, store_app):
         "timeline": ({"table": ["encounters"], "column": ["admit_dt"], "bins": ["50"]}, 2),
         "scatter": ({"table": ["patients"], "x": ["height_cm"], "y": ["weight_kg"],
                      "color": ["sex"]}, 1),
-        "quality": ({}, 5),
+        "quality": ({}, 4),
     }
     for route, (params, most) in calls.items():
         fn = getattr(store_app, route)

@@ -9,7 +9,7 @@ from assignment_etl_spark.ext.dedup import (
     minhash_dedup,
     minhash_lsh_pairs,
     ngram_jaccard,
-    simhash,
+    simhash_portable,
 )
 from assignment_etl_spark.ext.similarity import (
     brute_force_topk,
@@ -73,7 +73,7 @@ def test_ngram_jaccard(spark):
 
 def test_simhash_hamming(spark):
     df = spark.createDataFrame([(0, BASE), (1, NEAR), (2, OTHER)], "i int, text string")
-    sh = {r.i: r.h for r in df.select("i", simhash(F.col("text"), bits=16).alias("h")).collect()}
+    sh = {r.i: r.h for r in df.select("i", simhash_portable(F.col("text"), bits=16).alias("h")).collect()}
     d_near = spark.range(1).select(hamming64(F.lit(sh[0]), F.lit(sh[1])).alias("d")).first().d
     d_far = spark.range(1).select(hamming64(F.lit(sh[0]), F.lit(sh[2])).alias("d")).first().d
     assert d_near <= d_far
