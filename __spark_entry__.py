@@ -9146,6 +9146,7 @@ def q_dedup_lines_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     document reassembly (order-preserving), the drop-frequent threshold,
     and the global (id, pos) keep-first contract, via corpus-wide
     line/length checksums the oracle recomputes."""
+    from assignment_etl_spark.caching import scoped_local_checkpoint
     from assignment_etl_spark.ext.dedup import dedup_lines
 
     _prep(spark)
@@ -9157,7 +9158,7 @@ def q_dedup_lines_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.month("l_shipdate").cast("string"),
         F.col("l_quantity").cast("int").cast("string"),
     )
-    docs = (
+    docs = scoped_local_checkpoint(
         li.select(
             F.col("l_orderkey").alias("doc_id"),
             F.struct(F.col("l_linenumber").alias("pos"), line.alias("line")).alias("s"),
@@ -9169,14 +9170,15 @@ def q_dedup_lines_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "\n",
             ).alias("text")
         )
-        # materialized once: both policies re-read this 150k-doc corpus,
-        # and recomputing the collect_list shuffle per policy doubles the
-        # dominant cost of the whole query. (r13 A/B: replacing this with
-        # the lazy lines persist alone measured SLOWER — 2.68s -> 3.08s —
-        # because the union's branches race on the uncached corpus while
-        # the cache is still populating; the eager barrier stays.)
-        .localCheckpoint(eager=True)
     )
+    # materialized once: both policies re-read this 150k-doc corpus, and
+    # recomputing the collect_list shuffle per policy doubles the dominant
+    # cost of the whole query. (r13 A/B: replacing this with the lazy
+    # lines persist alone measured SLOWER — 2.68s -> 3.08s — because the
+    # union's branches race on the uncached corpus while the cache is
+    # still populating; the eager barrier stays. An eager scoped_persist
+    # measured slower too, 2.28s -> 3.46s at sf0.01 with 24 -> 31 stages.
+    # The checkpoint is registered, so release_scoped_caches() frees it.)
 
     def stats(deduped: DataFrame, policy: str) -> DataFrame:
         return deduped.filter(F.col("n_kept") > 0).agg(

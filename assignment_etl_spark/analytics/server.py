@@ -11,10 +11,13 @@ render-sized HTML fragment — never a table download.
 
 The app serves a snapshot: it takes ``table_stats`` once per table (row
 count, column kinds, numeric and datetime bounds), so a histogram or
-timeline runs no bounds pass and a scatter no count; /quality sums its
-reason bars from the file × reason counts. Columns are checked against
-that schema before any query is built (a bad one is a 400). The stats are
-read-only, so the handler threads share them without a lock; a rewritten
+timeline runs no bounds pass and a scatter no count. The widgets that take
+no request parameter are part of the snapshot too: each table's page with
+its 5-row preview and the Data Quality page (its reason bars summed from
+the file × reason counts) are rendered once at construction, so /table
+and /quality start no Spark job. Columns are checked against that schema
+before any query is built (a bad one is a 400). The snapshot is
+read-only, so the handler threads share it without a lock; a rewritten
 store needs a new app.
 
 Routes → reference widgets:
@@ -83,7 +86,9 @@ class DashboardApp:
     """Routes widget requests onto pushdown queries. Split from the HTTP
     handler so tests can drive it directly and any front end can reuse it.
     Serves a snapshot: ``__init__`` takes ``table_stats`` of every table
-    once, so a store rewritten while it is served needs a new app."""
+    once and renders the parameter-free pages (each table's preview page
+    and, when the logs table is present, the Data Quality page), so a
+    store rewritten while it is served needs a new app."""
 
     def __init__(
         self,
@@ -96,6 +101,8 @@ class DashboardApp:
         self.logs_table = logs_table
         self.id_cols = id_cols or {}
         self.stats = {name: table_stats(df) for name, df in tables.items()}
+        self.table_pages = {name: self._table_page(name) for name in tables}
+        self.quality_page = self._quality_page() if logs_table in tables else None
 
     def _table(self, params: dict, key: str = "table") -> tuple[str, DataFrame, dict]:
         name = params.get(key, [""])[0]
@@ -113,8 +120,10 @@ class DashboardApp:
         return _page("ETL Data Distribution Dashboard", f"<ul>{links}</ul>")
 
     def table(self, params: dict) -> bytes:
-        name, df, stats = self._table(params, "name")
-        kinds = stats["kinds"]
+        return self.table_pages[self._table(params, "name")[0]]
+
+    def _table_page(self, name: str) -> bytes:
+        df, kinds = self.tables[name], self.stats[name]["kinds"]
         links = [(f"histogram?table={name}&column={c}&bins=30", f"histogram of {c}")
                  for c in kinds["numeric"]]
         links += [(f"timeline?table={name}&column={c}&bins=50", f"records over time by {c}")
@@ -156,6 +165,11 @@ class DashboardApp:
         return _page(f"{y} vs {x}", svg)
 
     def quality(self, params: dict) -> bytes:
+        if self.quality_page is None:
+            raise KeyError(f"unknown table {self.logs_table!r}")
+        return self.quality_page
+
+    def _quality_page(self) -> bytes:
         body, reasons = quality_section(self.tables[self.logs_table])
         drill = "".join(
             f"<li><a href='/drilldown?reason={_esc(r)}'>{_esc(r)}"
@@ -200,8 +214,8 @@ def serve_dashboard(
     """Start the dashboard server on ``host``:``port`` (0 = ephemeral) in a
     daemon thread and return the server (``.server_address`` is the bound
     address; ``.shutdown()`` stops it). The tables are served as the
-    snapshot ``DashboardApp`` took their stats of; serve a rewritten store
-    with a new call."""
+    snapshot ``DashboardApp`` takes before this returns; serve a rewritten
+    store with a new call."""
     app = DashboardApp(tables, logs_table=logs_table, id_cols=id_cols)
     routes = {"/": app.index} | {
         f"/{r}": getattr(app, r)

@@ -20,6 +20,10 @@ release path each:
   as the dashboard's builds its queries on per-request handler
   threads), so append, drain and count each hold the lock.
   Unpersisting happens outside it.
+  :func:`scoped_local_checkpoint` registers an eager local checkpoint
+  the same way, for a builder whose returned frame reads it: the same
+  release unpersists its checkpoint RDD (which, unlike a persist, cannot
+  be recomputed if an action still reads it).
 - **Block-scoped local checkpoints** (:func:`released_local_checkpoint`).
   A rewrite-in-place writer checkpoints, writes, and releases exactly
   its own checkpoint RDD when the block exits — caller-exact, so
@@ -46,7 +50,8 @@ from pyspark.storagelevel import StorageLevel
 
 from assignment_etl_spark import internals
 
-_SCOPED: list[DataFrame] = []
+# Persisted frames and checkpoint JavaRDDs: both release by ``unpersist(blocking)``.
+_SCOPED: list = []
 _SCOPED_LOCK = threading.Lock()
 
 
@@ -64,12 +69,29 @@ def scoped_persist(df: DataFrame, level: StorageLevel | None = None) -> DataFram
     return df
 
 
+def scoped_local_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` with registered ownership: the
+    eager barrier and the checkpointed plan (its output partitioning
+    included) are those of a bare checkpoint, and :func:`release_scoped_caches`
+    unpersists exactly the RDD backing it (``internals.checkpoint_rdd``).
+    A bare checkpoint outside the cache manager is freed only when the
+    ContextCleaner reaps its frame; a long-lived session keeps it. Release
+    only after the last action on the returned frame: unlike a persist,
+    the checkpoint cannot be recomputed."""
+    ck = df.localCheckpoint(eager=True)
+    jrdd = internals.checkpoint_rdd(ck)
+    with _SCOPED_LOCK:
+        _SCOPED.append(jrdd)
+    return ck
+
+
 def release_scoped_caches(blocking: bool = False) -> int:
-    """Unpersist every frame registered since the last release; returns
-    how many were released. Safe to call at any time — unpersisting a
-    frame that is mid-consumption only degrades to recompute, never
-    breaks correctness — but the intended call sites are between
-    queries / bench reps, after the consuming action has finished."""
+    """Unpersist every frame and checkpoint registered since the last
+    release; returns how many were released. The intended call sites are
+    between queries / bench reps, after the consuming action has
+    finished. Unpersisting a persisted frame mid-consumption only degrades
+    to recompute; a checkpoint has no lineage to recompute from, so an
+    action still reading one fails."""
     with _SCOPED_LOCK:
         drained = _SCOPED[::-1]
         _SCOPED.clear()
@@ -84,8 +106,8 @@ def release_scoped_caches(blocking: bool = False) -> int:
 
 
 def scoped_cache_count() -> int:
-    """How many query-scoped persists are currently registered (test /
-    probe hook)."""
+    """How many query-scoped persists and checkpoints are currently
+    registered (test / probe hook)."""
     with _SCOPED_LOCK:
         return len(_SCOPED)
 

@@ -13,7 +13,10 @@ like the reference's to_sql(if_exists='replace') load (overwrite +
 truncate via io/jdbc.write_jdbc). serve-dashboard reads the store back
 and serves the interactive widget endpoints (analytics/server.py) on
 --host (default 127.0.0.1; a container passes 0.0.0.0 so its published
-port reaches the server), blocking until interrupted. Container wiring
+port reaches the server), blocking until interrupted. It takes the app's
+snapshot (the table stats, the table previews and the Data Quality page)
+before it prints its ``dashboard on`` line, so the first request of every
+route is served from a ready app; restart it after rewriting the store. Container wiring
 lives in /Dockerfile and /docker-compose.yml; the env vars there
 (POSTGRES_HOST etc.) are assembled into the JDBC URL here, mirroring the
 reference's compose contract.

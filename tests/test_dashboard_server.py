@@ -5,19 +5,24 @@ pushdown queries the widgets wrap."""
 import csv
 import io
 import re
+import threading
 import time
 import urllib.request
 
 import pytest
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.analytics.dashboard import (
     numeric_histogram,
     records_over_time,
+    table_stats,
     top_categories,
 )
 from assignment_etl_spark.analytics.queries import value_counts
+from assignment_etl_spark.analytics.render import preview_table, quality_section
 from assignment_etl_spark.analytics.server import DashboardApp, serve_dashboard
+from assignment_etl_spark.caching import scoped_cache_count
 from assignment_etl_spark.pipelines.runner import run_etl, write_parquet_store
 
 _BAR = re.compile(r"<title>([^<]*): (\d+)</title>")
@@ -48,13 +53,19 @@ def server(etl):
 
 
 @pytest.fixture(scope="module")
-def store_app(spark, etl, tmp_path_factory):
-    """The app over the written parquet store, as serve-dashboard builds
-    it: the job counts below are those of a served store."""
+def store_tables(spark, etl, tmp_path_factory):
+    """The written parquet store read back, as serve-dashboard reads it."""
     store = str(tmp_path_factory.mktemp("store"))
     write_parquet_store(etl, store)
     names = ("patients", "encounters", "diagnoses", "logs")
-    return DashboardApp({n: spark.read.parquet(f"{store}/{n}") for n in names})
+    return {n: spark.read.parquet(f"{store}/{n}") for n in names}
+
+
+@pytest.fixture(scope="module")
+def store_app(store_tables):
+    """The app over the written parquet store, as serve-dashboard builds
+    it: the job counts below are those of a served store."""
+    return DashboardApp(store_tables)
 
 
 def _bars(body: bytes) -> list[tuple[str, int]]:
@@ -153,31 +164,120 @@ def _job_count(spark, group: str, fn) -> int:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    seen, n = -1, 0
+    return len(_settled_job_ids(spark, group))
+
+
+def _settled_job_ids(spark, group: str | None) -> list[int]:
+    """The jobs of ``group`` (None: the jobs run outside any group) once
+    the status tracker, which is fed asynchronously, stops changing."""
+    tracker = spark.sparkContext.statusTracker()
+    seen = None
     for _ in range(50):
-        n = len(sc.statusTracker().getJobIdsForGroup(group))
-        if n == seen:
+        ids = sorted(tracker.getJobIdsForGroup(group))
+        if ids == seen:
             break
-        seen = n
+        seen = ids
         time.sleep(0.1)
-    return n
+    return seen
 
 
 def test_routes_run_one_aggregation_per_widget(spark, store_app):
     """Bounds and the row count come from the app's table stats, and the
     render-sized results sort inside one partition: no bounds pass, no
-    count, no range-partition sample or sort exchange per request."""
+    count, no range-partition sample or sort exchange per request. The
+    parameter-free pages are part of the snapshot and start no job."""
     calls = {
         "histogram": ({"table": ["patients"], "column": ["height_cm"], "bins": ["30"]}, 2),
         "timeline": ({"table": ["encounters"], "column": ["admit_dt"], "bins": ["50"]}, 2),
         "scatter": ({"table": ["patients"], "x": ["height_cm"], "y": ["weight_kg"],
                      "color": ["sex"]}, 1),
-        "quality": ({}, 4),
+        "table": ({"name": ["logs"]}, 0),
+        "quality": ({}, 0),
     }
     for route, (params, most) in calls.items():
         fn = getattr(store_app, route)
         n = _job_count(spark, f"route-jobs-{route}", lambda f=fn, p=params: f(p))
-        assert 0 < n <= most, (route, n)
+        assert min(most, 1) <= n <= most, (route, n)
+
+
+def test_snapshot_jobs_are_taken_at_construction(spark, store_tables):
+    """Building the app runs the stats aggregation of each table, the
+    Data Quality page's jobs and each table's preview, and nothing else."""
+    parts = {
+        "stats": sum(_job_count(spark, f"stats-{t}", lambda d=df: table_stats(d))
+                     for t, df in store_tables.items()),
+        "quality": _job_count(spark, "quality", lambda: quality_section(store_tables["logs"])),
+        "previews": sum(_job_count(spark, f"preview-{t}", lambda d=df: preview_table(d))
+                        for t, df in store_tables.items()),
+    }
+    n = _job_count(spark, "app-init", lambda: DashboardApp(store_tables))
+    # per table: the stats aggregation's shuffle and result jobs and at most
+    # two preview jobs; plus the Data Quality page's 4
+    assert parts["quality"] == 4, parts
+    assert n == sum(parts.values()) <= 4 * len(store_tables) + 4, (parts, n)
+
+
+def test_quality_page_is_the_rendered_section(store_app):
+    """The stored page is the page ``quality_section`` renders fresh."""
+    assert store_app.quality({}) == store_app._quality_page()
+
+
+def test_concurrent_quality_calls_share_the_snapshot(spark, store_app, store_tables):
+    """Eight handler threads asking /quality at once all get the same page
+    and start no Spark job (the handler threads carry no job group)."""
+    srv = serve_dashboard(store_tables)
+    last = max(_settled_job_ids(spark, None), default=-1)
+    barrier = threading.Barrier(8, timeout=60)
+    bodies = [None] * 8
+
+    def call(i):
+        barrier.wait()
+        bodies[i] = _get(srv, "/quality")
+
+    try:
+        threads = [threading.Thread(target=call, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        srv.shutdown()
+    assert [j for j in _settled_job_ids(spark, None) if j > last] == []
+    assert {(status, body) for status, _, body in bodies} == {
+        (200, store_app.quality({}).decode())}
+
+
+def test_app_without_logs_table_serves_quality_as_400(etl):
+    srv = serve_dashboard({"patients": etl.patients})
+    try:
+        status, _, body = _get(srv, "/quality")
+        assert status == 400 and "unknown table 'logs'" in body
+        assert _get(srv, "/table?name=patients")[0] == 200
+    finally:
+        srv.shutdown()
+
+
+def test_serving_leaves_no_cache_behind(spark, store_tables):
+    """A long-lived server: building the app and serving every route N
+    times registers no scoped persist and leaves no persistent RDD."""
+    reason = store_tables["logs"].select("reason").first()["reason"]
+    before = (scoped_cache_count(), len(internals.persistent_rdd_ids(spark)))
+    srv = serve_dashboard(store_tables)
+    paths = ["/", "/table?name=patients", "/table?name=logs",
+             "/histogram?table=patients&column=height_cm&bins=10",
+             "/timeline?table=encounters&column=admit_dt&bins=20",
+             "/categories?table=logs&column=reason&k=5",
+             "/scatter?table=patients&x=height_cm&y=weight_kg&color=sex",
+             "/quality", f"/drilldown?reason={reason}", f"/download?reason={reason}"]
+    try:
+        for _ in range(3):
+            for path in paths:
+                assert _get(srv, path)[0] == 200, path
+    finally:
+        srv.shutdown()
+    after = (scoped_cache_count(), len(internals.persistent_rdd_ids(spark)))
+    assert after[0] <= before[0] and after[1] <= before[1], (before, after)
 
 
 def test_stats_backed_histograms_match_per_request_bounds(store_app):

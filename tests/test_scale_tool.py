@@ -3,6 +3,8 @@ starts cache-cold, and a ``--heap`` child run completes."""
 
 import json
 import os
+import subprocess
+import sys
 
 import __spark_entry__ as entry
 from assignment_etl_spark import internals
@@ -52,3 +54,30 @@ def test_heap_run_reports_ok(spark, sf_dir, capsys):
     # the child's session has the UI on, so its stage memory is reported
     assert recs[0]["peak_exec_mb"] is not None and recs[0]["disk_spill_mb"] is not None
     assert "| `pricing_summary` | " in out
+
+
+# One run in a fresh process with the UI on: its stages are all the run's.
+_SAME_RUN = """
+import json, sys
+from tools import scale
+spark = scale.ui_session()
+rec = scale.run_once(spark, sys.argv[1], scale.entry.queries()[sys.argv[1]], sys.argv[2])
+stages = scale._rest(spark.sparkContext, "stages")
+summed = max(s.get("peakExecutionMemory", 0) for s in stages) / 2.0**20
+print(json.dumps({"peak_exec_mb": rec["peak_exec_mb"], "stage_summed_mb": round(summed, 1)}))
+"""
+
+
+def test_peak_exec_is_one_task_not_a_stage_sum(sf_dir):
+    """``peak_exec_mb`` is the largest single task's peak: it cannot exceed
+    the largest stage's ``peakExecutionMemory``, which Spark sums over the
+    stage's tasks, and part_value_concentration's aggregations run several
+    tasks that each take execution memory, so it is below it."""
+    p = subprocess.run(
+        [sys.executable, "-c", _SAME_RUN, "part_value_concentration", sf_dir],
+        capture_output=True, text=True, cwd=scale.REPO, timeout=600,
+        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g"),
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    got = json.loads(p.stdout.strip().splitlines()[-1])
+    assert 0 < got["peak_exec_mb"] < got["stage_summed_mb"], got

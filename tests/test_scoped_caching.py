@@ -21,6 +21,7 @@ import pytest
 from assignment_etl_spark.caching import (
     release_scoped_caches,
     scoped_cache_count,
+    scoped_local_checkpoint,
     scoped_persist,
 )
 from assignment_etl_spark.internals import (
@@ -53,6 +54,32 @@ def test_scoped_persist_registers_and_releases(spark):
     assert released >= 1
     assert scoped_cache_count() == 0
     assert set(persistent_rdd_ids(spark)) == base, "unpersist not observed"
+
+
+def test_scoped_local_checkpoint_registers_and_releases(spark):
+    """The checkpoint is eager (its RDD exists before any action on the
+    returned frame) and the release unpersists exactly that RDD."""
+    release_scoped_caches()
+    base = set(persistent_rdd_ids(spark))
+    ck = scoped_local_checkpoint(spark.range(10))
+    assert scoped_cache_count() == 1
+    assert len(set(persistent_rdd_ids(spark)) - base) == 1, "checkpoint not eager"
+    assert ck.count() == 10
+    assert release_scoped_caches() == 1
+    assert set(persistent_rdd_ids(spark)) == base, "checkpoint not released"
+
+
+def test_dedup_lines_corpus_checkpoint_is_released(spark, sf_dir):
+    """The gate's eager corpus checkpoint is registered: after its count
+    and the release, no persistent RDD of it is left."""
+    import __spark_entry__ as entry
+
+    release_scoped_caches()
+    base = set(persistent_rdd_ids(spark))
+    assert entry.queries()["dedup_lines_corpus"](spark, sf_dir).count() == 2
+    assert scoped_cache_count() == 1
+    release_scoped_caches()
+    assert set(persistent_rdd_ids(spark)) == base
 
 
 @pytest.mark.parametrize("name", PERSISTING_QUERIES)

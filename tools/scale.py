@@ -3,11 +3,11 @@
 For each query and directory the query runs ``--repeats`` times and the
 fastest repeat is kept: rows, ``build_s`` (the callable: planning plus
 eager jobs such as persists and checkpoints), ``count_s`` (the timed
-``count()``), the jobs and stages of the repeat's job group, and their
-spill and peak execution memory from Spark's REST API. Consecutive
-directories get the ratio of their fastest totals; the last ratio gets a
-verdict for a 10× data step: ≤ 12× linear-ok, ≤ 20× watch, above that
-SUPER-LINEAR.
+``count()``), the jobs and stages of the repeat's job group, their spill
+and the largest single task's peak execution memory, from Spark's REST
+API. Consecutive directories get the ratio of their fastest totals; the
+last ratio gets a verdict for a 10× data step: ≤ 12× linear-ok, ≤ 20×
+watch, above that SUPER-LINEAR.
 
 Every repeat starts cache-cold (:func:`cold_start`), so a repeat cannot
 read an earlier repeat's persisted intermediates and min-of-N is not a
@@ -178,22 +178,33 @@ def cold_start(spark) -> int:
     return len(leftover)
 
 
+def _rest(sc, path: str):
+    """GET ``path`` under the application's REST API (the session UI's port)."""
+    port = urllib.parse.urlparse(sc.uiWebUrl).port
+    url = f"http://127.0.0.1:{port}/api/v1/applications/{sc.applicationId}/{path}"
+    with urllib.request.urlopen(url, timeout=30) as resp:
+        return json.load(resp)
+
+
 def _stage_memory(spark, stage_ids) -> dict:
-    """Spill summed over ``stage_ids`` and the largest stage's peak execution
-    memory (which Spark sums over the stage's tasks), from the REST API;
-    ``None`` when the session has no UI."""
+    """Spill summed over ``stage_ids`` and the largest single task's peak
+    execution memory among them (the top quantile of each stage attempt's
+    task summary; a stage's own ``peakExecutionMemory`` is a sum over its
+    tasks), from the REST API; ``None`` when the session has no UI."""
     sc = spark.sparkContext
     if not sc.uiWebUrl or not stage_ids:
         return dict.fromkeys(("mem_spill_mb", "disk_spill_mb", "peak_exec_mb"))
-    port = urllib.parse.urlparse(sc.uiWebUrl).port
-    url = f"http://127.0.0.1:{port}/api/v1/applications/{sc.applicationId}/stages"
-    with urllib.request.urlopen(url, timeout=30) as resp:
-        stages = [s for s in json.load(resp) if s["stageId"] in stage_ids]
+    stages = [s for s in _rest(sc, "stages") if s["stageId"] in stage_ids]
+    peaks = [
+        _rest(sc, f"stages/{s['stageId']}/{s['attemptId']}/taskSummary?quantiles=1.0")
+        ["peakExecutionMemory"][0]
+        for s in stages if s.get("numCompleteTasks")
+    ]
     mib = 2.0**20
     return {
         "mem_spill_mb": round(sum(s.get("memoryBytesSpilled", 0) for s in stages) / mib, 1),
         "disk_spill_mb": round(sum(s.get("diskBytesSpilled", 0) for s in stages) / mib, 1),
-        "peak_exec_mb": round(max((s.get("peakExecutionMemory", 0) for s in stages), default=0) / mib, 1),
+        "peak_exec_mb": round(max(peaks, default=0) / mib, 1),
     }
 
 
@@ -307,6 +318,19 @@ def table(records, dirs) -> list[str]:
     return lines
 
 
+def ui_session():
+    """The tool's session: the UI is on, so its REST API serves the stage
+    memory."""
+    spark = get_spark("scale", extra_conf={
+        "spark.ui.enabled": "true",
+        "spark.ui.port": "0",
+        "spark.ui.showConsoleProgress": "false",
+        "spark.executorEnv.PYTHONPATH": REPO,  # Python UDF workers import the package
+    })
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("dirs", nargs="+", help="scale-factor directories, smallest first")
@@ -334,14 +358,7 @@ def main(argv=None) -> int:
     if args.heap:
         points = (r for n in names for r in run_child(args.dirs, n, args.repeats, args.heap))
     else:
-        spark = get_spark("scale", extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "0",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.executorEnv.PYTHONPATH": REPO,  # Python UDF workers import the package
-        })
-        spark.sparkContext.setLogLevel("ERROR")
-        points = sweep(spark, queries, names, args.dirs, args.repeats)
+        points = sweep(ui_session(), queries, names, args.dirs, args.repeats)
     records = []
     for rec in points:
         print(json.dumps(rec), flush=True)
