@@ -28,6 +28,10 @@ contract protects them across Spark versions):
 - ``cache_manager_is_empty / persistent_rdd_ids`` — session-level
   cache/persistence introspection for the scaling tool's cache-cold step
   before every repeat (tools/scale.py ``cold_start``).
+- ``codegen_compiles`` — the process's Janino compile count and total
+  compile time (``CodegenMetrics`` and ``CodeGenerator.compileTime``),
+  the evidence that warm runs reuse their generated classes
+  (tests/test_codegen_reuse.py, tools/pipeline_bench.py).
 
 The two checkpoint crossings have no fallback: the `caching` helpers
 raise when either fails. The plan-statistics callers (`ext/kmeans`,
@@ -44,6 +48,8 @@ degrades documents its degraded mode.
 """
 
 from __future__ import annotations
+
+import random
 
 from pyspark.sql import DataFrame
 
@@ -171,6 +177,19 @@ def persistent_rdd_ids(spark) -> dict[int, object]:
     return {int(k): jmap.get(k) for k in jmap.keySet().toArray()}
 
 
+def codegen_compiles(spark) -> tuple[int, int]:
+    """``(compiles, compile_ns)`` since the JVM started: how many classes
+    Janino has compiled (``CodegenMetrics.METRIC_COMPILATION_TIME``, one
+    histogram sample per compile) and their summed compile time
+    (``CodeGenerator.compileTime()``, ns). A codegen cache hit adds to
+    neither. Both only grow, so a caller takes the difference around a
+    run."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), int(ns)
+
+
 def probe(spark) -> dict[str, str | None]:
     """Exercise every crossing above against the live session.
 
@@ -280,6 +299,14 @@ def probe(spark) -> dict[str, str | None]:
         # the probe's own eager localCheckpoint RDD must be visible
         assert int(jrdd["rdd"].id()) in ids if jrdd.get("rdd") else ids is not None
 
+    def p_codegen_compiles():
+        # a literal no earlier query used makes a class the cache lacks:
+        # exactly what both counters must see
+        n0, ns0 = codegen_compiles(spark)
+        spark.range(3).select(F.col("id") * F.lit(random.randrange(1 << 30))).collect()
+        n1, ns1 = codegen_compiles(spark)
+        assert n1 > n0 and ns1 > ns0, f"compiles {n0} -> {n1}, ns {ns0} -> {ns1}"
+
     run("query_execution", p_query_execution)
     run("analyzed_plan", p_analyzed_plan)
     run("optimized_plan_stats", p_optimized_plan_stats)
@@ -290,6 +317,7 @@ def probe(spark) -> dict[str, str | None]:
     run("cache_manager_is_empty", p_cache_manager)
     run("persistent_rdd_ids", p_persistent_rdd_ids)
     run("physical_plan_nodes", p_physical_plan_nodes)
+    run("codegen_compiles", p_codegen_compiles)
 
     if jrdd.get("rdd") is not None:
         try:

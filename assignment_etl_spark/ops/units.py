@@ -17,7 +17,10 @@ patients pipeline runs): they compute the expensive primitives
 (lowercase/trim, number extraction, BMI denominator) as named columns in a
 *separate projection*; CollapseProject keeps the stages apart (non-cheap
 aliases referenced more than once), each stage codegens small, and every
-regex runs exactly once per row.
+regex runs exactly once per row. HotSpot has a second, lower ceiling: it
+never JIT-compiles a method over 8,000 bytecode bytes. The patients scan
+stage as a whole still generates one 9,035-byte method (ROADMAP direction
+2).
 
 Verified goldens (SURVEY §5.3): "68 in"→172.72, "5ft 6in"→167.64,
 "1.75"→175.0, "162"→162.0; ("300 kg", 220cm)→(300.0, implausible_bmi_62.0);

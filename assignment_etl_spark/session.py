@@ -32,6 +32,26 @@ Design notes (100 TB target, tested on local[*]):
   ``extra_conf`` to the first ``get_spark`` call of the process and
   building one Column expression (``F.col("x") + 1``) on that thread
   before ``run_etl``, so the latch reads the conf.
+- Spark's codegen cache holds 1,000 classes
+  (``spark.sql.codegen.cache.maxEntries``, a static conf; Spark's default
+  is 100), a constant because the size follows from the ETL, not from the
+  host or the data size: ten times what one ETL run needs, leaving room
+  for the other queries a long-lived session runs. ``CodeGenerator`` keys
+  each compiled class on (context class loader, source) in a size-bounded
+  Guava cache, which may evict before it is full. A whole-stage class
+  compiles once on the driver and again under the executor tasks' class
+  loader, so it can take two entries. A cold ``run_etl(ri_audit=True)`` +
+  ``write_parquet_store`` run compiles 100 classes; a debug-logged one
+  showed 74 distinct sources, 26 of them compiled twice (25 whole-stage
+  iterators and one projection). At the default size every warm run in a
+  long-lived session recompiled classes it had compiled before, none of
+  them new; at 1,000 a warm run compiles none
+  (``tests/test_codegen_reuse.py`` counts them through
+  ``internals.codegen_compiles``; CHANGES.md records the counts). A cached
+  class stays loaded, so Metaspace grows with the cache: after the
+  110-query headline bench at sf0.1 (``bench.py``, 4-core host) it held
+  210-213 MB against 201-202 MB at the default size, while the run
+  compiled 1,736-1,752 classes instead of 2,889-2,956.
 """
 
 from __future__ import annotations
@@ -107,6 +127,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # static: no Python call site per Column call (design notes)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # static: one ETL run's generated classes stay cached (design notes)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -25,6 +25,7 @@ EXPECTED_CROSSINGS = [
     "cache_manager_is_empty",
     "persistent_rdd_ids",
     "physical_plan_nodes",
+    "codegen_compiles",
 ]
 
 
@@ -69,6 +70,23 @@ def test_probe_fails_by_name_when_sever_missing(spark, monkeypatch):
     assert results["severed_from_checkpoint"] is not None
     assert "internalCreateDataFrame" in results["severed_from_checkpoint"]
     assert results["checkpoint_rdd"] is None
+
+
+def test_probe_fails_by_name_when_codegen_metrics_missing(spark, monkeypatch):
+    """Same for the codegen counters: a Spark bump that drops
+    ``CodegenMetrics`` fails the ``codegen_compiles`` entry alone."""
+
+    def gone(spark):
+        raise AttributeError(
+            "org.apache.spark.metrics.source.CodegenMetrics does not exist in the JVM"
+        )
+
+    monkeypatch.setattr(internals, "codegen_compiles", gone)
+    results = internals.probe(spark)
+    assert "CodegenMetrics" in results["codegen_compiles"]
+    for name in EXPECTED_CROSSINGS:
+        if name != "codegen_compiles":
+            assert results[name] is None, (name, results[name])
 
 
 def test_call_sites_route_through_facade():

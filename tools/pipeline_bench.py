@@ -8,7 +8,9 @@ formats; namespaced diagnoses XML), about ``n_rows`` rows each, then times
 ``noop`` sink: every column of every table is computed, the F3 pass
 included, and nothing is stored. (A ``count()`` would prune the columns
 and skip most of the work.) The rows of each table and the log rows per
-reason are then checked against the generator's expected output.
+reason are then checked against the generator's expected output, and
+the classes Janino compiled during the run and their compile time
+(``internals.codegen_compiles``) are printed next to that check.
 
 Run: python tools/pipeline_bench.py [n_rows] [seed]   (default 500000 1)
 """
@@ -35,18 +37,21 @@ def run(work: str, n: int, seed: int) -> bool:
     print(f"generated {expected['input_rows']} input rows in "
           f"{time.perf_counter() - t0:.1f}s")
 
+    from assignment_etl_spark import internals
     from assignment_etl_spark.caching import release_scoped_caches
     from assignment_etl_spark.pipelines.runner import run_etl
     from assignment_etl_spark.session import get_spark
 
     spark = get_spark("pipeline-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    n0, ns0 = internals.codegen_compiles(spark)
     t0 = time.perf_counter()
     res = run_etl(spark, paths["patients"], paths["encounters"], paths["diagnoses"],
                   ri_audit=True)
     for df in res.tables().values():
         df.write.format("noop").mode("overwrite").save()
     dt = time.perf_counter() - t0
+    n1, ns1 = internals.codegen_compiles(spark)
 
     # the tables are cached now, so the checks rerun none of the work
     rows = {name: df.count() for name, df in res.tables().items()}
@@ -55,7 +60,8 @@ def run(work: str, n: int, seed: int) -> bool:
     ok = rows == expected["clean"] and reasons == expected["reasons"]
     print(f"run_etl (ri_audit) + noop write: {rows} in {dt:.1f}s = "
           f"{expected['input_rows'] / dt / 1e3:.1f}k input rows/s; "
-          f"output check {'passed' if ok else 'FAILED'}")
+          f"output check {'passed' if ok else 'FAILED'}; "
+          f"{n1 - n0} classes compiled in {(ns1 - ns0) / 1e6:.0f} ms")
     return ok
 
 
