@@ -7,9 +7,9 @@ to public bytecode, so py4j can call them — but no compatibility
 contract protects them across Spark versions):
 
 - ``query_execution / analyzed_plan / optimized_plan /
-  executed_plan_string`` — plan-tree access for the PLANAUDIT walkers
-  and the stats-gated codegen unroll (`ext/kmeans._stats_bytes`,
-  `ext/multimodal.repartition_for_decode`).
+  executed_plan_string`` — plan-tree access for the plan audit
+  (tools/plan_audit.py) and the stats-gated codegen unroll
+  (`ext/kmeans._stats_bytes`, `ext/multimodal.repartition_for_decode`).
 - ``plan_size_bytes / plan_leaves`` — Catalyst statistics
   (``stats().sizeInBytes()``, ``collectLeaves()``), file-footer
   metadata only, never a job.
@@ -22,8 +22,11 @@ contract protects them across Spark versions):
   dropping the origin plan's preserved (product-inflatable) statistics
   (`caching.stats_severed_local_checkpoint`; the round-11
   BigInteger-planning pathology).
-- ``physical_plan_nodes / cached_plan`` — physical-plan walks that see
-  through AdaptiveSparkPlan and, on request, into each cache once (the
+- ``physical_plan_nodes / wrapped_plan / cached_plan`` — the one
+  physical-plan walk: through AdaptiveSparkPlan (its final plan after an
+  action, ``isFinalPlan``/``executedPlan``; its input plan before) and
+  each query stage's ``plan``, and on request into each cache once (the
+  plan fingerprints of tools/plan_audit.py and PLANAUDIT.json, the
   pipelines' plan-shape test, tests/test_pipeline_plans.py).
 - ``cache_manager_is_empty / persistent_rdd_ids`` — session-level
   cache/persistence introspection for the scaling tool's cache-cold step
@@ -111,22 +114,38 @@ def cached_plan(jscan):
     return jscan.relation().cacheBuilder().cachedPlan()
 
 
+def wrapped_plan(jnode):
+    """The plan a wrapper node stands for, or None for any other node. An
+    AdaptiveSparkPlanExec stands for its final ``executedPlan()`` once
+    ``isFinalPlan()`` (after an action; exchanges and query stages are only
+    planned there) and for its ``inputPlan()`` before; a ``*QueryStageExec``
+    stands for its ``plan()``."""
+    cls = plan_node_class(jnode)
+    if cls == "AdaptiveSparkPlanExec":
+        return jnode.executedPlan() if jnode.isFinalPlan() else jnode.inputPlan()
+    if cls.endswith("QueryStageExec"):
+        return jnode.plan()
+    return None
+
+
 def physical_plan_nodes(jplan, seen_caches: set[int] | None = None) -> list:
-    """Every node of a physical plan, looking through AdaptiveSparkPlan
-    wrappers (their initial plan). An InMemoryTableScan is a leaf unless
-    ``seen_caches`` is given: then each cache's own plan is walked the
-    first time any scan of it is met (its identity goes into the set), so
-    the nodes of several plans that share caches are listed once."""
+    """Every node of a physical plan, looking through its wrappers
+    (``wrapped_plan``). A ReusedExchange is a leaf. An InMemoryTableScan is
+    a leaf unless ``seen_caches`` is given: then each cache's own plan is
+    walked the first time any scan of it is met (its identity goes into
+    the set), so the nodes of several plans that share caches are listed
+    once."""
     from pyspark import SparkContext
 
     system = SparkContext._jvm.java.lang.System
     out, stack = [], [jplan]
     while stack:
         node = stack.pop()
-        cls = plan_node_class(node)
-        if cls == "AdaptiveSparkPlanExec":
-            stack.append(node.inputPlan())
+        inner = wrapped_plan(node)
+        if inner is not None:
+            stack.append(inner)
             continue
+        cls = plan_node_class(node)
         out.append(node)
         if cls != "InMemoryTableScanExec":
             stack.extend(plan_children(node))
@@ -222,7 +241,7 @@ def probe(spark) -> dict[str, str | None]:
     def p_analyzed_plan():
         node = analyzed_plan(df)
         assert plan_node_class(node), "empty class name"
-        # the PLANAUDIT walkers need children() traversal too
+        # the plan audit's analyzed-plan rules need children() traversal too
         for kid in plan_children(node):
             assert plan_node_class(kid)
 
@@ -291,6 +310,17 @@ def probe(spark) -> dict[str, str | None]:
             assert "RangeExec" in {plan_node_class(n) for n in inner}
             walked = physical_plan_nodes(query_execution(cached).executedPlan(), set())
             assert "RangeExec" in {plan_node_class(n) for n in walked}
+            # after an action: the final plan, through its query stages, a
+            # broadcast of the cache read twice, its plan walked once
+            joined = cached.join(F.broadcast(cached), "id")
+            joined.collect()
+            final = [
+                plan_node_class(n)
+                for n in physical_plan_nodes(query_execution(joined).executedPlan(), set())
+            ]
+            assert final.count("BroadcastExchangeExec") == 1, final
+            assert final.count("InMemoryTableScanExec") == 2, final
+            assert final.count("RangeExec") == 1, final
         finally:
             cached.unpersist(True)
 

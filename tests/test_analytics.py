@@ -28,7 +28,7 @@ def test_value_counts_and_topk(spark):
 
 def test_topk_plans_take_ordered(spark):
     df = spark.range(1000).select((F.col("id") % 7).alias("k"))
-    plan = top_k(df, "k", 3)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan_string(top_k(df, "k", 3))
     assert "TakeOrderedAndProject" in plan  # no global sort for top-k
 
 
@@ -96,7 +96,7 @@ def test_parquet_pushdown(spark, sf_dir):
     """Filters and projections must reach the parquet scan."""
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     q = df.filter(F.col("l_quantity") > 45).select("l_orderkey", "l_quantity")
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan_string(q)
     assert "PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,45.0)" in plan
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
 
@@ -106,7 +106,7 @@ def test_broadcast_join_plan(spark, sf_dir):
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
     q = customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan_string(q)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -115,7 +115,7 @@ def test_partial_aggregation_in_plan(spark, sf_dir):
     """groupBy must plan partial (map-side) + final hash aggregation."""
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     q = df.groupBy("l_returnflag").agg(F.sum("l_quantity"))
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan_string(q)
     assert plan.count("HashAggregate") >= 2  # partial + final
 
 

@@ -4,6 +4,7 @@ the data), portable-rounding path."""
 import pytest
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.ext.similarity import centroids_long, cluster_centroids
 
 
@@ -40,10 +41,7 @@ def test_long_form(emb):
 
 
 def test_plan_has_no_expand_or_generate(emb):
-    plan = (
-        cluster_centroids(emb, dim=3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = internals.executed_plan_string(cluster_centroids(emb, dim=3))
     assert "Expand" not in plan and "Generate" not in plan
 
 

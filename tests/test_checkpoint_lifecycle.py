@@ -187,23 +187,20 @@ def test_stats_severed_checkpoint_contract(spark):
     planning grind; see SCALE.md r11)."""
     from pyspark.sql import functions as F
 
+    from assignment_etl_spark import internals
     from assignment_etl_spark.caching import stats_severed_local_checkpoint
 
     df = spark.range(200).selectExpr("id", "id % 5 as k")
     j = df.join(df.selectExpr("id % 5 as k", "id as id2"), on="k")
     ck = stats_severed_local_checkpoint(j)
     assert ck.count() == j.count()
-    bits = int(
-        ck._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    ).bit_length()
+    bits = internals.plan_size_bytes(internals.optimized_plan(ck)).bit_length()
     assert bits <= 64, bits  # sentinel, not the preserved join product
     # chaining: a second severed checkpoint of a join over the first
     # stays at sentinel width instead of doubling digits
     j2 = ck.join(ck.selectExpr("k as k2", "id as id3"), ck.k == F.col("k2"))
     ck2 = stats_severed_local_checkpoint(j2)
-    bits2 = int(
-        ck2._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    ).bit_length()
+    bits2 = internals.plan_size_bytes(internals.optimized_plan(ck2)).bit_length()
     assert bits2 <= 64, bits2
     assert _persistent_rdd_count(spark) >= 2
     _release_all(spark)

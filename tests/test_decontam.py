@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.ext.decontam import (
     contamination_hits,
     decontaminate,
@@ -58,10 +59,7 @@ def test_hits_and_decontaminate(spark, corpus):
 
 def test_decontaminate_broadcast_plan(spark, corpus):
     bench = corpus.filter(F.col("doc_id") == 1)
-    plan = (
-        decontaminate(corpus, bench, n=4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = internals.executed_plan_string(decontaminate(corpus, bench, n=4))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 

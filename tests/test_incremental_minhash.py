@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
+from assignment_etl_spark import internals  # noqa: E402
 from assignment_etl_spark.ext.dedup import (  # noqa: E402
     build_band_store,
     incremental_minhash_dedup,
@@ -113,7 +114,7 @@ def test_per_batch_cost_store_equijoined_once(spark, corpus, tmp_path):
         eager=False,  # keep the full dataflow visible in the plan
     )
     plan = dropped._sc._jvm.PythonSQLUtils.explainString(
-        dropped._jdf.queryExecution(), "formatted"
+        internals.query_execution(dropped), "formatted"
     )
     locs = [
         ln for ln in plan.splitlines()

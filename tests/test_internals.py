@@ -89,6 +89,35 @@ def test_probe_fails_by_name_when_codegen_metrics_missing(spark, monkeypatch):
             assert results[name] is None, (name, results[name])
 
 
+class _Without:
+    """A JVM plan node whose class has lost one method."""
+
+    def __init__(self, node, method):
+        self._node, self._method = node, method
+
+    def __getattr__(self, name):
+        if name == self._method:
+            raise AttributeError(f"'JavaObject' object has no attribute '{name}'")
+        return getattr(self._node, name)
+
+
+@pytest.mark.parametrize("method", ["isFinalPlan", "executedPlan", "plan"])
+def test_probe_fails_by_name_when_final_plan_walk_missing(spark, monkeypatch, method):
+    """Same for the walk of an executed plan: a Spark bump that drops
+    AdaptiveSparkPlanExec's ``isFinalPlan``/``executedPlan`` or
+    QueryStageExec's ``plan`` fails the ``physical_plan_nodes`` entry
+    alone."""
+    real = internals.wrapped_plan
+    monkeypatch.setattr(
+        internals, "wrapped_plan", lambda node: real(_Without(node, method))
+    )
+    results = internals.probe(spark)
+    assert f"attribute '{method}'" in (results["physical_plan_nodes"] or "")
+    for name in EXPECTED_CROSSINGS:
+        if name != "physical_plan_nodes":
+            assert results[name] is None, (name, results[name])
+
+
 def test_call_sites_route_through_facade():
     """The facade is load-bearing: the production call sites import it
     rather than carrying their own _jdf reach — so the probe's verdict

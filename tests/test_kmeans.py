@@ -3,6 +3,7 @@ determinism across partitionings, empty-cluster survival."""
 
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.ext.kmeans import kmeans
 
 
@@ -121,9 +122,7 @@ def test_stats_unroll_join_not_product_inflated(spark, tmp_path):
         joined = joined.join(
             pq.select("k", F.col("id").alias(f"id{i}")), on="k"
         )
-    root = int(
-        joined._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
+    root = internals.plan_size_bytes(internals.optimized_plan(joined))
     assert root >= KM.UNROLL_MIN_BYTES, (
         f"fixture no longer inflates the root estimate ({root} bytes) — "
         "deepen the join chain"

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.ops.outliers import flag_outliers, group_robust_stats
 
 
@@ -46,7 +47,7 @@ def test_null_value_not_flagged(data):
 
 def test_broadcast_plan(data):
     out = flag_outliers(data, value_col="v", by=["g"])
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = internals.executed_plan_string(out)
     assert "BroadcastHashJoin" in plan
 
 

@@ -3,6 +3,7 @@ orphans are logged but retained — the reference lets them flow silently."""
 
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.ops.quality import orphan_check
 from assignment_etl_spark.pipelines.runner import run_etl
 
@@ -20,7 +21,7 @@ def test_orphan_check_logs_and_plan(spark):
     # p9 is an orphan; the NULL key is an orphan too (no parent matches NULL)
     assert {r.original_value for r in rows} == {"p9", None}
     assert {r.reason for r in rows} == {"orphan_patient_id"}
-    plan = logs._jdf.queryExecution().executedPlan().toString()
+    plan = internals.executed_plan_string(logs)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 

@@ -4,6 +4,7 @@ weighted-bias sanity."""
 import pytest
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.ext.sampling import (
     exact_stratified_sample,
     portable_hash01,
@@ -108,7 +109,7 @@ def test_priority_sample_excludes_nonpositive_weights(spark):
 
 def test_priority_sample_global_plan_is_take_ordered(spark, pop):
     s = priority_sample(pop, 50, weight_col="w", id_col="id")
-    plan = s._jdf.queryExecution().executedPlan().toString()
+    plan = internals.executed_plan_string(s)
     assert "TakeOrderedAndProject" in plan
 
 

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.io.store import (
     compact_parquet,
     read_table,
@@ -65,7 +66,7 @@ def test_partition_pruning(spark, tmp_path):
     write_partitioned(df, path, ["part"])
     q = spark.read.parquet(path).filter(F.col("part") == 2)
     assert q.count() == 250
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = internals.executed_plan_string(q)
     # the partition filter prunes directories at planning time
     assert "PartitionFilters: [isnotnull(part" in plan
 
@@ -95,7 +96,7 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
     try:
         j = orders_b.join(lineitem_b, orders_b.o_orderkey == lineitem_b.l_orderkey)
-        plan = j._jdf.queryExecution().executedPlan().toString()
+        plan = internals.executed_plan_string(j)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan  # co-located: neither side shuffles
         assert j.count() == lineitem_b.count()
@@ -106,7 +107,7 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed):
 def test_bucketed_agg_skips_exchange(spark, bucketed):
     orders_b, _ = bucketed
     q = orders_b.groupBy("o_orderkey").agg(F.sum("o_totalprice"))
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = internals.executed_plan_string(q)
     assert "Exchange" not in plan  # grouping key == bucket key
 
 

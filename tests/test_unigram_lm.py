@@ -9,6 +9,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
+from assignment_etl_spark import internals
 from assignment_etl_spark.ext.unigram_lm import (
     train_unigram_lm,
     viterbi_encode,
@@ -212,7 +213,7 @@ def test_trained_plan_stats_stay_bounded(spark):
     out = viterbi_encode(
         words, vocab, max_piece_len=3, max_word_len=8
     )
-    n = int(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    n = internals.plan_size_bytes(internals.optimized_plan(out))
     assert n.bit_length() < 512, (
         f"plan sizeInBytes is {n.bit_length()} bits — checkpoint stats "
         "compounding is back"

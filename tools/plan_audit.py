@@ -1,32 +1,36 @@
-"""Physical-plan audit over every registered query: the 100 TB smell test,
-mechanized. For each __spark_entry__ query this builds the DataFrame at a
-small SF, EXECUTES it (AQE only settles re-plans in the executed final
-plan; a handful of gates also materialize eagerly at construction time,
-e.g. localCheckpointed iterations), and greps the executed plan for:
+"""Physical-plan audit over every registered query. For each
+__spark_entry__ query this builds the DataFrame at a small SF cache-cold,
+collects it (AQE plans exchanges and codegen stages only in the final plan)
+and takes its fingerprint: counts of the node classes in NODES over the
+executed plan, walked by ``internals.physical_plan_nodes`` with each cache's
+plan counted once, the number of regex expressions (RLike, RegExp*), the
+number of parquet scans with pushed filters, and two analyzed-plan checks:
 
-- hard violations: CartesianProduct (unbounded pair blowup),
-  BatchEvalPython (row-at-a-time Python UDF in the pipeline), and a
-  root sizeInBytes estimate wider than STATS_BITS_MAX bits — the r11
-  checkpoint-stats-compounding class, where chained checkpoints of
-  joins inherit product-inflated estimates until every stats consumer
+- ``gwin``: empty-partition Window nodes over an uncollapsed sf-proportional
+  scan (audit_global_windows), the single-partition corpus funnel;
+- ``sbits``: the bit width of the optimized plan's root sizeInBytes
+  estimate. Past STATS_BITS_MAX bits it is the r11
+  checkpoint-stats-compounding class, where chained checkpoints of joins
+  inherit product-inflated estimates until every stats consumer
   (JoinSelection, InjectRuntimeFilter) grinds ~10^5-digit BigInteger
   products on the driver at planning time (measured: 19 min to plan a
   150-word encode; normal plans stay under ~2k bits, the pathology was
-  ~3×10^5);
-- reported shape: Exchange count (shuffles), WholeStageCodegen spans,
-  Arrow crossings (ArrowEvalPython / MapInPandas /
-  FlatMapGroupsInPandas / FlatMapCoGroupsInPandas),
-  BroadcastHashJoin vs SortMergeJoin mix, BroadcastNestedLoopJoin
-  occurrences (legit only for 1-row broadcast sides, e.g. the LM vocab
-  scalar), and parquet scans with non-empty PushedFilters.
+  ~3x10^5).
+
+Hard violations: a node class in HARD (CartesianProduct, the unbounded pair
+blowup; BatchEvalPython, a row-at-a-time Python UDF), gwin > 0, sbits past
+STATS_BITS_MAX, and explicit broadcast hints over sf-proportional scans
+(audit_broadcast_hints).
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
-Writes PLANAUDIT.md at the repo root when run on the full set; exits 1 on
-any hard violation.
+Writes PLANAUDIT.json at the repo root (one fingerprint per query) when run
+on the full set; exits 1 on any hard violation. tests/test_plan_audit.py
+compares the headline queries' live fingerprints with that file.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -35,8 +39,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from assignment_etl_spark import internals
+from assignment_etl_spark.caching import release_scoped_caches
 
-HARD = ("CartesianProduct", "BatchEvalPython")
+HARD = {"CartesianProduct", "BatchEvalPython"}
 
 # Widest tolerable root sizeInBytes estimate, in BITS. Sentinel-stats
 # leaves (2^63) through a ~20-join tree legitimately reach ~1-2k bits;
@@ -390,35 +395,86 @@ def audit_global_windows(df) -> list[str]:
     return bad
 
 
-SOFT = (
-    "Exchange",
-    "WholeStageCodegen",
+# Node classes the fingerprint counts, keyed by class name less "Exec".
+NODES = (
+    "FileSourceScan",
+    "ShuffleExchange",
+    "BroadcastExchange",
+    "ReusedExchange",
     "BroadcastHashJoin",
     "SortMergeJoin",
     "BroadcastNestedLoopJoin",
+    "CartesianProduct",
     "ArrowEvalPython",
+    "BatchEvalPython",
     "MapInPandas",
     "FlatMapGroupsInPandas",
     "FlatMapCoGroupsInPandas",
+    "InMemoryTableScan",
+    "Generate",
+    "Expand",
+    "Window",
+    "TakeOrderedAndProject",
+    "Sort",
+    "WholeStageCodegen",
 )
 
+OUT = os.path.join(REPO, "PLANAUDIT.json")
+REGENERATE = "python tools/plan_audit.py /root/testdata/sf0.001"
 
-def audit_plan(plan: str) -> dict[str, int]:
-    # an executed AdaptiveSparkPlan prints "== Final Plan ==" followed by
-    # "== Initial Plan ==" — audit only the final one or counts double
-    if "== Final Plan ==" in plan:
-        plan = plan.split("== Initial Plan ==")[0]
-    counts = {k: plan.count(k) for k in HARD + SOFT}
-    # whole-stage codegen shows as "*(N) Operator" stage prefixes in the plan
-    # tree (the literal node name only appears in formatted explain)
-    counts["WholeStageCodegen"] = max(
-        counts["WholeStageCodegen"],
-        len(set(re.findall(r"\*\((\d+)\)", plan))),
-    )
-    scans = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    counts["scans_with_pushdown"] = sum(1 for s in scans if s.strip())
-    counts["scans"] = len(scans)
-    return counts
+
+def _regex_expressions(jnode) -> int:
+    """RLike and RegExp* expressions in the node's own expressions."""
+    exprs = jnode.expressions()
+    n, stack = 0, [exprs.apply(i) for i in range(exprs.length())]
+    while stack:
+        e = stack.pop()
+        cls = internals.plan_node_class(e)
+        n += cls == "RLike" or cls.startswith("RegExp")
+        stack.extend(internals.plan_children(e))
+    return n
+
+
+def plan_fingerprint(df) -> dict[str, int]:
+    """Node-class counts, regex expressions and scans with pushed filters
+    of ``df``'s executed plan (final once an action ran), each cache's plan
+    walked once."""
+    fp = dict.fromkeys(NODES, 0)
+    fp["regex"] = fp["pushdown"] = 0
+    plan = internals.query_execution(df).executedPlan()
+    for node in internals.physical_plan_nodes(plan, set()):
+        cls = internals.plan_node_class(node)
+        if cls.endswith("Exec") and cls[:-4] in fp:
+            fp[cls[:-4]] += 1
+        if cls == "FileSourceScanExec":
+            pushed = node.metadata().get("PushedFilters")
+            fp["pushdown"] += pushed.isDefined() and pushed.get() != "[]"
+        fp["regex"] += _regex_expressions(node)
+    return fp
+
+
+def query_fingerprint(spark, fn, sf_dir) -> tuple[dict[str, int], list[str]]:
+    """Build one registered query cache-cold, collect it and fingerprint its
+    executed plan, with the analyzed-plan rules' count (``gwin``) and the
+    optimized plan's root size estimate in bits (``sbits``). Returns the
+    fingerprint and the query's hard violations."""
+    release_scoped_caches()
+    spark.catalog.clearCache()
+    df = fn(spark, sf_dir)
+    bad = audit_broadcast_hints(df)
+    win_bad = audit_global_windows(df)
+    # collect THIS plan (count() would execute a different, count-aggregated
+    # plan): AQE plans exchanges and codegen stages only in the final plan
+    df.collect()
+    fp = plan_fingerprint(df)
+    fp["gwin"] = len(win_bad)
+    fp["sbits"] = internals.plan_size_bytes(internals.optimized_plan(df)).bit_length()
+    bad += win_bad + [f"{k} x{fp[k]}" for k in sorted(HARD) if fp[k]]
+    if fp["sbits"] > STATS_BITS_MAX:
+        bad.append(
+            f"stats_bits {fp['sbits']} > {STATS_BITS_MAX} (checkpoint stats compounding)"
+        )
+    return fp, bad
 
 
 def main() -> int:
@@ -428,115 +484,35 @@ def main() -> int:
     import __spark_entry__ as entry
     from assignment_etl_spark.session import get_spark
 
-    spark = get_spark("plan_audit", shuffle_partitions=8)
+    # the test suite's session (tests/conftest.py), which the drift test
+    # compares PLANAUDIT.json in
+    spark = get_spark("plan_audit", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
 
-    rows, violations = [], []
-    qs = entry.queries()
-    for name, fn in qs.items():
+    fps, violations = {}, []
+    for name, fn in entry.queries().items():
         if only and name not in only:
             continue
         try:
-            df = fn(spark, sf_dir)
-            hint_bad = audit_broadcast_hints(df)
-            win_bad = audit_global_windows(df)
-            # materialize THIS plan (count() would execute a different,
-            # count-aggregated plan): AQE only inserts WholeStageCodegen
-            # stages and settles re-plans in the executed final plan
-            df.collect()
-            plan = internals.executed_plan_string(df)
+            fp, bad = query_fingerprint(spark, fn, sf_dir)
         except Exception as e:  # noqa: BLE001
-            rows.append((name, None, f"PLAN ERROR {type(e).__name__}: {str(e)[:120]}"))
-            violations.append(name)
+            violations.append(f"{name}: PLAN ERROR {type(e).__name__}: {str(e)[:120]}")
             continue
-        c = audit_plan(plan)
-        c["global_windows"] = len(win_bad)
-        try:
-            c["stats_bits"] = internals.plan_size_bytes(
-                internals.optimized_plan(df)
-            ).bit_length()
-        except Exception:  # noqa: BLE001 — stats probe is advisory
-            c["stats_bits"] = -1
-        if c["stats_bits"] > STATS_BITS_MAX:
-            violations.append(
-                f"{name}: stats_bits {c['stats_bits']} > {STATS_BITS_MAX} "
-                "(checkpoint stats compounding)"
-            )
-        for k in HARD:
-            if c[k]:
-                violations.append(f"{name}: {k} x{c[k]}")
-        for h in hint_bad:
-            violations.append(f"{name}: {h}")
-        for wv in win_bad:
-            violations.append(f"{name}: {wv}")
-        rows.append((name, c, None))
-        print(
-            f"{name}: xchg={c['Exchange']} codegen={c['WholeStageCodegen']} "
-            f"bhj={c['BroadcastHashJoin']} smj={c['SortMergeJoin']} "
-            f"bnlj={c['BroadcastNestedLoopJoin']} "
-            f"arrow={c['ArrowEvalPython'] + c['MapInPandas'] + c['FlatMapGroupsInPandas'] + c['FlatMapCoGroupsInPandas']} "
-            f"pushdown={c['scans_with_pushdown']}/{c['scans']} "
-            f"gwin={c['global_windows']} sbits={c['stats_bits']}"
-            + (
-                " !!HARD!!"
-                if any(c[k] for k in HARD)
-                or win_bad
-                or c["stats_bits"] > STATS_BITS_MAX
-                else ""
-            )
-        )
+        fps[name] = fp
+        violations += [f"{name}: {b}" for b in bad]
+        print(name, json.dumps(fp) + (" !!HARD!!" if bad else ""))
 
     if not only:
-        write_report(rows, violations, sf_dir)
-    print(f"\n{len(rows)} plans audited; hard violations: {violations or 'none'}")
-    return 1 if violations else 0
-
-
-def write_report(rows, violations, sf_dir) -> None:
-    lines = [
-        "# PLANAUDIT — physical-plan audit of every registered query",
-        "",
-        f"Generated by `tools/plan_audit.py {sf_dir}`. Hard violations "
-        "(CartesianProduct, row-at-a-time BatchEvalPython, stats_bits > "
-        f"{STATS_BITS_MAX}): "
-        f"**{violations or 'none'}**.",
-        "",
-        "Columns: shuffles (Exchange), WholeStageCodegen spans, broadcast vs",
-        "sort-merge joins, BroadcastNestedLoopJoin (only sanctioned use is a",
-        "1-row broadcast side, e.g. the LM vocab scalar or decontam's empty",
-        "gram-set degenerate path), Arrow crossings (sanctioned pandas",
-        "batches), parquet scans carrying non-empty PushedFilters, gwin —",
-        "empty-partition Window nodes whose input scans an sf-proportional",
-        "table with no Aggregate/Limit/bounded-filter collapse (the",
-        "single-partition corpus-window funnel; hard violation, must be 0) —",
-        "and sbits, the bit width of the optimized plan's root sizeInBytes",
-        "estimate (the r11 checkpoint-stats-compounding tripwire: chained",
-        "checkpoints of joins compound product-inflated estimates until",
-        "planning itself grinds huge-BigInteger products; hard violation",
-        f"past {STATS_BITS_MAX} bits, healthy plans stay under ~2k).",
-        "",
-        "| query | shuffles | codegen | BHJ | SMJ | BNLJ | arrow | pushdown | gwin | sbits |",
-        "|---|---|---|---|---|---|---|---|---|---|",
-    ]
-    for name, c, err in rows:
-        if err:
-            lines.append(
-                f"| `{name}` | — | — | — | — | — | — | — | — | {err} |"
+        with open(OUT, "w", encoding="utf-8") as f:
+            f.write(
+                '{\n "_protocol": "query -> fingerprint of its executed plan at '
+                f"{os.path.basename(sf_dir)}; regenerate ONLY via: {REGENERATE}\""
             )
-            continue
-        arrow = (
-            c["ArrowEvalPython"] + c["MapInPandas"]
-            + c["FlatMapGroupsInPandas"] + c["FlatMapCoGroupsInPandas"]
-        )
-        lines.append(
-            f"| `{name}` | {c['Exchange']} | {c['WholeStageCodegen']} "
-            f"| {c['BroadcastHashJoin']} | {c['SortMergeJoin']} "
-            f"| {c['BroadcastNestedLoopJoin']} | {arrow} "
-            f"| {c['scans_with_pushdown']}/{c['scans']} "
-            f"| {c['global_windows']} | {c['stats_bits']} |"
-        )
-    with open(os.path.join(REPO, "PLANAUDIT.md"), "w", encoding="utf-8") as f:
-        f.write("\n".join(lines) + "\n")
+            for name in sorted(fps):
+                f.write(f",\n {json.dumps(name)}: {json.dumps(fps[name])}")
+            f.write("\n}\n")
+    print(f"\n{len(fps)} plans audited; hard violations: {violations or 'none'}")
+    return 1 if violations else 0
 
 
 if __name__ == "__main__":
